@@ -247,13 +247,26 @@ def minhash_signatures(
 ) -> DataFrame:
     """Per-doc MinHash signature: array<bigint> of length num_hashes.
 
-    One explode + one groupBy. The md5 base hash is computed ONCE per
-    shingle in the aggregate's child projection; each permutation is the
-    cheap ``(a_i*h + b_i) mod p`` INSIDE its min() — inlining the md5 into
-    all num_hashes columns would both recompute it and push the generated
-    code past janino's 64 KB method limit (whole-stage codegen falls back
-    to the interpreted path)."""
-    sh = shingle_table(df, id_col, text_col, n)
+    One explode + one groupBy (see :func:`signatures_from_shingles`)."""
+    return signatures_from_shingles(
+        shingle_table(df, id_col, text_col, n), id_col, num_hashes=num_hashes
+    )
+
+
+def signatures_from_shingles(
+    sh: DataFrame, id_col: str, *, num_hashes: int = 32
+) -> DataFrame:
+    """Sketch an (id, shingle) frame into (id, signature) — the hashing
+    half of :func:`minhash_signatures`, split out so a caller holding
+    shingles already (the streaming screen's pinned shingle sets) sketches
+    without re-tokenizing.
+
+    The md5 base hash is computed ONCE per shingle in the aggregate's
+    child projection; each permutation is the cheap ``(a_i*h + b_i) mod
+    p`` INSIDE its min() — inlining the md5 into all num_hashes columns
+    would both recompute it and push the generated code past janino's
+    64 KB method limit (whole-stage codegen falls back to the interpreted
+    path)."""
     hashed = sh.select(
         id_col, (md5_bigint(F.col("shingle")) % F.lit(_MERSENNE31)).alias("h31")
     )
@@ -313,6 +326,103 @@ def minhash_band_index(
     return bands_from_signatures(sig, id_col, num_hashes=num_hashes, bands=bands)
 
 
+def band_pairs(banded: DataFrame, id_col: str) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of an (id, band_idx, band_hash)
+    frame: two docs collide when any band of their signatures is
+    identical — the banding half of :func:`minhash_lsh_pairs`, split out
+    so stored or pinned band rows are joined without re-sketching. The
+    join groups by (band_idx, band_hash): no all-pairs stage anywhere,
+    which is the whole point at 100 TB."""
+    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
+    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
+    return (
+        a.join(b, ["band_idx", "band_hash"])
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def probe_band_index(
+    new_bands: DataFrame, corpus_index: DataFrame, id_col: str
+) -> DataFrame:
+    """Candidate (new_id, corpus_id) pairs: the new docs' band rows
+    BROADCAST against the corpus band index, so the probe is a map-side
+    hash-join over the index scan with no corpus shuffle — the banding
+    half of :func:`screen_against_corpus`. Both inputs are (id, band_idx,
+    band_hash) frames."""
+    new = new_bands.select(F.col(id_col).alias("new_id"), "band_idx", "band_hash")
+    corpus = corpus_index.select(
+        F.col(id_col).alias("corpus_id"), "band_idx", "band_hash"
+    )
+    return (
+        corpus.join(F.broadcast(new), ["band_idx", "band_hash"])
+        .select("new_id", "corpus_id")
+        .distinct()
+    )
+
+
+def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
+    """(id, s): each doc's distinct word n-gram shingles as one array —
+    the per-doc form of :func:`shingle_table`, intersected pairwise by
+    :func:`jaccard_verify`."""
+    return df.select(
+        F.col(id_col), F.array_distinct(word_shingles(text_col, n)).alias("s")
+    )
+
+
+def candidate_sets(
+    docs: DataFrame,
+    ids: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    *,
+    spread: bool = True,
+) -> DataFrame:
+    """Shingle sets of only the docs whose id is in ``ids`` (a small
+    candidate-id frame, broadcast as a semi-join filter), so verification
+    re-shingles candidate docs, never the corpus. ``spread`` first
+    round-robins the kept docs to defaultParallelism partitions
+    (:func:`ensure_min_partitions`); a caller that knows the candidates
+    are few passes False and skips that call's partition-count probe.
+
+    NO size(s) > 0 guard here: a doc with zero shingles has no signature
+    and can never be a candidate, so the predicate is redundant — and
+    worse, Catalyst pushes it below the semi-join, evaluating the entire
+    shingle pipeline against every corpus doc (the exact cost the
+    semi-join exists to avoid)."""
+    keep = docs.join(F.broadcast(ids), id_col, "left_semi")
+    if spread:
+        keep = ensure_min_partitions(keep)
+    return shingle_sets(keep, id_col, text_col, n)
+
+
+def jaccard_verify(
+    cands: DataFrame,
+    sets_a: DataFrame,
+    sets_b: DataFrame,
+    id_col: str,
+    a: str = "id_a",
+    b: str = "id_b",
+) -> DataFrame:
+    """Exact Jaccard (rounded to 6 places) of each candidate pair (a, b),
+    from the two sides' (id, s) shingle sets — the one verify step of the
+    MinHash family: per-pair array_intersect, so only |cands| pairs pay
+    for it, never every overlapping pair of the corpus. NO threshold
+    filter; callers filter ``jaccard >= t``."""
+    sa = sets_a.select(F.col(id_col).alias(a), F.col("s").alias(f"s_{a}"))
+    sb = sets_b.select(F.col(id_col).alias(b), F.col("s").alias(f"s_{b}"))
+    inter = F.size(F.array_intersect(F.col(f"s_{a}"), F.col(f"s_{b}")))
+    jac = F.round(inter / (F.size(f"s_{a}") + F.size(f"s_{b}") - inter), 6)
+    return (
+        cands.join(sa, a)
+        .join(sb, b)
+        .withColumn("jaccard", jac)
+        .select(a, b, "jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -326,22 +436,14 @@ def minhash_lsh_pairs(
     """LSH candidate pairs via banding, optionally verified by exact Jaccard.
 
     rows = num_hashes/bands per band; two docs collide when any band of
-    their signatures is identical. The banding join groups by (band_idx,
-    band_hash) — no all-pairs stage anywhere, which is the whole point at
-    100 TB. Returns (id_a, id_b[, jaccard])."""
+    their signatures is identical (:func:`band_pairs`). Returns
+    (id_a, id_b[, jaccard])."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     banded = minhash_band_index(
         df, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
     )
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-    cands = (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    cands = band_pairs(banded, id_col)
     if verify_threshold is None:
         return cands
     return verify_candidate_pairs(df, cands, id_col, text_col, n=n).where(
@@ -363,51 +465,26 @@ def verify_candidate_pairs(
     callers filter ``jaccard >= t`` (the predicate pushes to a store
     scan).
 
-    Per-pair array_intersect over the distinct shingle sets. The exact
-    shingle self-join (ngram_jaccard_pairs) would recompute Jaccard for
-    EVERY overlapping pair in the corpus; after LSH pruning only |cands|
-    pairs need it, which is the entire point of banding at scale.
-
     The candidate set is MATERIALIZED LAZILY (localCheckpoint(eager=False)
     — it is tiny after banding) and its id set broadcast as a semi-join
-    filter on the doc table, so re-shingling touches ONLY candidate docs.
-    cands is referenced twice (broadcast-id side + pair-join probe side);
-    the checkpoint computes banding once and — critically — truncates the
-    LOGICAL plan immediately: the banding subtree (32 signature exprs +
-    band structs) otherwise re-enters every downstream DataFrame op and
-    each one pays multi-second re-analysis (measured 6.7 s of pure plan
-    build at sf0.1). eager=False defers the actual job to the first
-    action. The verify joins are then small-table joins instead of two
-    full-corpus shuffles of array<string> payloads — the difference
-    between sf0.1 and 100 TB survivability."""
+    filter on the doc table, so re-shingling touches ONLY candidate docs
+    (:func:`candidate_sets`). cands is referenced twice (broadcast-id
+    side + pair-join probe side); the checkpoint computes banding once
+    and — critically — truncates the LOGICAL plan immediately: the
+    banding subtree (32 signature exprs + band structs) otherwise
+    re-enters every downstream DataFrame op and each one pays multi-second
+    re-analysis (measured 6.7 s of pure plan build at sf0.1). eager=False
+    defers the actual job to the first action. The verify joins are then
+    small-table joins instead of two full-corpus shuffles of array<string>
+    payloads — the difference between sf0.1 and 100 TB survivability."""
     cands = cands.transform(pin)
     cand_ids = (
         cands.select(F.col("id_a").alias(id_col))
         .union(cands.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    # NO size(s) > 0 guard here: a doc with zero shingles has no signature
-    # and can never be a candidate, so the predicate is redundant — and
-    # worse, Catalyst pushes it below the semi-join, evaluating the entire
-    # shingle pipeline against every corpus doc (the exact cost the
-    # semi-join exists to avoid).
-    sets_ = ensure_min_partitions(cand_docs).select(
-        F.col(id_col),
-        F.array_distinct(word_shingles(text_col, n)).alias("s"),
-    )
-    sa = sets_.select(F.col(id_col).alias("id_a"), F.col("s").alias("s_a"))
-    sb = sets_.select(F.col(id_col).alias("id_b"), F.col("s").alias("s_b"))
-    inter = F.size(F.array_intersect(F.col("s_a"), F.col("s_b")))
-    jac = F.round(
-        inter / (F.size("s_a") + F.size("s_b") - inter), 6
-    )
-    return (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", jac)
-        .select("id_a", "id_b", "jaccard")
-    )
+    sets_ = candidate_sets(df, cand_ids, id_col, text_col, n)
+    return jaccard_verify(cands, sets_, sets_, id_col)
 
 
 def screen_against_corpus(
@@ -432,31 +509,21 @@ def screen_against_corpus(
     INDEX (pass ``corpus_index`` from ``minhash_band_index``, written
     partitioned by band_idx at snapshot time; computed on the fly when
     omitted, e.g. in oracle twins), and the batch's bands — thousands of
-    rows, not billions — are BROADCAST against it, so the probe is a
-    map-side hash-join over the index scan: no corpus shuffle at all.
-    Verification then re-shingles only the (batch x matched-corpus)
-    candidate docs via broadcast semi-joins, exactly the
-    minhash_lsh_pairs candidate-only discipline.
+    rows, not billions — are BROADCAST against it
+    (:func:`probe_band_index`). Verification then re-shingles only the
+    (batch x matched-corpus) candidate docs via broadcast semi-joins,
+    exactly the minhash_lsh_pairs candidate-only discipline.
 
     Identity collisions are the caller's concern: ids must be unique
     across both frames (output pairs are (new, corpus), not ordered)."""
     new_bands = minhash_band_index(
         new_docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
-    ).select(
-        F.col(id_col).alias("new_id"), "band_idx", "band_hash"
     )
     if corpus_index is None:
         corpus_index = minhash_band_index(
             corpus_docs, id_col, text_col, n=n, num_hashes=num_hashes, bands=bands
         )
-    corpus_bands = corpus_index.select(
-        F.col(id_col).alias("corpus_id"), "band_idx", "band_hash"
-    )
-    cands = (
-        corpus_bands.join(F.broadcast(new_bands), ["band_idx", "band_hash"])
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
+    cands = probe_band_index(new_bands, corpus_index, id_col)
     if verify_threshold is None:
         return cands
     # lazy checkpoint for the same two reasons as minhash_lsh_pairs:
@@ -464,26 +531,18 @@ def screen_against_corpus(
     # stops the banding subtree re-entering every downstream op
     cands = cands.transform(pin)
 
-    def shingle_sets(docs: DataFrame, ids: DataFrame, out_id: str) -> DataFrame:
-        keep = docs.join(F.broadcast(ids), id_col, "left_semi")
-        return ensure_min_partitions(keep).select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(word_shingles(text_col, n)).alias(f"s_{out_id}"),
-        )
+    def side_sets(docs: DataFrame, side: str) -> DataFrame:
+        ids = cands.select(F.col(side).alias(id_col))
+        return candidate_sets(docs, ids, id_col, text_col, n)
 
-    sa = shingle_sets(new_docs, cands.select(F.col("new_id").alias(id_col)), "new_id")
-    sb = shingle_sets(
-        corpus_docs, cands.select(F.col("corpus_id").alias(id_col)), "corpus_id"
-    )
-    inter = F.size(F.array_intersect(F.col("s_new_id"), F.col("s_corpus_id")))
-    jac = F.round(inter / (F.size("s_new_id") + F.size("s_corpus_id") - inter), 6)
-    return (
-        cands.join(sa, "new_id")
-        .join(sb, "corpus_id")
-        .withColumn("jaccard", jac)
-        .where(F.col("jaccard") >= verify_threshold)
-        .select("new_id", "corpus_id", "jaccard")
-    )
+    return jaccard_verify(
+        cands,
+        side_sets(new_docs, "new_id"),
+        side_sets(corpus_docs, "corpus_id"),
+        id_col,
+        "new_id",
+        "corpus_id",
+    ).where(F.col("jaccard") >= verify_threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 32) -> DataFrame:
@@ -1167,16 +1226,8 @@ def build_minhash_store(
     banded = bands_from_signatures(
         sig, id_col, num_hashes=num_hashes, bands=bands
     )
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-    cands = (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
     verify_candidate_pairs(
-        docs, cands, id_col, text_col, n=n
+        docs, band_pairs(banded, id_col), id_col, text_col, n=n
     ).write.mode("overwrite").parquet(base + "/cands")
 
 

@@ -435,6 +435,20 @@ DEFAULT_QUALITY_WEIGHTS: dict[str, float] = {
 }
 
 
+def gopher_defaults() -> list:
+    """The default thresholds of :func:`gopher_quality_filter`, in
+    signature order — read from the signature itself, so the quality
+    store's params (``ensure_quality_store``) can never drift from the
+    rule set they describe."""
+    import inspect
+
+    return [
+        p.default
+        for p in inspect.signature(gopher_quality_filter).parameters.values()
+        if p.kind is inspect.Parameter.KEYWORD_ONLY
+    ]
+
+
 def quality_model_score(
     df: DataFrame,
     text_col: str = "text",
@@ -1243,7 +1257,7 @@ def ensure_quality_store(
         # gopher verdict at the operator's default thresholds — part of
         # the contract so a default change rebuilds instead of serving
         # verdicts from an older rule set
-        "gopher_defaults": [30, 10000, 3.0, 10.0, 0.03, 0.6, "en"],
+        "gopher_defaults": gopher_defaults(),
         "schema": 1,
         "data": dataset_digest(df),
     }

@@ -16901,102 +16901,6 @@ _DRIVER_FRONT = [
     "docs_quality_calibration",
 ]
 
-_DRIVER_FRONT_R12 = [
-    # r12 window, kept for the ledger (COVERAGE.md 'Round-12 rotation';
-    # r11 verdict items 1-3: front every query whose CODE OR ORACLE
-    # changed after its newest driver row, then the SURVEY-2 rotation
-    # block, then oldest-first re-proofs).
-    # --- (a) r11 late-bug-hunt changed-code re-proofs (verdict item 1;
-    #         commit b7c4165 landed after the r11 window ran) ---
-    "docs_weighted_sample",  # oracle changed in lockstep — highest priority
-    "docs_mixture_epoch_plan",
-    "docs_curriculum",
-    "docs_pack_token_budget",
-    "docs_length_batching",
-    "corpus_pipeline_e2e",
-    "customer_scd2_cdc_deletes",
-    "scd2_apply_incremental",
-    "scd2_customer_priority",
-    "dedup_screen_new_batch",
-    "docs_mixture_sample",
-    # --- (b) r12 MinHash-family-store rewires (verdict item 3): the six
-    #         queries now served by ensure_minhash_store ---
-    "dedup_minhash_lsh",
-    "dedup_minhash_recall",
-    "dedup_lsh_recall_by_bin",
-    "dedup_minhash_estimator_error",
-    "dedup_agreement_ari",
-    "dedup_clusters_lsh",
-    # --- (c) SURVEY-2 rotation block (verdict item 2): no reference-
-    #         surface operator row older than ~4 rounds ---
-    "op_prune_values",
-    "op_flatten_struct",
-    "op_convert_types",
-    "op_select_with_extras",
-    "op_normalize_date_fields",
-    "op_jsonify",
-    "op_clean_hash_skip_rules",
-    "op_redact_pii",
-    "date_spine_days",
-    "events_relative_month_frame",
-    # --- (d) every store query whose LAYOUT changed this round (the
-    #         delta-partitioned crash-safe postings/IVFADC upgrade) plus
-    #         the histogram-store representative — all through the new
-    #         store_root() path (verdict item 4); changed code outranks
-    #         merely-stale rows for window slots ---
-    "docs_bm25_serve",
-    "docs_bm25_serve_incremental",
-    "docs_bm25_serve_batch",
-    "docs_hybrid_serve",
-    "docs_retrieval_pipeline_serve",
-    "sim_ivfadc_serve",
-    "sim_ivfadc_serve_incremental",
-    "sim_ivfadc_serve_batch",
-    "sim_ivfadc_recall",
-    "orders_price_quantile_store",
-    # --- (e) oldest-row re-proofs: the whole r5 pool (hll_weekly_users
-    #         excluded by design: rows-only), then r6 oldest-first ---
-    "top_customers_per_segment",
-    "events_monthly",
-    "events_weekly_buckets",
-    # changed-code displacements (late r12, fourth hunt pass): clean_dict
-    # reference-parity fixes (array-of-strings truncation, EMPTY-mode
-    # truncation of kept strings, empty-container guard) and prune_data
-    # parity fixes (map-entry key removal, map-value recursion, Python
-    # bool/int cross-equality in value removal) — the remaining clean-
-    # and prune-family consumers front over the last three oldest-row
-    # slots (docs_take_n_per_lang + docs_train_eval_split +
-    # orders_monthly_price_rank roll to r13; op_clean_hash_skip_rules
-    # and op_prune_values already sit in the SURVEY-2 block)
-    "op_clean_replace_truncate",
-    "op_clean_fingerprint",
-    "op_prune_keys_depth",
-    # flatten_struct whitelist/blacklist now matches bare field names at
-    # any level (reference :1497-1501) — its second consumer fronts too
-    # (docs_stratified_sample rolls to r13)
-    "op_flatten_depth_limit",
-    # normalize_date_fields gained the container-typed-match guard
-    # (lenient rename-without-convert; strict raises) — its recursive
-    # consumer fronts (events_backfill_chunks rolls to r13)
-    "op_normalize_dates_recursive",
-    # changed-code displacements (late r12): ensure_bucketed_table now
-    # carries the source-dataset digest, and the JPEG marker walk
-    # learned fill-byte skipping — their consumers front over the last
-    # two oldest-row slots (docs_source_report + audit_fk_orphans roll
-    # to r13)
-    "multimodal_header_parse",
-    "orders_bucketed_join_stats",
-    # changed-code displacements (late r12, second hunt pass): asof_join
-    # gained NULL-time guards and interval_overlap_join moved from
-    # post-join distinct to first-common-bucket dedup — their consumers
-    # front over the last three oldest-row slots
-    # (docs_contamination_coverage / docs_contamination_bloom /
-    # docs_gopher_filter roll to r13)
-    "asof_purchase_attribution",
-    "asof_attribution_tolerance",
-    "orders_week_overlap",
-]
-
 
 def _rotate_driver_window() -> None:
     global QUERIES, ORACLES

@@ -3,15 +3,22 @@ micro-batches of documents are deduped within the batch, screened
 against the persisted band index, and appended — the continuous-ingest
 twin of operators/dedup.py:screen_against_corpus.
 
-Fixture design: duplicate docs are EXACT text copies (Jaccard 1.0) and
-distinct docs share no vocabulary (Jaccard 0.0), so greedy-sequential
-and global keep-first agree and the expected accepted set is exact."""
+Fixture design: in ``BATCHES`` duplicate docs are EXACT text copies
+(Jaccard 1.0) and distinct docs share no vocabulary (Jaccard 0.0), so
+greedy-sequential and global keep-first agree and the expected accepted
+set is exact. ``NEAR_BATCHES`` adds real near-dups (Jaccard in
+[0.7, 1)) and pairs just below the threshold (0.692), within a batch and
+across batches, so a verify step that loses the threshold fails."""
 
 from __future__ import annotations
+
+import random
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from etlutil_spark.operators.dedup import minhash_band_index, minhash_lsh_pairs
 from etlutil_spark.streaming.dedup_screen import (
     dedup_screen_batch,
     read_corpus,
@@ -40,6 +47,61 @@ def _batch_df(spark, rows):
     )
 
 
+def _words(prefix, k):
+    return [f"{prefix}{i}" for i in range(k)]
+
+
+# 20 distinct tokens each -> 18 word 3-shingles; appending m tokens gives
+# Jaccard 18 / (18 + m) against the base text
+_A, _B, _C, _D, _E = (_words(c, 20) for c in "abcde")
+NEAR_TEXT = {
+    1: _A,
+    2: _A + ["x0"],                       # 0.947 vs 1: intra-batch near-dup
+    3: _B,
+    5: _C,
+    6: _words("p", 8) + _C,               # 0.692 vs 5: intra, kept
+    7: _A + _words("y", 7),               # 0.720 vs 1: cross-batch near-dup
+    8: _B[:10] + ["z0"] + _B[11:],        # 0.714 vs 3: cross-batch near-dup
+    9: _D,
+    10: _C + _words("q", 8),              # 0.692 vs 5: cross-batch, kept
+    11: _D[:19] + ["w0"],                 # 0.895 vs 9: cross-batch near-dup
+    12: _E,
+}
+NEAR_BATCHES = [[1, 2, 3, 5, 6], [7, 8, 9, 10], [11, 12]]
+NEAR_ACCEPTED = {1, 3, 5, 6, 9, 10, 12}
+
+
+def _near_df(spark, ids):
+    return spark.createDataFrame(
+        [(i, " ".join(NEAR_TEXT[i])) for i in ids], "doc_id bigint, text string"
+    )
+
+
+def _seeded_batches(seed, n_batches=5, per_batch=12):
+    """Random docs over a 120-word vocabulary; about a quarter of them
+    are edits (1-3 tokens appended or replaced) of an earlier doc, from
+    the same batch or a previous one."""
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(120)]
+    texts, batches = [], []
+    for b in range(n_batches):
+        rows = []
+        for _ in range(per_batch):
+            if texts and rng.random() < 0.25:
+                toks = list(rng.choice(texts))
+                for _ in range(rng.randint(1, 3)):
+                    if rng.random() < 0.5:
+                        toks.append(rng.choice(vocab))
+                    else:
+                        toks[rng.randrange(len(toks))] = rng.choice(vocab)
+            else:
+                toks = rng.choices(vocab, k=rng.randint(15, 40))
+            texts.append(toks)
+            rows.append((len(texts), " ".join(toks)))
+        batches.append(rows)
+    return batches
+
+
 class TestDedupScreenStream:
     def test_stream_accepts_exactly_the_non_dups(self, spark, tmp_path):
         src = str(tmp_path / "incoming")
@@ -63,8 +125,6 @@ class TestDedupScreenStream:
         assert {r["doc_id"] for r in idx} == EXPECTED_ACCEPTED
         assert all(r["count"] == 8 for r in idx)
         # the screen invariant: no verified near-dup PAIR survives
-        from etlutil_spark.operators.dedup import minhash_lsh_pairs
-
         assert (
             minhash_lsh_pairs(
                 docs, "doc_id", "text", verify_threshold=0.7
@@ -167,8 +227,6 @@ class TestDedupScreenStream:
         replay's corpus read on the missing index path.)"""
         import os
 
-        from etlutil_spark.operators.dedup import minhash_band_index
-
         corpus = str(tmp_path / "corpus")
         b0 = _batch_df(spark, BATCHES[0])
         # simulate the crash: only the index write of batch 0 landed
@@ -181,3 +239,75 @@ class TestDedupScreenStream:
         dedup_screen_batch(corpus)(b0, 0)
         docs, _ = read_corpus(spark, corpus)
         assert {r["doc_id"] for r in docs.collect()} == {1, 3}
+
+
+class TestNearDupScreen:
+    def test_fixture_pairs_are_lsh_candidates(self, spark):
+        """The near-dup fixture means what it says: every pair below is a
+        banding candidate, with the stated exact Jaccard, so the sink's
+        verify step (not LSH recall) decides each of them."""
+        pairs = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in minhash_lsh_pairs(
+                _near_df(spark, sorted(NEAR_TEXT)), "doc_id", "text",
+                verify_threshold=0.0,
+            ).collect()
+        }
+        for near in [(1, 2), (1, 7), (3, 8), (9, 11)]:
+            assert 0.7 <= pairs[near] < 1.0, near
+        for below in [(5, 6), (5, 10)]:
+            assert 0.65 < pairs[below] < 0.7, below
+
+    def test_near_dups_dropped_below_threshold_kept(self, spark, tmp_path):
+        corpus = str(tmp_path / "corpus")
+        fb = dedup_screen_batch(corpus, verify_threshold=0.7)
+        for b, ids in enumerate(NEAR_BATCHES):
+            fb(_near_df(spark, ids), b)
+        docs, index = read_corpus(spark, corpus)
+        assert {r["doc_id"] for r in docs.collect()} == NEAR_ACCEPTED
+        assert index.select("doc_id").distinct().count() == len(NEAR_ACCEPTED)
+
+    def test_corpus_equals_batch_operators_on_seeded_input(self, spark, tmp_path):
+        """The sink's stored corpus is what the batch operators compute:
+        its index rows equal minhash_band_index over the accepted docs,
+        row for row, and minhash_lsh_pairs finds no verified pair in it."""
+        corpus = str(tmp_path / "corpus")
+        fb = dedup_screen_batch(corpus)
+        batches = _seeded_batches(seed=20)
+        text = {}
+        for b, rows in enumerate(batches):
+            text.update(rows)
+            fb(spark.createDataFrame(rows, "doc_id bigint, text string"), b)
+        docs, index = read_corpus(spark, corpus)
+        accepted = {r["doc_id"]: r["text"] for r in docs.collect()}
+        assert docs.count() == len(accepted)  # ids unique
+        assert 0 < len(accepted) < len(text)  # the screen dropped something
+        assert all(text[i] == t for i, t in accepted.items())
+        cols = ["doc_id", "band_idx", "band_hash"]
+        stored = sorted(tuple(r) for r in index.select(*cols).collect())
+        expected = sorted(
+            tuple(r)
+            for r in minhash_band_index(docs, "doc_id", "text").select(*cols).collect()
+        )
+        assert stored == expected
+        assert minhash_lsh_pairs(docs, "doc_id", "text", verify_threshold=0.7).count() == 0
+
+    def test_warm_batch_job_budget(self, spark, tmp_path):
+        """Each batch is sketched once and no step runs an unmaterialized
+        plan eagerly at build time: a second batch screened against a
+        stored corpus runs at most 20 Spark jobs (19 on local[4]; the
+        three-sketch sink ran 41)."""
+        corpus = str(tmp_path / "corpus")
+        fb = dedup_screen_batch(corpus)
+        fb(_near_df(spark, NEAR_BATCHES[0]), 0)
+        batch = _near_df(spark, NEAR_BATCHES[1])
+        sc = spark.sparkContext
+        group = f"dedup-screen-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "dedup screen job budget")
+        try:
+            fb(batch, 1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= 20, f"{len(jobs)} jobs for one warm batch"

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from etlutil_spark.operators.text_analysis import (
     ensure_quality_store,
+    gopher_defaults,
     gopher_quality_filter,
     quality_model_score,
     read_quality_scores,
@@ -29,6 +30,15 @@ def _docs(spark, tmp_path):
 
 
 class TestQualityStore:
+    def test_gopher_defaults_match_stored_params(self):
+        """The store's ``gopher_defaults`` param is read from the filter's
+        signature; it must equal the literal list that stores written
+        before it was derived carry, or every such store would rebuild."""
+        want = [30, 10000, 3.0, 10.0, 0.03, 0.6, "en"]
+        got = gopher_defaults()
+        assert got == want
+        assert [type(v) for v in got] == [type(v) for v in want]
+
     def test_store_equals_live(self, spark, tmp_path):
         d = _docs(spark, tmp_path)
         path = str(tmp_path / "qstore")
