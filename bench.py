@@ -16,7 +16,12 @@ import os
 import re
 import time
 
+from etlutil_spark.operators.store import FAMILIES
 from etlutil_spark.session import get_spark
+
+# every registered store family's directory prefix under store_root():
+# main() clears them so the first run is cold
+_STORE_PREFIXES = tuple(f.prefix for f in FAMILIES.values())
 
 # headline set: the queries that exercise scan/filter/agg, joins, window,
 # date buckets — the shapes that dominate at 100 TB — plus the
@@ -316,28 +321,17 @@ def main() -> None:
 
     from etlutil_spark import queries as Q
 
-    # Persistent ensure_* stores (cluster map, MinHash family, postings,
-    # IVF/IVFADC, histogram) make repeat runs WARM reads: without a reset,
-    # run 1's store builds land in whatever state the previous bench left,
-    # and "value" silently measures an undeclared mix. Clear the store
-    # dirs up front so run 1 is reproducibly COLD (builds included) and
-    # runs 2+ are warm; the artifact publishes both ("runs"[0] vs the
-    # median) plus this policy, so cold cost is never hidden. The bucketed
-    # warehouse dirs are NOT cleared (the metastore still references
-    # them; their queries self-heal staleness).
+    # Persistent ensure_* stores make repeat runs WARM reads: without a
+    # reset, run 1's store builds land in whatever state the previous
+    # bench left, and "value" silently measures an undeclared mix. Clear
+    # every registered store family's dirs up front so run 1 is
+    # reproducibly COLD (builds included) and runs 2+ are warm; the
+    # artifact publishes both ("runs"[0] vs the median) plus this policy,
+    # so cold cost is never hidden.
     import shutil
 
     from etlutil_spark.operators.util import store_root
 
-    _STORE_PREFIXES = (
-        "etlutil_spark_clstore_",
-        "etlutil_spark_mhstore_",
-        "etlutil_spark_postings",
-        "etlutil_spark_ivf",
-        "etlutil_spark_ivfadc",
-        "etlutil_spark_ivfserve",
-        "etlutil_spark_hist_",
-    )
     root = store_root(spark)
     for entry in sorted(os.listdir(root)) if os.path.isdir(root) else []:
         if entry.startswith(_STORE_PREFIXES):

@@ -41,11 +41,12 @@ def _c(col: Column | str) -> Column:
 
 def _t(col: Column | str, pre_tokens: Column | str | None) -> Column:
     """Token source: the pre-tokenized array column when given, else
-    tokenize inline. Passing ``pre_tokens`` (computed once per row via
-    ``withColumn``) keeps wide profiling projections from inflating the
-    generated code with one tokenizer copy per statistic — runtime CSE
-    already deduplicates the work, but codegen size (and janino compile
-    time) scales with the expression TREE, not the work."""
+    tokenize inline. Pass ``pre_tokens`` (computed once per row in a child
+    projection) whenever the tokens are read more than once: CSE shares a
+    repeated tokenizer among a projection's top-level expressions, but not
+    inside higher-order-function lambdas (:func:`word_shingles` re-reads
+    the tokens at every n-gram position), and codegen size — janino compile
+    time — scales with the expression TREE either way."""
     return _c(pre_tokens) if pre_tokens is not None else tokens(col)
 
 

@@ -37,6 +37,13 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame
+from etlutil_spark.operators.store import (
+    StoreStatus,
+    apply_delta,
+    ensure_store,
+    open_store,
+    read_table,
+)
 from etlutil_spark.operators.util import pin
 from pyspark.sql import functions as F
 
@@ -664,6 +671,39 @@ def _ivfadc_query_tables(
     return tables
 
 
+def _residuals(q: DataFrame, id_col: str, centroids: list[list[int]]) -> DataFrame:
+    """(id, cell, _qv residual) of a quantized corpus against a trained
+    coarse quantizer — the write-time integer argmin."""
+    cell = _best_cluster(centroids)["c"]
+    rv = F.zip_with(
+        "_qv",
+        F.element_at(bigint_array_lit(centroids), (cell + 1).cast("int")),
+        lambda a, b: a - b,
+    )
+    return q.select(F.col(id_col), cell.cast("int").alias("cell"), rv.alias("_qv"))
+
+
+def _write_codes(
+    enc: DataFrame, id_col: str, codebooks, dsub: int, k: int, out: str
+) -> None:
+    """Encode residuals to m PQ codes and write them cell-partitioned.
+    Repartitioning by cell first gives each cell dir one well-sized file
+    per shuffle partition (the build_ivf_store writer-explosion guard)."""
+    codes = F.array(
+        *[
+            _best_cluster(cb, F.slice("_qv", s * dsub + 1, dsub))["c"].cast("int")
+            for s, cb in enumerate(codebooks)
+        ]
+    )
+    (
+        enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
+        .repartition(k, "cell")
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(out)
+    )
+
+
 def ensure_ivfadc_index(
     spark,
     df: DataFrame,
@@ -677,104 +717,35 @@ def ensure_ivfadc_index(
     ksub: int = 16,
     pq_iters: int = 2,
     scale: int = DEFAULT_SCALE,
-) -> str:
+) -> StoreStatus:
     """Build-ONCE IVFADC index store — the production half the
     ivfadc_topk docstring promises ("in a real store the codes are
     precomputed at write time"): train the coarse quantizer and the
     residual codebooks, encode every vector to (id, cell, m codes),
-    and persist the codes CELL-PARTITIONED (hive dirs) with the model
-    (params + centroids + codebooks) in an ``_ivfadc_model.json``
-    sidecar. Every later call with the same params is metadata-only
-    (reads the sidecar, touches no data); a param mismatch or partial
-    write rebuilds — the ensure_bucketed_table contract (r9 advice)
-    applied to a vector index. Returns 'reused' or 'written'.
-
-    The write repartitions by cell before partitionBy so each cell dir
-    gets one well-sized file per shuffle partition (the build_ivf_store
-    writer-explosion guard); at 1e9+ vectors raise the partition count
-    to a multiple of k so hot cells split across healthy files."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/delta=base/_SUCCESS")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    from etlutil_spark.operators.util import dataset_digest
-
+    and persist the codes CELL-PARTITIONED under ``delta=base`` with the
+    model (centroids + codebooks) in the store's sidecar. Every later
+    call with the same params is metadata-only; the lifecycle is the
+    shared store contract (:func:`etlutil_spark.operators.store.ensure_store`).
+    At 1e9+ vectors raise the write's partition count to a multiple of k
+    so hot cells split across healthy files."""
     params = {
         "id_col": id_col, "vec_col": vec_col, "k": int(k),
         "iters": int(iters), "m": int(m), "ksub": int(ksub),
         "pq_iters": int(pq_iters), "scale": int(scale),
-        # delta-partitioned layout (codes under delta=base/cell=*, each
-        # increment under delta=<batch_id>/cell=* — the crash-safe
-        # idempotent-overwrite contract shared with the postings and
-        # histogram stores); bumping this rebuilds v1 stores on their
-        # next ensure instead of mixing layouts under one root
-        "layout": 2,
-        # content digest of df's backing files: regenerated data at the
-        # same path rebuilds instead of silently serving a stale index
-        "data": dataset_digest(df),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(model_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(model_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
 
-    q = _quantized_corpus(df, id_col, vec_col, scale).transform(pin)
-    centroids = _kmeans_fit_q(q, id_col, k=k, iters=iters)
-    d = len(centroids[0])
-    if d % m != 0:
-        raise ValueError(f"vector dim {d} not divisible by m={m} subspaces")
-    dsub = d // m
-    cell = _best_cluster(centroids)["c"]
-    cent_lit = bigint_array_lit(centroids)
-    rv = F.zip_with(
-        "_qv",
-        F.element_at(cent_lit, (cell + 1).cast("int")),
-        lambda a, b: a - b,
-    )
-    enc = q.select(
-        F.col(id_col), cell.cast("int").alias("cell"), rv.alias("_qv")
-    ).transform(pin)
-    codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
-    codes = F.array(
-        *[
-            _best_cluster(codebooks[s], F.slice("_qv", s * dsub + 1, dsub))[
-                "c"
-            ].cast("int")
-            for s in range(m)
-        ]
-    )
-    (
-        enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
-        .repartition(k, "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(base + "/delta=base")
-    )
-    model = {"params": params, "centroids": centroids, "codebooks": codebooks}
-    out = fs.create(model_path, True)
-    try:
-        out.write(bytearray(json.dumps(model, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
+    def build(tmp: str) -> dict:
+        q = _quantized_corpus(df, id_col, vec_col, scale).transform(pin)
+        centroids = _kmeans_fit_q(q, id_col, k=k, iters=iters)
+        d = len(centroids[0])
+        if d % m != 0:
+            raise ValueError(f"vector dim {d} not divisible by m={m} subspaces")
+        enc = _residuals(q, id_col, centroids).transform(pin)
+        codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
+        _write_codes(enc, id_col, codebooks, d // m, k, tmp + "/delta=base")
+        return {"centroids": centroids, "codebooks": codebooks}
+
+    return ensure_store(spark, path, "ivfadc", params, df, build)
 
 
 def ivfadc_serve(
@@ -798,18 +769,8 @@ def ivfadc_serve(
     Bit-identical to :func:`ivfadc_topk` with the same params by
     construction: codes are assigned by the same integer argmin at
     write time, and the tables come from the shared helper."""
-    import json
-
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
+    store = open_store(spark, path, "ivfadc", required=True)
+    model = store.meta
     params = model["params"]
     centroids, codebooks = model["centroids"], model["codebooks"]
     k, m, scale = params["k"], params["m"], params["scale"]
@@ -836,7 +797,7 @@ def ivfadc_serve(
         )
         adc = term if adc is None else adc + term
     return (
-        spark.read.parquet(path)
+        read_table(spark, store)
         .where(F.col("cell").isin(probes))
         .select(F.col(id_col), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
@@ -874,80 +835,17 @@ def update_ivfadc_index(
     into — re-train (rebuild) when the batch distribution departs from
     the training corpus; the recall eval harness
     (dedup_minhash_recall's pattern) is the gate for that decision."""
-    import json
-    import re
 
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_ivfadc_index: invalid batch_id {batch_id!r} — must "
-            "match [A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
-        )
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(model_path):
-        raise ValueError(f"no ivfadc index at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
-    params = model["params"]
-    if params.get("layout") != 2:
-        raise ValueError(
-            f"ivfadc index at {path} predates the delta-partitioned "
-            "layout; rebuild it via ensure_ivfadc_index before "
-            "incrementing (mixing layouts under one root breaks "
-            "partition discovery)"
-        )
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    id_col, scale = params["id_col"], params["scale"]
-    m = params["m"]
-    d = len(centroids[0])
-    dsub = d // m
-    vec_col = params.get("vec_col", "embedding")
+    def write(delta_dir: str, model: dict) -> None:
+        params = model["params"]
+        centroids, codebooks = model["centroids"], model["codebooks"]
+        id_col = params["id_col"]
+        q = _quantized_corpus(new_docs, id_col, params["vec_col"], params["scale"])
+        enc = _residuals(q, id_col, centroids)
+        dsub = len(centroids[0]) // params["m"]
+        _write_codes(enc, id_col, codebooks, dsub, len(centroids), delta_dir)
 
-    q = _quantized_corpus(new_docs, id_col, vec_col, scale)
-    cell = _best_cluster(centroids)["c"]
-    cent_lit = bigint_array_lit(centroids)
-    rv = F.zip_with(
-        "_qv",
-        F.element_at(cent_lit, (cell + 1).cast("int")),
-        lambda a, b: a - b,
-    )
-    enc = q.select(
-        F.col(id_col), cell.cast("int").alias("cell"), rv.alias("_qv")
-    )
-    codes = F.array(
-        *[
-            _best_cluster(codebooks[s], F.slice("_qv", s * dsub + 1, dsub))[
-                "c"
-            ].cast("int")
-            for s in range(m)
-        ]
-    )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): a retried batch replaces any partial/committed prior attempt
-    (
-        enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
-        .repartition(len(centroids), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(base + f"/delta={batch_id}")
-    )
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(b"1"))
-    finally:
-        out.close()
-    return "applied"
+    return apply_delta(spark, path, "ivfadc", batch_id, write)
 
 
 def ivfadc_serve_many(
@@ -969,20 +867,10 @@ def ivfadc_serve_many(
     for per-query TakeOrdered fan-out — the scan amortization is the
     point either way. Returns (query_id, id, adc_dist, rank <= topk),
     bit-identical per query to :func:`ivfadc_serve`."""
-    import json
-
     from pyspark.sql.window import Window
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
+    store = open_store(spark, path, "ivfadc", required=True)
+    model = store.meta
     params = model["params"]
     centroids, codebooks = model["centroids"], model["codebooks"]
     k, m, scale = params["k"], params["m"], params["scale"]
@@ -1025,7 +913,7 @@ def ivfadc_serve_many(
         )
         adc = term if adc is None else adc + term
     scored = (
-        spark.read.parquet(path)
+        read_table(spark, store)
         .where(F.col("cell").isin(union_cells))
         .join(F.broadcast(pm), "cell")
         .select("query_id", F.col(id_col), adc.alias("adc_dist"))

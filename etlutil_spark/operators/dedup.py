@@ -27,6 +27,12 @@ from pyspark.sql.window import Window
 from etlutil_spark.functions.vectors import bigint_array_lit
 from etlutil_spark.functions.hashing import md5_bigint
 from etlutil_spark.functions.text import tokens, word_shingles
+from etlutil_spark.operators.store import (
+    StoreStatus,
+    ensure_store,
+    open_store,
+    read_table,
+)
 from etlutil_spark.operators.util import ensure_min_partitions, pin
 from etlutil_spark.functions.vectors import cosine
 
@@ -140,9 +146,21 @@ def shingle_table(
     The tokenize+shingle+hash chain is CPU-bound per row, so the input is
     spread to at least defaultParallelism partitions first (no-op when the
     scan already has enough)."""
-    return ensure_min_partitions(df).select(
-        F.col(id_col), F.explode(F.array_distinct(word_shingles(text_col, n))).alias("shingle")
+    return _tokenized(ensure_min_partitions(df), id_col, text_col).select(
+        F.col(id_col),
+        F.explode(
+            F.array_distinct(word_shingles(text_col, n, pre_tokens="_tk"))
+        ).alias("shingle"),
     )
+
+
+def _tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, _tk): each doc tokenized ONCE in a child projection.
+    :func:`word_shingles` reads the token array at every n-gram position
+    inside its ``transform`` lambda, and common-subexpression elimination
+    does not reach lambda bodies, so an inline tokenizer would re-tokenize
+    the document once per position."""
+    return df.select(F.col(id_col), tokens(text_col).alias("_tk"))
 
 
 def ngram_jaccard_pairs(
@@ -366,8 +384,9 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataF
     """(id, s): each doc's distinct word n-gram shingles as one array —
     the per-doc form of :func:`shingle_table`, intersected pairwise by
     :func:`jaccard_verify`."""
-    return df.select(
-        F.col(id_col), F.array_distinct(word_shingles(text_col, n)).alias("s")
+    return _tokenized(df, id_col, text_col).select(
+        F.col(id_col),
+        F.array_distinct(word_shingles(text_col, n, pre_tokens="_tk")).alias("s"),
     )
 
 
@@ -893,14 +912,13 @@ def duplicate_clusters(
 # full pair-stage + CC recomputations into five partition-pruned parquet
 # scans. Layout:
 #
-#   <path>/pairs/     id_a, id_b, jaccard   (threshold 0.0 over the capped
-#                                            shingle universe — every
-#                                            candidate pair, so any
-#                                            downstream threshold filters)
-#   <path>/clusters/  member_id, cluster_id (CC over pairs >= threshold)
-#   <path>/_cluster_meta.json               (params + dataset digest,
-#                                            written LAST = the completion
-#                                            marker)
+#   pairs/     id_a, id_b, jaccard   (threshold 0.0 over the capped
+#                                     shingle universe — every candidate
+#                                     pair, so any downstream threshold
+#                                     filters)
+#   clusters/  member_id, cluster_id (CC over pairs >= threshold)
+#
+# inside each version of the store (operators/store.py).
 # ---------------------------------------------------------------------------
 
 
@@ -947,117 +965,6 @@ def build_cluster_store(
     )
 
 
-def _store_fs(spark, base: str):
-    """(jvm, fs, Path(base)) triple for the versioned-store helpers."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(base)
-    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def _read_small_text(jvm, fs, path_str: str) -> str | None:
-    """Read a tiny sidecar file fully; None on ANY failure (missing,
-    crash-truncated, checksum error) — callers treat that as 'absent'."""
-    try:
-        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-    except Exception:
-        return None
-
-
-def _write_small_text(jvm, fs, path_str: str, text: str) -> None:
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), True)
-    try:
-        out.write(bytearray(text.encode()))
-    finally:
-        out.close()
-
-
-def _list_store_versions(jvm, fs, base: str, meta_name: str) -> list[str]:
-    """Names of complete version dirs under ``base`` (those whose meta
-    sidecar exists), lexicographically sorted — the zero-padded counter
-    prefix in the names makes lexicographic order creation order."""
-    try:
-        statuses = list(fs.listStatus(jvm.org.apache.hadoop.fs.Path(base)))
-    except Exception:
-        return []
-    out = []
-    for st in statuses:
-        nm = st.getPath().getName()
-        if nm.startswith("v_") and st.isDirectory() and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}/{meta_name}")
-        ):
-            out.append(nm)
-    return sorted(out)
-
-
-def _resolve_store_version(spark, base: str, meta_name: str) -> str | None:
-    """Current version dir of a versioned store: follow ``_current`` if
-    it names a complete version, else fall back to the newest complete
-    version dir (covers the instant where a committer is swapping the
-    pointer file). None when no complete version exists."""
-    jvm, fs, _ = _store_fs(spark, base)
-    ptr = _read_small_text(jvm, fs, base + "/_current")
-    if ptr:
-        nm = ptr.strip()
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}/{meta_name}")):
-            return f"{base}/{nm}"
-    versions = _list_store_versions(jvm, fs, base, meta_name)
-    return f"{base}/{versions[-1]}" if versions else None
-
-
-def _commit_store_version(
-    spark, base: str, tmp: str, meta_name: str, keep_previous: int = 1
-) -> str:
-    """Pointer-flip commit of a fully-built version dir ``tmp``:
-    rename it to the next counter-named ``v_*`` slot under ``base``,
-    then swap the ``_current`` pointer (write-new + delete + rename —
-    readers that catch the sub-millisecond pointer gap fall back to
-    newest-complete-version, so there is NO missing-store window).
-    Old versions beyond ``keep_previous`` are deleted best-effort so an
-    in-flight reader of the PREVIOUS version keeps its files; at real
-    cluster scale raise ``keep_previous`` to cover the longest reader.
-    Returns the committed version dir path."""
-    import uuid
-
-    jvm, fs, jp = _store_fs(spark, base)
-    if not fs.exists(jp):
-        fs.mkdirs(jp)
-    versions = _list_store_versions(jvm, fs, base, meta_name)
-    next_ctr = 0
-    for nm in versions:
-        try:
-            next_ctr = max(next_ctr, int(nm.split("_")[1]) + 1)
-        except (IndexError, ValueError):
-            next_ctr = max(next_ctr, len(versions))
-    vname = f"v_{next_ctr:010d}_{uuid.uuid4().hex[:8]}"
-    vpath = f"{base}/{vname}"
-    if not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(tmp), jvm.org.apache.hadoop.fs.Path(vpath)
-    ):
-        raise IOError(f"store version commit rename failed; build kept at {tmp}")
-    ptr_tmp = f"{base}/_current__tmp_{uuid.uuid4().hex[:8]}"
-    _write_small_text(jvm, fs, ptr_tmp, vname)
-    cur_p = jvm.org.apache.hadoop.fs.Path(base + "/_current")
-    if fs.exists(cur_p):
-        fs.delete(cur_p, False)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(ptr_tmp), cur_p):
-        raise IOError(f"store pointer flip failed; version committed at {vpath}")
-    # best-effort GC: keep the new version + keep_previous older ones
-    stale = _list_store_versions(jvm, fs, base, meta_name)[: -(1 + keep_previous)]
-    for nm in stale:
-        try:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}"), True)
-        except Exception:
-            pass
-    return vpath
-
-
-_CLUSTER_META = "_cluster_meta.json"
-
-
 def ensure_cluster_store(
     spark,
     docs: DataFrame,
@@ -1068,33 +975,11 @@ def ensure_cluster_store(
     n: int = 3,
     threshold: float = 0.6,
     max_shingle_freq: int | None = 50,
-) -> str:
-    """Build-ONCE wrapper around :func:`build_cluster_store` (the
-    ensure_* contract shared with the postings/IVF/histogram stores): a
-    complete store version whose ``_cluster_meta.json`` matches both the
-    params AND the dataset content digest is reused metadata-free; a
-    mismatch or damaged sidecar rebuilds. Commit is a POINTER FLIP over
-    versioned directories (``v_<counter>_<uuid>/`` + ``_current``):
-    the build lands in a builder-unique temp dir, is renamed to a fresh
-    version slot, and only then does ``_current`` swing to it — readers
-    resolve through :func:`read_cluster_pairs` / :func:`read_cluster_map`
-    and always see a complete version (pointer gap falls back to the
-    newest complete version dir), so a REBUILD never exposes a missing
-    store to concurrent readers. The previous version is retained for
-    in-flight readers; older ones are GC'd. Concurrent BUILDERS are
-    safe but wasteful (each commits a complete private version; the
-    last pointer flip wins) — serialize externally if build cost
-    matters. A failed build deletes its temp dir. On object stores
-    without atomic rename (S3 without a committer), front this with a
-    rename-capable filesystem or an external lock. Returns 'built' or
-    'reused'."""
-    import json
-    import uuid
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    base = path.rstrip("/")
-    jvm, fs, _ = _store_fs(spark, base)
+) -> StoreStatus:
+    """Build-once wrapper around :func:`build_cluster_store` under the
+    shared store contract (:func:`etlutil_spark.operators.store.ensure_store`):
+    reused while the params and the docs' content digest match, rebuilt
+    into a new version otherwise."""
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -1107,58 +992,14 @@ def ensure_cluster_store(
         # jaccard (r12 verdict item 3) — bumping this forces any v1 store
         # to read as a param mismatch and rebuild
         "pairs_schema": 2,
-        "data": dataset_digest(docs),
     }
-    cur = _resolve_store_version(spark, base, _CLUSTER_META)
-    if cur is not None:
-        # ANY failure to read or parse the meta on the reuse path falls
-        # through to rebuild — a damaged sidecar must never brick the store
-        txt = _read_small_text(jvm, fs, f"{cur}/{_CLUSTER_META}")
-        if txt:
-            try:
-                if json.loads(txt).get("params") == params:
-                    return "reused"
-            except Exception:
-                pass
-    # builder-unique temp dir: two concurrent builders never share
-    # scratch; each commits a complete private version
-    tmp = base + "__build_" + uuid.uuid4().hex[:12]
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    try:
-        build_cluster_store(
-            docs,
-            tmp,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            threshold=threshold,
-            max_shingle_freq=max_shingle_freq,
-        )
-        _write_small_text(
-            jvm,
-            fs,
-            f"{tmp}/{_CLUSTER_META}",
-            json.dumps({"params": params}, sort_keys=True),
-        )
-    except BaseException:
-        # a failed build must not leak its scratch dir
-        try:
-            fs.delete(tmp_p, True)
-        except Exception:
-            pass
-        raise
-    _commit_store_version(spark, base, tmp, _CLUSTER_META)
-    return "built"
-
-
-def _cluster_store_data_dir(spark, path: str) -> str:
-    """Resolve a cluster-store path to the directory holding pairs/ and
-    clusters/: the current version of a versioned store, or the path
-    itself for a store written directly by :func:`build_cluster_store`
-    (legacy flat layout)."""
-    base = path.rstrip("/")
-    cur = _resolve_store_version(spark, base, _CLUSTER_META)
-    return cur if cur is not None else base
+    return ensure_store(
+        spark, path, "cluster", params, docs,
+        lambda tmp: build_cluster_store(
+            docs, tmp, id_col=id_col, text_col=text_col, n=n,
+            threshold=threshold, max_shingle_freq=max_shingle_freq,
+        ),
+    )
 
 
 def read_cluster_pairs(spark, path: str) -> DataFrame:
@@ -1166,13 +1007,13 @@ def read_cluster_pairs(spark, path: str) -> DataFrame:
     jaccard; schema v2) — every capped candidate pair at threshold 0.0;
     filter ``jaccard >= t`` (or derive containment from the raw stats)
     for any downstream threshold (the predicate pushes to the scan)."""
-    return spark.read.parquet(_cluster_store_data_dir(spark, path) + "/pairs")
+    return read_table(spark, open_store(spark, path, "cluster"), "pairs")
 
 
 def read_cluster_map(spark, path: str) -> DataFrame:
     """The store's cluster map (member_id, cluster_id) — the connected
     components of the verified pairs at the store's build threshold."""
-    return spark.read.parquet(_cluster_store_data_dir(spark, path) + "/clusters")
+    return read_table(spark, open_store(spark, path, "cluster"), "clusters")
 
 
 # ---------------------------------------------------------------------------
@@ -1183,8 +1024,6 @@ def read_cluster_map(spark, path: str) -> DataFrame:
 # not the seconds, is what matters at 100 TB, where a signature pass is a
 # full corpus scan.
 # ---------------------------------------------------------------------------
-
-_MINHASH_META = "_minhash_meta.json"
 
 
 def build_minhash_store(
@@ -1241,82 +1080,35 @@ def ensure_minhash_store(
     n: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-) -> str:
-    """Build-ONCE wrapper around :func:`build_minhash_store` with the
-    same versioned pointer-flip lifecycle as :func:`ensure_cluster_store`
-    (params + dataset content digest keyed, damaged-sidecar rebuild,
-    reader-safe commit, previous version retained, failed builds clean
-    their scratch). Returns 'built' or 'reused'."""
-    import json
-    import uuid
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    base = path.rstrip("/")
-    jvm, fs, _ = _store_fs(spark, base)
+) -> StoreStatus:
+    """Build-once wrapper around :func:`build_minhash_store` under the
+    shared store contract (see :func:`ensure_cluster_store`)."""
     params = {
         "id_col": id_col,
         "text_col": text_col,
         "n": int(n),
         "num_hashes": int(num_hashes),
         "bands": int(bands),
-        "data": dataset_digest(docs),
     }
-    cur = _resolve_store_version(spark, base, _MINHASH_META)
-    if cur is not None:
-        txt = _read_small_text(jvm, fs, f"{cur}/{_MINHASH_META}")
-        if txt:
-            try:
-                if json.loads(txt).get("params") == params:
-                    return "reused"
-            except Exception:
-                pass
-    tmp = base + "__build_" + uuid.uuid4().hex[:12]
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    try:
-        build_minhash_store(
-            docs,
-            tmp,
-            id_col=id_col,
-            text_col=text_col,
-            n=n,
-            num_hashes=num_hashes,
-            bands=bands,
-        )
-        _write_small_text(
-            jvm,
-            fs,
-            f"{tmp}/{_MINHASH_META}",
-            json.dumps({"params": params}, sort_keys=True),
-        )
-    except BaseException:
-        try:
-            fs.delete(tmp_p, True)
-        except Exception:
-            pass
-        raise
-    _commit_store_version(spark, base, tmp, _MINHASH_META)
-    return "built"
-
-
-def _minhash_store_data_dir(spark, path: str) -> str:
-    base = path.rstrip("/")
-    cur = _resolve_store_version(spark, base, _MINHASH_META)
-    return cur if cur is not None else base
+    return ensure_store(
+        spark, path, "minhash", params, docs,
+        lambda tmp: build_minhash_store(
+            docs, tmp, id_col=id_col, text_col=text_col, n=n,
+            num_hashes=num_hashes, bands=bands,
+        ),
+    )
 
 
 def read_minhash_signatures(spark, path: str) -> DataFrame:
     """The store's signature table (id, signature array<bigint>)."""
-    return spark.read.parquet(
-        _minhash_store_data_dir(spark, path) + "/signatures"
-    )
+    return read_table(spark, open_store(spark, path, "minhash"), "signatures")
 
 
 def read_minhash_cands(spark, path: str) -> DataFrame:
     """The store's verified candidate pairs (id_a, id_b, jaccard) — every
     banding candidate at the store's config; filter ``jaccard >= t`` for
     any downstream verify threshold (the predicate pushes to the scan)."""
-    return spark.read.parquet(_minhash_store_data_dir(spark, path) + "/cands")
+    return read_table(spark, open_store(spark, path, "minhash"), "cands")
 
 
 def containment_pairs(

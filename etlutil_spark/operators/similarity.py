@@ -19,6 +19,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etlutil_spark.functions.vectors import cosine_lit, dot, norm
+from etlutil_spark.operators.store import (
+    StoreStatus,
+    ensure_store,
+    open_store,
+    read_table,
+)
 from etlutil_spark.operators.util import ensure_min_partitions
 
 
@@ -298,58 +304,22 @@ def ensure_ivf_store(
     vec_col: str = "embedding",
     n_planes: int = 6,
     seed: int = 42,
-) -> str:
-    """Build-ONCE wrapper around :func:`build_ivf_store` (the ensure_*
-    contract shared with the bucketed-table / IVFADC / postings
-    fixtures): a surviving store with a _SUCCESS marker and a matching
-    _ivf_meta.json is reused metadata-free; a param mismatch or partial
-    write rebuilds. build_ivf_store itself stays overwrite-always for
-    callers that want the write path exercised per run."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivf_meta.json")
-    from etlutil_spark.operators.util import dataset_digest
-
+) -> StoreStatus:
+    """Build-once wrapper around :func:`build_ivf_store` under the shared
+    store contract (:func:`etlutil_spark.operators.store.ensure_store`).
+    build_ivf_store itself stays overwrite-always for callers that want
+    the write path exercised per run."""
     params = {
         "id_col": id_col, "vec_col": vec_col,
         "n_planes": int(n_planes), "seed": int(seed),
-        # content digest of docs' backing files: regenerated data at the
-        # same path rebuilds instead of silently serving a stale store
-        "data": dataset_digest(docs),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    build_ivf_store(
-        docs, path, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, seed=seed,
+    return ensure_store(
+        spark, path, "ivf", params, docs,
+        lambda tmp: build_ivf_store(
+            docs, tmp, id_col=id_col, vec_col=vec_col,
+            n_planes=n_planes, seed=seed,
+        ),
     )
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
 
 
 def ivf_topk(
@@ -374,7 +344,7 @@ def ivf_topk(
             qbits |= 1 << i
     probe = probe_buckets(qbits, n_planes, multiprobe_hamming)
     return (
-        spark.read.parquet(path)
+        read_table(spark, open_store(spark, path, "ivf"))
         .where(F.col("bucket").isin(probe))
         .select(
             F.col(id_col),

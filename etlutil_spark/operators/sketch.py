@@ -32,6 +32,14 @@ family (reference ``data_structures.py:1336-1353``) to aggregate land.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from etlutil_spark.operators.store import (
+    StoreStatus,
+    apply_delta,
+    commit_version,
+    ensure_store,
+    open_store,
+    read_table,
+)
 from etlutil_spark.operators.util import pin
 from pyspark.sql import functions as F
 
@@ -517,18 +525,18 @@ def histogram_quantiles(
 # ---------------------------------------------------------------------------
 
 
-def _hist_fs(spark, path: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _hist_delta(
     df: DataFrame, value_col: str, bounds: list[int], key_col: str | None
 ) -> DataFrame:
     if key_col:
         return log_histogram_by(df, key_col, value_col, bounds)
     return log_histogram(df, value_col, bounds)
+
+
+def _write_base(hist: DataFrame, out: str) -> None:
+    hist.withColumn("delta", F.lit("base")).repartition(1).write.partitionBy(
+        "delta"
+    ).mode("overwrite").parquet(out)
 
 
 def ensure_hist_store(
@@ -539,97 +547,31 @@ def ensure_hist_store(
     value_col: str,
     bounds: list[int],
     key_col: str | None = None,
-) -> str:
+) -> StoreStatus:
     """Build-ONCE persisted log-histogram store: bucket ``df[value_col]``
     with :func:`log_histogram` (or :func:`log_histogram_by` when
     ``key_col`` is given — the per-endpoint percentile store) and write
-    the (key?, bucket, lo, c) delta under ``delta=base``, with the
-    boundary table pinned in a ``_hist_meta.json`` sidecar. Later calls
-    with the same params are metadata-only; a param mismatch, a partial
-    write, or a CONTENT change in ``df``'s backing files rebuilds — a
-    dataset digest rides in the params, so regenerating the data behind
-    a path-keyed store reads as a mismatch instead of silently serving
-    stale quantiles (the ensure_* contract shared with the
-    postings/IVFADC stores).
+    the (key?, bucket, lo, c) histogram under ``delta=base``, with the
+    boundary table in the store's sidecar. The lifecycle is the shared
+    store contract (:func:`etlutil_spark.operators.store.ensure_store`).
 
-    Rebuild granularity: a DIGEST-ONLY mismatch (same
-    value_col/bounds/key_col, regenerated base data) rebuilds just the
-    ``delta=base`` partition and PRESERVES every incremental
-    ``delta=<batch_id>`` partition and ``_applied_*`` replay marker —
-    those batches were committed by sources that will not redeliver
-    them, so wiping them would silently lose their contributions. A
-    PARAM mismatch (different bounds/grain) wipes the whole store: old
-    deltas were bucketed under a different contract and cannot merge.
-    Concurrent builders against one path still race — serialize
-    externally or use per-run paths. Returns 'built', 'rebased', or
-    'reused'."""
-    import json
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    jp = jvm.org.apache.hadoop.fs.Path(base)
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
+    Rebuild granularity: a rebuild caused by new source DATA alone (same
+    value_col/bounds/key_col, regenerated or in-memory base data) carries
+    every incremental ``delta=<batch_id>`` partition and ``_applied_*``
+    replay marker into the new version — those batches were committed by
+    sources that will not redeliver them, so dropping them would silently
+    lose their contributions. A PARAM change (different bounds/grain)
+    starts empty: old deltas were bucketed under a different contract and
+    cannot merge."""
     params = {
         "value_col": value_col,
         "bounds": [int(b) for b in bounds],
         "key_col": key_col,
-        "data": dataset_digest(df),
     }
-    stored = None
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path —
-        # truncated JSON from a crash mid-write, a checksum error on a
-        # hand-touched local file — must fall through to rebuild, never
-        # brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            stored = json.loads(txt).get("params")
-            if stored == params:
-                return "reused"
-        except Exception:
-            stored = None
-    if (
-        isinstance(stored, dict)
-        and {k: v for k, v in stored.items() if k != "data"}
-        == {k: v for k, v in params.items() if k != "data"}
-    ):
-        # digest-only mismatch: the base dataset was regenerated but the
-        # histogram contract is unchanged — rebuild ONLY delta=base and
-        # keep the incrementally applied deltas + replay markers (see
-        # docstring); the meta is rewritten LAST so a crash mid-rebase
-        # re-enters this path on retry
-        _hist_delta(df, value_col, bounds, key_col).repartition(1).write.mode(
-            "overwrite"
-        ).parquet(base + "/delta=base")
-        out = fs.create(meta_path, True)
-        try:
-            out.write(bytearray(json.dumps({"params": params}), "utf-8"))
-        finally:
-            out.close()
-        return "rebased"
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    hist = _hist_delta(df, value_col, bounds, key_col).withColumn(
-        "delta", F.lit("base")
+    return ensure_store(
+        spark, path, "hist", params, df,
+        lambda tmp: _write_base(_hist_delta(df, value_col, bounds, key_col), tmp),
     )
-    hist.repartition(1).write.partitionBy("delta").mode("overwrite").parquet(
-        base
-    )
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}), "utf-8"))
-    finally:
-        out.close()
-    return "built"
 
 
 def update_hist_store(
@@ -642,83 +584,35 @@ def update_hist_store(
     """Incrementally merge a batch into an :func:`ensure_hist_store`
     store: the batch's OWN histogram (<= |bounds| rows) lands as
     partition ``delta=<batch_id>``; the existing store is never read.
-    Two-layer replay guard: the delta write OVERWRITES its own
-    partition directory (idempotent per batch_id — a driver crash
-    between job commit and marker creation leaves a retry that
-    REPLACES the committed delta rather than appending a second copy),
-    and the ``_applied_<batch_id>`` marker (written LAST) short-circuits
-    clean replays, so at-least-once delivery cannot double-count.
-    Returns 'applied' or 'skipped'."""
-    import json
-    import re
+    Replays are absorbed by :func:`etlutil_spark.operators.store.apply_delta`
+    (per-batch overwrite + ``_applied_<batch_id>`` marker), so
+    at-least-once delivery cannot double-count. Returns 'applied' or
+    'skipped'."""
 
-    # the delta write targets <path>/delta=<batch_id> directly, so the id
-    # must be a safe single path segment — and never 'base', which would
-    # overwrite the store's own base histogram
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_hist_store: invalid batch_id {batch_id!r} — must match "
-            "[A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
-        )
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    params = json.loads(txt)["params"]
-    delta = _hist_delta(
-        new_rows, params["value_col"], params["bounds"], params.get("key_col")
-    )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): the partition value comes from the directory name, and a
-    # retried batch replaces any partial/committed prior attempt
-    delta.repartition(1).write.mode("overwrite").parquet(
-        base + f"/delta={batch_id}"
-    )
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(b"1"))
-    finally:
-        out.close()
-    return "applied"
+    def write(delta_dir: str, meta: dict) -> None:
+        p = meta["params"]
+        _hist_delta(new_rows, p["value_col"], p["bounds"], p.get("key_col")).repartition(
+            1
+        ).write.mode("overwrite").parquet(delta_dir)
+
+    return apply_delta(spark, path, "hist", batch_id, write)
 
 
 def read_hist_store(spark, path: str) -> DataFrame:
     """Aggregate the store's delta partitions back into one histogram:
     SUM of counters per (key?, bucket) — mergeability is the whole
-    point; the grouping grain is META-driven (``key_col`` present in
-    ``_hist_meta.json`` or not), so global and keyed stores (and
-    compaction over either) share one reader while a schema surprise —
-    a stray column in a delta, a store written by a newer layout —
-    FAILS loudly instead of silently changing aggregation grain. The
-    read is |deltas| x |keys| x |occupied buckets| rows — sketch-scale,
-    never corpus-scale; compact periodically by folding old deltas into
-    a new base if delta count ever matters."""
-    import json
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    params = json.loads(txt)["params"]
+    point; the grouping grain is META-driven (``key_col`` in the sidecar
+    or not), so global and keyed stores (and compaction over either)
+    share one reader while a schema surprise — a stray column in a
+    delta, a store written by a newer layout — FAILS loudly instead of
+    silently changing aggregation grain. The read is |deltas| x |keys| x
+    |occupied buckets| rows — sketch-scale, never corpus-scale; compact
+    periodically by folding old deltas into a new base if delta count
+    ever matters."""
+    store = open_store(spark, path, "hist", required=True)
+    params = store.meta["params"]
     keys = (["key"] if params.get("key_col") else []) + ["bucket", "lo"]
-    df = spark.read.parquet(base)
+    df = read_table(spark, store)
     expected = set(keys) | {"c", "delta"}
     unexpected = [c for c in df.columns if c not in expected]
     missing = [c for c in expected if c not in df.columns]
@@ -754,53 +648,16 @@ def hist_update_sink(path: str):
 def compact_hist_store(spark, path: str) -> str:
     """Fold ALL delta partitions into a fresh ``delta=base`` — the
     maintenance that keeps the store read at O(|occupied buckets|) after
-    many increments. Implementation: aggregate the current store, write
-    it to a sibling temp dir, then swap directories. The swap is two FS
-    renames, not a transaction: a crash between them can leave the store
-    missing (the temp dir preserves the data for manual recovery) — the
-    plain-directory honesty caveat shared with the postings store; use a
-    table format for transactional compaction. Applied-batch markers are
-    re-stamped so already-folded batch_ids stay absorbed on replay."""
-    import json
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    jp = jvm.org.apache.hadoop.fs.Path(base)
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    stream = fs.open(meta_path)
-    try:
-        meta_txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    applied = [
-        st.getPath().getName()
-        for st in fs.listStatus(jp)
-        if st.getPath().getName().startswith("_applied_")
-    ]
-    folded = read_hist_store(spark, base).withColumn("delta", F.lit("base"))
-    tmp = base + "__compact_tmp"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)
-    folded.repartition(1).write.partitionBy("delta").mode("overwrite").parquet(
-        tmp
+    many increments. The folded histogram is committed as a new store
+    version, so readers never see a half-compacted store; the
+    applied-batch markers are carried over so already-folded batch_ids
+    stay absorbed on replay."""
+    store = open_store(spark, path, "hist", required=True)
+    folded = read_hist_store(spark, path)
+    commit_version(
+        spark, path, "hist", store.meta, lambda tmp: _write_base(folded, tmp),
+        keep=(store.dir, lambda nm: nm.startswith("_applied_")),
     )
-    fs.delete(jp, True)
-    if not fs.rename(tmp_p, jp):
-        raise IOError(f"compact swap failed; data preserved at {tmp}")
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(meta_txt, "utf-8"))
-    finally:
-        out.close()
-    for name in applied:
-        m = fs.create(jvm.org.apache.hadoop.fs.Path(base + "/" + name), True)
-        try:
-            m.write(bytearray(b"1"))
-        finally:
-            m.close()
     return "compacted"
 
 

@@ -9,6 +9,13 @@ carries a DuckDB oracle.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from etlutil_spark.operators.store import (
+    StoreStatus,
+    apply_delta,
+    ensure_store,
+    open_store,
+    read_table,
+)
 from etlutil_spark.operators.util import pin
 from pyspark.sql import functions as F
 
@@ -766,81 +773,11 @@ def dsir_log_weights(
     )
 
 
-def ensure_postings_store(
-    spark,
-    df: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = 64,
-) -> str:
-    """Build-ONCE inverted-index store — the lexical twin of
-    ensure_ivfadc_index: tokenize the corpus once, persist the postings
-    (term, doc, tf, dl) hive-partitioned by a portable term-hash bucket,
-    and stamp the corpus constants BM25 needs (n_docs, exact total
-    token count) into a ``_postings_meta.json`` sidecar next to
-    _SUCCESS. Every later call with the same params is metadata-only;
-    a param mismatch or partial write rebuilds (the ensure_* contract).
-
-    Why bucket-partitioned: a query touches a handful of terms, and
-    each term lives in exactly one bucket directory — serving lists
-    only the probed buckets (PartitionFilters), so a search reads
-    ~|query terms| / n_buckets of the index no matter how large the
-    corpus grows. The write repartitions by bucket first so each dir
-    gets well-sized files, not one file per upstream task.
-
-    Layout v2 (r12): postings live under ``delta=base/bucket=*/`` and
-    each increment under its own ``delta=<batch_id>/bucket=*/`` —
-    update_postings_store OVERWRITES its batch's delta partition, so a
-    crash-torn append is REPLACED on replay instead of double-counted
-    (the update_hist_store crash-safety pattern; the v1 layout's
-    append-then-marker left a window where a replayed batch doubled its
-    postings and corpus counts). The bucket predicate still prunes at
-    the file index (bucket is a partition column at every delta
-    level)."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/delta=base/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    from etlutil_spark.operators.util import dataset_digest
-
-    params = {
-        "id_col": id_col,
-        "text_col": text_col,
-        "n_buckets": int(n_buckets),
-        # delta-partitioned layout (see docstring); bumping this forces
-        # v1 stores to rebuild on their next ensure instead of mixing
-        # incompatible directory structures under one root
-        "layout": 2,
-        # content digest of df's backing files: regenerated data at the
-        # same path reads as a param mismatch and rebuilds instead of
-        # silently serving a stale index
-        "data": dataset_digest(df),
-    }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
-
+def _write_postings(
+    df: DataFrame, out: str, id_col: str, text_col: str, n_buckets: int
+) -> dict:
+    """Write ``df``'s postings (term, doc, tf, dl) bucket-partitioned to
+    ``out`` and return its exact corpus counts {n_docs, sum_dl}."""
     from etlutil_spark.functions.hashing import md5_bigint
 
     stats = df.select(
@@ -849,7 +786,7 @@ def ensure_postings_store(
         .cast("bigint")
         .alias("sum_dl"),
     ).collect()[0]
-    postings = (
+    (
         df.select(
             F.col(id_col),
             X.token_count(text_col).alias("dl"),
@@ -861,28 +798,50 @@ def ensure_postings_store(
             "bucket",
             F.pmod(md5_bigint("term"), F.lit(n_buckets)).cast("int"),
         )
-    )
-    (
-        postings.repartition(n_buckets, "bucket")
+        .repartition(n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(base + "/delta=base")
+        .parquet(out)
     )
-    meta = {
-        "params": params,
-        "n_docs": int(stats["n_docs"]),
-        "sum_dl": int(stats["sum_dl"] or 0),
+    return {"n_docs": int(stats["n_docs"]), "sum_dl": int(stats["sum_dl"] or 0)}
+
+
+def ensure_postings_store(
+    spark,
+    df: DataFrame,
+    path: str,
+    *,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n_buckets: int = 64,
+) -> StoreStatus:
+    """Build-ONCE inverted-index store — the lexical twin of
+    ensure_ivfadc_index: tokenize the corpus once, persist the postings
+    (term, doc, tf, dl) hive-partitioned by a portable term-hash bucket
+    under ``delta=base/bucket=*/``, and keep the corpus constants BM25
+    needs (n_docs, exact total token count) in the store's sidecar. The
+    lifecycle is the shared store contract
+    (:func:`etlutil_spark.operators.store.ensure_store`).
+
+    Why bucket-partitioned: a query touches a handful of terms, and
+    each term lives in exactly one bucket directory — serving lists
+    only the probed buckets (PartitionFilters), so a search reads
+    ~|query terms| / n_buckets of the index no matter how large the
+    corpus grows. The write repartitions by bucket first so each dir
+    gets well-sized files, not one file per upstream task. Each
+    increment lands under its own ``delta=<batch_id>/bucket=*/``
+    (:func:`update_postings_store`); bucket stays a partition column at
+    every delta level, so the bucket predicate still prunes."""
+    params = {"id_col": id_col, "text_col": text_col, "n_buckets": int(n_buckets)}
+
+    def build(tmp: str) -> dict:
+        stats = _write_postings(df, tmp + "/delta=base", id_col, text_col, n_buckets)
         # per-batch corpus-count contributions, keyed by batch_id so a
         # replayed increment OVERWRITES its own entry instead of adding
         # a second one (idempotent, like its delta partition)
-        "deltas": {},
-    }
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
+        return {**stats, "deltas": {}}
+
+    return ensure_store(spark, path, "postings", params, df, build)
 
 
 def _postings_corpus_stats(meta: dict) -> tuple[int, int]:
@@ -918,18 +877,9 @@ def bm25_serve(
     sum, 6-decimal final round, doc-id tiebreak), so the same oracle
     verifies both the search math AND the store roundtrip."""
     import hashlib
-    import json
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
+    store = open_store(spark, path, "postings", required=True)
+    meta = store.meta
     n_buckets = meta["params"]["n_buckets"]
     id_col = meta["params"]["id_col"]
     n_docs, sum_dl = _postings_corpus_stats(meta)
@@ -951,7 +901,7 @@ def bm25_serve(
     # pruning stays VISIBLE in the executed plan (a checkpoint would
     # hide the FileScan behind an RDD scan; plan test pins the filter)
     postings = (
-        spark.read.parquet(path)
+        read_table(spark, store)
         .where(F.col("bucket").isin(probes))
         .where(F.col("term").isin(terms))
     )
@@ -1003,90 +953,15 @@ def update_postings_store(
     ``_applied_<batch_id>`` marker (written LAST) merely short-circuits
     clean replays. A crash at any point leaves a retry that converges
     to exactly one application."""
-    import json
-    import re
 
-    # the delta write targets <path>/delta=<batch_id> directly, so the id
-    # must be a safe single path segment — and never 'base', which would
-    # overwrite the store's own base postings
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_postings_store: invalid batch_id {batch_id!r} — must "
-            "match [A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
+    def write(delta_dir: str, meta: dict) -> dict:
+        p = meta["params"]
+        meta["deltas"][str(batch_id)] = _write_postings(
+            new_docs, delta_dir, p["id_col"], p["text_col"], p["n_buckets"]
         )
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(meta_path):
-        raise ValueError(f"no postings store at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
-    if "deltas" not in meta:
-        raise ValueError(
-            f"postings store at {path} predates the delta-partitioned "
-            "layout; rebuild it via ensure_postings_store before "
-            "incrementing (mixing layouts under one root breaks "
-            "partition discovery)"
-        )
-    id_col = meta["params"]["id_col"]
-    text_col = meta["params"]["text_col"]
-    n_buckets = meta["params"]["n_buckets"]
+        return meta
 
-    from etlutil_spark.functions.hashing import md5_bigint
-
-    stats = new_docs.select(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(X.token_count(text_col).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_dl"),
-    ).collect()[0]
-    postings = (
-        new_docs.select(
-            F.col(id_col),
-            X.token_count(text_col).alias("dl"),
-            F.explode(X.tokens(text_col)).alias("term"),
-        )
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .withColumn(
-            "bucket",
-            F.pmod(md5_bigint("term"), F.lit(n_buckets)).cast("int"),
-        )
-    )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): the delta value comes from the directory name, and a
-    # retried batch replaces any partial/committed prior attempt
-    (
-        postings.repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(base + f"/delta={batch_id}")
-    )
-    meta["deltas"][str(batch_id)] = {
-        "n_docs": int(stats["n_docs"]),
-        "sum_dl": int(stats["sum_dl"] or 0),
-    }
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-    out2 = fs.create(marker, True)
-    try:
-        out2.write(bytearray(b"1"))
-    finally:
-        out2.close()
-    return "applied"
+    return apply_delta(spark, path, "postings", batch_id, write)
 
 
 def bm25_serve_many(
@@ -1110,20 +985,11 @@ def bm25_serve_many(
     (query_id, doc_id, bm25, n_matched_terms, rank<=k), ranked ties
     broken by doc id."""
     import hashlib
-    import json
 
     from pyspark.sql.window import Window
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
+    store = open_store(spark, path, "postings", required=True)
+    meta = store.meta
     n_buckets = meta["params"]["n_buckets"]
     id_col = meta["params"]["id_col"]
     n_docs, sum_dl = _postings_corpus_stats(meta)
@@ -1142,7 +1008,7 @@ def bm25_serve_many(
     avgdl = float(sum_dl) / n_docs
     qmap = spark.createDataFrame(pairs, "query_id string, term string")
     postings = (
-        spark.read.parquet(path)
+        read_table(spark, store)
         .where(F.col("bucket").isin(probes))
         .where(F.col("term").isin(terms))
     )
@@ -1233,21 +1099,8 @@ def ensure_quality_store(
     logit + the Gopher rule verdict at the DEFAULT rule thresholds), so
     serving from the store is bit-identical to recomputing — pinned by
     tests/test_text_quality_store.py and by every consumer's DuckDB
-    oracle, which recomputes from raw text. Same staleness contract as
-    every ensure_* store: params + the input's content digest live in a
-    ``_quality_meta.json`` sidecar; a param or data change (or a
-    file-less input's per-call sentinel digest) rebuilds; a damaged
-    sidecar rebuilds rather than bricking."""
-    import json
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_quality_meta.json")
+    oracle, which recomputes from raw text. The lifecycle is the shared
+    store contract (:func:`etlutil_spark.operators.store.ensure_store`)."""
     w = {**DEFAULT_QUALITY_WEIGHTS, **(weights or {})}
     params = {
         "id_col": id_col,
@@ -1259,46 +1112,26 @@ def ensure_quality_store(
         # verdicts from an older rule set
         "gopher_defaults": gopher_defaults(),
         "schema": 1,
-        "data": dataset_digest(df),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    scored = gopher_quality_filter(
-        quality_model_score(df, text_col, weights=weights, threshold=threshold),
-        text_col,
-    ).select(
-        F.col(id_col),
-        "source",
-        "lang",
-        "n_chars",
-        "model_score",
-        "kept",
-        F.col("keep").alias("gopher_keep"),
+    return ensure_store(
+        spark, path, "quality", params, df,
+        lambda tmp: gopher_quality_filter(
+            quality_model_score(df, text_col, weights=weights, threshold=threshold),
+            text_col,
+        ).select(
+            F.col(id_col),
+            "source",
+            "lang",
+            "n_chars",
+            "model_score",
+            "kept",
+            F.col("keep").alias("gopher_keep"),
+        ).write.mode("overwrite").parquet(tmp),
     )
-    scored.write.mode("overwrite").parquet(base)
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
 
 
 def read_quality_scores(spark, path: str) -> DataFrame:
     """The quality store's per-document score table (id, source, lang,
     n_chars, model_score, kept, gopher_keep) — filters on score/verdict
     push down to the parquet scan."""
-    return spark.read.parquet(path.rstrip("/"))
+    return read_table(spark, open_store(spark, path, "quality"))

@@ -92,73 +92,6 @@ def pin_eager(df: DataFrame) -> DataFrame:
     return _pin_impl(df, eager=True)
 
 
-def dataset_digest(df: DataFrame) -> str:
-    """Content-identity digest of the files backing ``df``'s scan:
-    md5 over the sorted (path, length, mtime) of every input file.
-
-    The ensure_* persisted stores fold this into their metadata so a
-    store keyed by a path string cannot silently serve stale results
-    after the dataset at that path is REGENERATED — same params +
-    different bytes now reads as a param mismatch and rebuilds. Cost is
-    one listStatus per input DIRECTORY (not one py4j round-trip per
-    file — a 100 TB table has tens of thousands of part files but few
-    directories, and this runs on every warm ensure_* call); an
-    in-memory frame (no backing files) has NO content identity at all,
-    so it digests to a unique per-call sentinel — an ensure_* store keyed
-    on it can never match and therefore always REBUILDS (r12 advice: a
-    constant empty-list hash silently served stale stores for view/
-    in-memory inputs); persist such inputs to files first if build-once
-    reuse matters."""
-    import hashlib
-    import uuid
-    import warnings
-    from collections import defaultdict
-
-    spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    by_dir: dict[str, set[str]] = defaultdict(set)
-    input_files = df.inputFiles()
-    if not input_files:
-        warnings.warn(
-            "dataset_digest: frame has no backing files (in-memory or view "
-            "input) — content changes are undetectable, so the digest is a "
-            "per-call sentinel and any ensure_* store keyed on it will "
-            "REBUILD every call; persist the input to files first if "
-            "build-once reuse matters",
-            stacklevel=2,
-        )
-        return f"degenerate-{uuid.uuid4().hex}"
-    for f in input_files:
-        parent, _, name = f.rpartition("/")
-        by_dir[parent].add(name)
-    h = hashlib.md5()
-    entries: list[str] = []
-    for parent, names in by_dir.items():
-        p = jvm.org.apache.hadoop.fs.Path(parent)
-        fs = p.getFileSystem(conf)
-        seen: dict[str, str] = {}
-        try:
-            statuses = list(fs.listStatus(p))
-        except Exception:
-            # The input directory vanished between plan and digest (dataset
-            # deleted or mid-regeneration). Every file in it reads as
-            # 'missing' — a digest CHANGE — so the ensure_* reuse check
-            # falls through to rebuild instead of propagating an opaque
-            # JVM error out of a warm read: a damaged input must never
-            # brick the store.
-            statuses = []
-        for st in statuses:
-            nm = st.getPath().getName()
-            if nm in names:
-                seen[nm] = f"{st.getLen()}|{st.getModificationTime()}"
-        for nm in names:
-            entries.append(f"{parent}/{nm}|{seen.get(nm, 'missing')}\n")
-    for line in sorted(entries):
-        h.update(line.encode())
-    return h.hexdigest()
-
-
 def store_root(spark=None) -> str:
     """Base directory under which every ensure_* persisted store
     (cluster map, MinHash signatures, postings, IVF/IVFADC, histogram)

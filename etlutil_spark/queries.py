@@ -20,10 +20,16 @@ from pyspark.sql import functions as F
 from etlutil_spark.functions import dates as D
 from etlutil_spark.functions.daterange import DateRange, DateRanges
 from etlutil_spark.functions.vectors import bigint_array_lit, double_array_lit
+from etlutil_spark.operators.store import store_path
 from etlutil_spark.operators.util import pin, store_root
 from etlutil_spark.sources.testdata import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def _sf_key(sf_dir: str) -> str:
+    """A dataset directory as one path segment, keying its stores."""
+    return sf_dir.strip("/").replace("/", "_")
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
@@ -4590,10 +4596,7 @@ def docs_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings", _sf_key(sf_dir))
     ensure_postings_store(spark, d, path, id_col="doc_id", text_col="text")
     return bm25_serve(spark, path, ["vector", "join", "stream"], k=20)
 
@@ -4656,10 +4659,7 @@ def docs_bm25_serve_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings", _sf_key(sf_dir))
     ensure_postings_store(spark, d, path, id_col="doc_id", text_col="text")
     return bm25_serve_many(
         spark,
@@ -4721,10 +4721,7 @@ def docs_bm25_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     base = d.where(F.col("doc_id") % 3 != 0)
     batch = d.where(F.col("doc_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_inc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings", "inc_" + _sf_key(sf_dir))
     ensure_postings_store(spark, base, path, id_col="doc_id", text_col="text")
     update_postings_store(spark, batch, path, batch_id="mod3")
     return bm25_serve(spark, path, ["vector", "join", "stream"], k=20)
@@ -7611,7 +7608,7 @@ def docs_ngram_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break (count desc, trigram asc) so top lists are reproducible."""
     from pyspark.sql.window import Window
 
-    from etlutil_spark.functions.text import word_shingles
+    from etlutil_spark.functions.text import tokens, word_shingles
     from etlutil_spark.operators.util import ensure_min_partitions
 
     # the tokenize+shingle explode is CPU-bound per row: spread a
@@ -7619,7 +7616,12 @@ def docs_ngram_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_min_partitions(
         load_table(spark, "documents", sf_dir).select("lang", "text")
     )
-    tri = d.select("lang", F.explode(word_shingles("text", 3)).alias("trigram"))
+    # tokenize once per doc: inside word_shingles' transform lambda an
+    # inline tokenizer would run again at every trigram position
+    tri = d.select("lang", tokens("text").alias("_tk")).select(
+        "lang",
+        F.explode(word_shingles("text", 3, pre_tokens="_tk")).alias("trigram"),
+    )
     counts = tri.groupBy("lang", "trigram").agg(F.count("*").alias("n"))
     w = Window.partitionBy("lang").orderBy(F.col("n").desc(), F.col("trigram").asc())
     return (
@@ -11679,9 +11681,8 @@ def docs_retrieval_pipeline_serve(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("embedding")
         .collect()[0][0]
     ]
-    sfx = sf_dir.strip("/").replace("/", "_")
-    p_path = f"{store_root(spark)}/etlutil_spark_postings_{sfx}"
-    v_path = f"{store_root(spark)}/etlutil_spark_ivfserve_{sfx}"
+    p_path = store_path(spark, "postings", _sf_key(sf_dir))
+    v_path = store_path(spark, "ivf", _sf_key(sf_dir))
     ensure_postings_store(spark, d, p_path, id_col="doc_id", text_col="text")
     ensure_ivf_store(spark, e, v_path, n_planes=6)
     lex = bm25_serve(spark, p_path, ["vector", "join", "stream"], k=20).select(
@@ -11756,9 +11757,8 @@ def docs_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()[0][0]
     ]
-    sfx = sf_dir.strip("/").replace("/", "_")
-    p_path = f"{store_root(spark)}/etlutil_spark_postings_{sfx}"
-    v_path = f"{store_root(spark)}/etlutil_spark_ivfserve_{sfx}"
+    p_path = store_path(spark, "postings", _sf_key(sf_dir))
+    v_path = store_path(spark, "ivf", _sf_key(sf_dir))
     ensure_postings_store(spark, d, p_path, id_col="doc_id", text_col="text")
     ensure_ivf_store(spark, e, v_path, n_planes=6)
     lex = bm25_serve(spark, p_path, ["vector", "join", "stream"], k=20)
@@ -11978,7 +11978,7 @@ def orders_bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sfx = sf_dir.strip("/").replace("/", "_").replace(".", "_")
     db = f"bktq_{sfx}"
-    loc = f"{store_root(spark)}/etlutil_spark_bucketed_{sfx}"
+    loc = store_path(spark, "bucketed", sfx)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
     ensure_bucketed_table(
         spark,
@@ -13043,7 +13043,7 @@ def sim_ivfadc_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC in its PRODUCTION serving shape (r9 verdict item 3):
     operators/clustering.py:ensure_ivfadc_index trains once and
     persists (vec_id, cell, codes) hive-partitioned by cell with the
-    model in an _ivfadc_model.json sidecar; ivfadc_serve then answers
+    model in the store's sidecar; ivfadc_serve then answers
     the query READ-ONLY — model sidecar loaded driver-side, per-cell
     ADC tables as literals, and a partition-PRUNED scan that lists only
     the 3 probed cell directories (the predicate is a PartitionFilter,
@@ -13064,10 +13064,7 @@ def sim_ivfadc_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in e.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc", _sf_key(sf_dir))
     ensure_ivfadc_index(
         spark, e, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -13105,10 +13102,7 @@ def sim_ivfadc_serve_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     }
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc", _sf_key(sf_dir))
     ensure_ivfadc_index(
         spark, e, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -13220,10 +13214,7 @@ def sim_ivfadc_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     base = e.where(F.col("vec_id") % 3 != 0)
     batch = e.where(F.col("vec_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_inc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc", "inc_" + _sf_key(sf_dir))
     ensure_ivfadc_index(
         spark, base, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -14621,10 +14612,7 @@ def _dedup_cluster_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_clstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "cluster", _sf_key(sf_dir))
     ensure_cluster_store(
         spark,
         d,
@@ -14653,10 +14641,7 @@ def _docs_quality_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_qstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "quality", _sf_key(sf_dir))
     ensure_quality_store(spark, d, path, id_col="doc_id", text_col="text")
     return path
 
@@ -14677,10 +14662,7 @@ def _dedup_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_mhstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "minhash", _sf_key(sf_dir))
     ensure_minhash_store(
         spark,
         d,
@@ -16151,10 +16133,7 @@ def orders_price_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = o.where(F.col("o_orderkey") % 3 != 0)
     batch = o.where(F.col("o_orderkey") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_hist_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "hist", _sf_key(sf_dir))
     bounds = geometric_bounds(1_000_000, 0.05)
     ensure_hist_store(spark, base, path, value_col="v", bounds=bounds)
     update_hist_store(spark, batch, path, batch_id="mod3")
@@ -16604,10 +16583,7 @@ def events_type_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = ev.where(F.col("event_id") % 3 != 0)
     batch = ev.where(F.col("event_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_hist_bytype_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "hist", "bytype_" + _sf_key(sf_dir))
     bounds = geometric_bounds(100_000, 0.05)
     ensure_hist_store(
         spark, base, path, value_col="v", bounds=bounds, key_col="event_type"

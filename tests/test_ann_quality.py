@@ -172,7 +172,7 @@ class TestIvfadcResidualRecall:
             ensure_ivfadc_index(
                 spark, df, "vec_id", "embedding", path, **kwargs
             )
-            == "written"
+            == "built"
         )
         assert (
             ensure_ivfadc_index(
@@ -198,5 +198,5 @@ class TestIvfadcResidualRecall:
             ensure_ivfadc_index(
                 spark, df, "vec_id", "embedding", path, **kwargs2
             )
-            == "written"
+            == "built"
         )

@@ -114,8 +114,11 @@ class TestEnsureBucketedTable:
         would declare a distribution the files don't have and silently
         mis-join. A store with no spec file at all (legacy / tampered)
         rebuilds too."""
+        import os
+
         from pyspark.sql import functions as F
 
+        from etlutil_spark.operators.store import store_dir
         from etlutil_spark.sources.io import ensure_bucketed_table
 
         # file-backed for a stable digest (see test_three_states)
@@ -128,7 +131,8 @@ class TestEnsureBucketedTable:
         try:
             kw4 = dict(bucket_by=["k"], n_buckets=4, path=str(path))
             assert ensure_bucketed_table(spark, df, t, **kw4) == "written"
-            assert (path / "_bucket_spec.json").exists()
+            spec = os.path.join(store_dir(spark, str(path), "bucketed"), "_bucket_spec.json")
+            assert os.path.exists(spec)
             spark.sql(f"DROP TABLE {t}")
             # same spec -> metadata-only reattach
             assert ensure_bucketed_table(spark, df, t, **kw4) == "reattached"
@@ -138,8 +142,10 @@ class TestEnsureBucketedTable:
             assert ensure_bucketed_table(spark, df, t, **kw8) == "written"
             assert spark.table(t).count() == 50
             spark.sql(f"DROP TABLE {t}")
-            # missing spec next to a _SUCCESS-marked store -> rebuild
-            (path / "_bucket_spec.json").unlink()
+            # missing spec in the current store version -> rebuild
+            os.remove(
+                os.path.join(store_dir(spark, str(path), "bucketed"), "_bucket_spec.json")
+            )
             assert ensure_bucketed_table(spark, df, t, **kw8) == "written"
             assert spark.table(t).count() == 50
         finally:
@@ -228,13 +234,14 @@ class TestEnsureServingStores:
         ).write.parquet(str(tmp_path / "src"))
         df = spark.read.parquet(str(tmp_path / "src"))
         path = str(tmp_path / "postings")
-        assert ensure_postings_store(spark, df, path, n_buckets=8) == "written"
+        assert ensure_postings_store(spark, df, path, n_buckets=8) == "built"
         assert ensure_postings_store(spark, df, path, n_buckets=8) == "reused"
         out = {r["doc_id"]: r["n_matched_terms"]
                for r in bm25_serve(spark, path, ["alpha", "beta"], k=10).collect()}
         assert out == {1: 2, 2: 1, 3: 1}
         # param change invalidates
-        assert ensure_postings_store(spark, df, path, n_buckets=4) == "written"
+        st = ensure_postings_store(spark, df, path, n_buckets=4)
+        assert (st, st.reason) == ("built", "params")
 
     def test_ivf_store_reuse(self, spark, tmp_path):
         from etlutil_spark.operators.similarity import ensure_ivf_store, ivf_topk
@@ -246,12 +253,13 @@ class TestEnsureServingStores:
         ).write.parquet(str(tmp_path / "src"))
         df = spark.read.parquet(str(tmp_path / "src"))
         path = str(tmp_path / "ivf")
-        assert ensure_ivf_store(spark, df, path, n_planes=3) == "written"
+        assert ensure_ivf_store(spark, df, path, n_planes=3) == "built"
         assert ensure_ivf_store(spark, df, path, n_planes=3) == "reused"
         got = ivf_topk(spark, path, [1.0, -1.0, 1.0, 0.5], k=3,
                        n_planes=3, multiprobe_hamming=1).collect()
         assert len(got) == 3
-        assert ensure_ivf_store(spark, df, path, n_planes=4) == "written"
+        st = ensure_ivf_store(spark, df, path, n_planes=4)
+        assert (st, st.reason) == ("built", "params")
 
     def test_postings_increment_equals_rebuild_and_absorbs_replay(
         self, spark, tmp_path
@@ -295,6 +303,7 @@ class TestEnsureServingStores:
         import json
         import os
 
+        from etlutil_spark.operators.store import store_dir
         from etlutil_spark.operators.text_analysis import (
             bm25_serve,
             ensure_postings_store,
@@ -318,14 +327,16 @@ class TestEnsureServingStores:
             for r in bm25_serve(spark, inc_path, ["alpha", "beta"], k=10).collect()
         ]
         # crash window: delta partition + sidecar entry committed, marker lost
-        os.remove(os.path.join(inc_path, "_applied_b1"))
+        os.remove(os.path.join(store_dir(spark, inc_path, "postings"), "_applied_b1"))
         assert update_postings_store(spark, batch, inc_path, batch_id="b1") == "applied"
         got = [
             tuple(r)
             for r in bm25_serve(spark, inc_path, ["alpha", "beta"], k=10).collect()
         ]
         assert got == want
-        meta = json.load(open(os.path.join(inc_path, "_postings_meta.json")))
+        meta = json.load(
+            open(os.path.join(store_dir(spark, inc_path, "postings"), "_postings_meta.json"))
+        )
         assert meta["deltas"] == {"b1": {"n_docs": 2, "sum_dl": 6}}
         # reserved / path-metacharacter batch ids fail loudly
         import pytest
@@ -339,6 +350,7 @@ class TestEnsureServingStores:
             ensure_ivfadc_index,
             update_ivfadc_index,
         )
+        from etlutil_spark.operators.store import store_dir
 
         df = spark.createDataFrame(
             [(i, [float(i % 7), float(-i % 5), 1.0, 0.5]) for i in range(40)],
@@ -351,11 +363,10 @@ class TestEnsureServingStores:
         ensure_ivfadc_index(spark, base, "vec_id", "embedding", path, **kw)
         assert update_ivfadc_index(spark, batch, path, batch_id="b1") == "applied"
         assert update_ivfadc_index(spark, batch, path, batch_id="b1") == "skipped"
-        assert spark.read.parquet(path).count() == 40
+        codes = spark.read.parquet(store_dir(spark, path, "ivfadc"))
+        assert codes.count() == 40
         # no index row duplicated by the replayed batch
-        assert (
-            spark.read.parquet(path).select("vec_id").distinct().count() == 40
-        )
+        assert codes.select("vec_id").distinct().count() == 40
 
     def test_ivfadc_crash_window_replay_does_not_duplicate(
         self, spark, tmp_path
@@ -371,6 +382,7 @@ class TestEnsureServingStores:
             ensure_ivfadc_index,
             update_ivfadc_index,
         )
+        from etlutil_spark.operators.store import store_dir
 
         df = spark.createDataFrame(
             [(i, [float(i % 7), float(-i % 5), 1.0, 0.5]) for i in range(40)],
@@ -383,12 +395,11 @@ class TestEnsureServingStores:
         ensure_ivfadc_index(spark, base, "vec_id", "embedding", path, **kw)
         assert update_ivfadc_index(spark, batch, path, batch_id="b1") == "applied"
         # crash window: delta committed, marker lost
-        os.remove(os.path.join(path, "_applied_b1"))
+        cur = store_dir(spark, path, "ivfadc")
+        os.remove(os.path.join(cur, "_applied_b1"))
         assert update_ivfadc_index(spark, batch, path, batch_id="b1") == "applied"
-        assert spark.read.parquet(path).count() == 40
-        assert (
-            spark.read.parquet(path).select("vec_id").distinct().count() == 40
-        )
+        assert spark.read.parquet(cur).count() == 40
+        assert spark.read.parquet(cur).select("vec_id").distinct().count() == 40
         for bad in ("base", "a/b", ""):
             with pytest.raises(ValueError):
                 update_ivfadc_index(spark, batch, path, batch_id=bad)

@@ -111,3 +111,20 @@ def test_registered_queries_identical_across_pin_modes(spark, sf_dir, ckpt_dir):
             assert all(r == runs[0] for r in runs), f"{name} differs across pin modes"
     finally:
         spark.conf.set("spark.etlutil.pinMode", old)
+
+
+def test_pin_keeps_scan_size_estimate(spark, tmp_path):
+    """A pinned parquet scan keeps the scan's sizeInBytes, so a join
+    against it is still planned from the real estimate."""
+    spark.range(2000).selectExpr("id", "id % 7 AS k").write.parquet(
+        str(tmp_path / "t")
+    )
+    scan = spark.read.parquet(str(tmp_path / "t"))
+
+    def size(df):
+        return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+    want = size(scan)
+    assert 0 < want < 2**63 - 1
+    assert size(scan.transform(pin)) == want
+    assert size(scan.transform(pin_eager)) == want

@@ -1027,12 +1027,11 @@ class TestClusterStore:
         import os
 
         from etlutil_spark.operators.dedup import (
-            _list_store_versions,
-            _store_fs,
             ensure_cluster_store,
             read_cluster_map,
             read_cluster_pairs,
         )
+        from etlutil_spark.operators.store import store_versions
 
         rows = [
             (1, "the quick brown fox jumps over the lazy dog tonight"),
@@ -1053,15 +1052,15 @@ class TestClusterStore:
         assert read_cluster_map(spark, path).count() >= 0
         # (b) pointer file deleted (simulates the sub-ms swap gap):
         # readers fall back to the newest complete version
-        jvm, fs, _ = _store_fs(spark, path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path + "/_current"), False)
+        jvm = spark._jvm
+        ptr = jvm.org.apache.hadoop.fs.Path(path + "/_current")
+        ptr.getFileSystem(spark._jsc.hadoopConfiguration()).delete(ptr, False)
         assert read_cluster_pairs(spark, path).count() == held_rows
         # and ensure() with matching params resolves + reuses, not rebuilds
         assert ensure_cluster_store(spark, d, path, n=4) == "reused"
         # (c) a third distinct build GCs v1: exactly current+previous remain
         assert ensure_cluster_store(spark, d, path, n=5) == "built"
-        versions = _list_store_versions(jvm, fs, path, "_cluster_meta.json")
-        assert len(versions) == 2
+        assert len(store_versions(spark, path, "cluster")) == 2
         # no builder scratch dirs leaked next to the store
         leaked = [
             p for p in os.listdir(tmp_path) if p.startswith("clstore3__build_")

@@ -795,3 +795,32 @@ class TestCatalogPythonEval:
             if bad:
                 offenders[name] = bad
         assert not offenders, f"Python eval in hot paths: {offenders}"
+
+
+class TestTokenizeOnce:
+    """word_shingles reads its token array at every n-gram position inside
+    a transform lambda, where common-subexpression elimination does not
+    reach: the shingling paths must tokenize in a child projection."""
+
+    @staticmethod
+    def _assert_one_tokenizer(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(lower(") == 1, plan
+        for line in plan.splitlines():
+            if "transform(" in line:
+                assert "split(lower(" not in line, plan
+
+    def test_shingle_table_and_sets(self, spark):
+        from etlutil_spark.operators.dedup import shingle_sets, shingle_table
+
+        docs = spark.createDataFrame(
+            [(1, "The quick brown fox jumps")], "doc_id long, text string"
+        )
+        self._assert_one_tokenizer(shingle_table(docs, "doc_id", "text"))
+        self._assert_one_tokenizer(shingle_sets(docs, "doc_id", "text"))
+        assert sorted(r.shingle for r in shingle_table(docs, "doc_id", "text").collect()) == [
+            "brown fox jumps", "quick brown fox", "the quick brown",
+        ]
+
+    def test_trigram_query(self, spark, sf_dir):
+        self._assert_one_tokenizer(QUERIES["docs_ngram_topk_per_lang"](spark, sf_dir))

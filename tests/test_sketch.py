@@ -320,14 +320,12 @@ class TestHistStore:
         # silently reusing; the merged readout is unchanged. A file-backed
         # input with a stable digest returns 'reused' here
         # (test_file_backed_input_reuses below).
-        assert ensure_hist_store(
-            spark, base, path, value_col="v", bounds=self.BOUNDS
-        ) == "rebased"
+        st = ensure_hist_store(spark, base, path, value_col="v", bounds=self.BOUNDS)
+        assert (st, st.reason) == ("built", "in-memory")
         assert self._hist_rows(spark, path) == direct
         # param change rebuilds (and wipes old deltas)
-        assert ensure_hist_store(
-            spark, base, path, value_col="v", bounds=self.BOUNDS[:-1]
-        ) == "built"
+        st = ensure_hist_store(spark, base, path, value_col="v", bounds=self.BOUNDS[:-1])
+        assert (st, st.reason) == ("built", "params")
 
     def test_file_backed_input_reuses(self, spark, tmp_path):
         from etlutil_spark.operators.sketch import ensure_hist_store
@@ -465,7 +463,9 @@ class TestHistStore:
         # simulate the crash window: job committed, marker lost
         import os
 
-        os.remove(os.path.join(path, "_applied_b1"))
+        from etlutil_spark.operators.store import store_dir
+
+        os.remove(os.path.join(store_dir(spark, path, "hist"), "_applied_b1"))
         assert update_hist_store(spark, batch, path, batch_id="b1") == "applied"
         assert self._hist_rows(spark, path) == want
 
@@ -493,10 +493,9 @@ class TestHistStore:
         ).write.mode("overwrite").parquet(src)
         df2 = spark.read.parquet(src)
         # digest-only mismatch: same contract, regenerated data — the
-        # base histogram is rebuilt in place ('rebased', not a full wipe)
-        assert ensure_hist_store(
-            spark, df2, path, value_col="v", bounds=self.BOUNDS
-        ) == "rebased"
+        # base histogram is rebuilt and applied batches are carried over
+        st = ensure_hist_store(spark, df2, path, value_col="v", bounds=self.BOUNDS)
+        assert (st, st.reason) == ("built", "data")
         # and the store now serves the NEW data's histogram
         from etlutil_spark.operators.sketch import log_histogram
 
@@ -519,6 +518,7 @@ class TestHistStore:
             log_histogram,
             update_hist_store,
         )
+        from etlutil_spark.operators.store import store_dir
 
         src = str(tmp_path / "src_rebase")
         spark.createDataFrame([(v,) for v in range(0, 30)], "v long").coalesce(
@@ -536,9 +536,8 @@ class TestHistStore:
             1
         ).write.mode("overwrite").parquet(src)
         df2 = spark.read.parquet(src)
-        assert ensure_hist_store(
-            spark, df2, path, value_col="v", bounds=self.BOUNDS
-        ) == "rebased"
+        st = ensure_hist_store(spark, df2, path, value_col="v", bounds=self.BOUNDS)
+        assert (st, st.reason) == ("built", "data")
         # b1's contribution survived: store == new base + batch, and the
         # replay marker still short-circuits a redelivery
         direct = sorted(
@@ -548,14 +547,13 @@ class TestHistStore:
             ).collect()
         )
         assert self._hist_rows(spark, path) == direct
-        assert os.path.exists(os.path.join(path, "_applied_b1"))
+        assert os.path.exists(os.path.join(store_dir(spark, path, "hist"), "_applied_b1"))
         assert update_hist_store(spark, batch, path, batch_id="b1") == "skipped"
         # a PARAM change (different bounds) is a full wipe: deltas are
         # bucketed under an incompatible contract
-        assert ensure_hist_store(
-            spark, df2, path, value_col="v", bounds=self.BOUNDS[:-2]
-        ) == "built"
-        assert not os.path.exists(os.path.join(path, "_applied_b1"))
+        st = ensure_hist_store(spark, df2, path, value_col="v", bounds=self.BOUNDS[:-2])
+        assert (st, st.reason) == ("built", "params")
+        assert not os.path.exists(os.path.join(store_dir(spark, path, "hist"), "_applied_b1"))
 
     def test_reader_rejects_schema_surprise(self, spark, tmp_path):
         """A stray column in a delta must fail loudly, not silently
@@ -566,13 +564,14 @@ class TestHistStore:
             ensure_hist_store,
             read_hist_store,
         )
+        from etlutil_spark.operators.store import store_dir
 
         base = spark.createDataFrame([(v,) for v in range(0, 30)], "v long")
         path = str(tmp_path / "hist_strict")
         ensure_hist_store(spark, base, path, value_col="v", bounds=self.BOUNDS)
         spark.createDataFrame(
             [(1, 1, 3, "x")], "bucket long, lo long, c long, stray string"
-        ).write.mode("overwrite").parquet(path + "/delta=bad")
+        ).write.mode("overwrite").parquet(store_dir(spark, path, "hist") + "/delta=bad")
         with pytest.raises(Exception, match="does not match its metadata"):
             read_hist_store(spark, path).collect()
 
@@ -620,15 +619,15 @@ class TestHistStore:
         import os
 
         from etlutil_spark.operators.sketch import ensure_hist_store
+        from etlutil_spark.operators.store import store_dir
 
         d = spark.createDataFrame([(v,) for v in range(10)], "v long")
         path = str(tmp_path / "hist_meta")
         ensure_hist_store(spark, d, path, value_col="v", bounds=self.BOUNDS)
-        with open(os.path.join(path, "_hist_meta.json"), "w") as fh:
+        with open(os.path.join(store_dir(spark, path, "hist"), "_hist_meta.json"), "w") as fh:
             fh.write('{"params": {"value_col')  # truncated mid-write
-        assert ensure_hist_store(
-            spark, d, path, value_col="v", bounds=self.BOUNDS
-        ) == "built"
+        st = ensure_hist_store(spark, d, path, value_col="v", bounds=self.BOUNDS)
+        assert (st, st.reason) == ("built", "corrupt")
 
 
 class TestWeightedSketches:

@@ -1,0 +1,278 @@
+"""The one store contract (operators/store.py), checked on every family.
+
+Each of the eight ``ensure_*`` families goes through the same six cases:
+reuse, a param change, a source data change, a corrupt sidecar, a missing
+sidecar and an in-memory source. Every call must report the status and the
+reason the contract defines, and after every rebuild the family's reader
+must resolve to the new version.
+"""
+
+from __future__ import annotations
+
+import ast
+import inspect
+import json
+import os
+import sys
+import uuid
+
+import pytest
+from pyspark.sql import functions as F
+
+from etlutil_spark.operators import dedup, text_analysis
+from etlutil_spark.operators import store as S
+
+DOCS = [
+    (1, "s1", "en", 40, "the quick brown fox jumps over the lazy dog tonight"),
+    (2, "s1", "en", 40, "the quick brown fox jumps over the lazy dog today"),
+    (3, "s2", "en", 40, "completely different text with nothing shared here"),
+    (4, "s2", "en", 40, "the quick brown fox jumps over the lazy dog tonight"),
+    (5, "s3", "en", 40, "alpha beta gamma delta epsilon zeta eta theta"),
+    (6, "s3", "en", 40, "alpha beta gamma delta epsilon zeta eta theta iota"),
+]
+DOCS_SCHEMA = "doc_id bigint, source string, lang string, n_chars int, text string"
+VECS = [(i, [float(i % 5), float(-i % 3), 1.0, float(i % 2)]) for i in range(24)]
+VECS_SCHEMA = "vec_id bigint, embedding array<double>"
+BOUNDS = [0, 1, 2, 4, 8, 16, 32]
+
+
+def _docs_family(ensure_fn, reader, a, b):
+    def ensure(spark, src, path, variant, tag):
+        return ensure_fn(spark, src, path, **(a if variant == 0 else b))
+
+    return ensure, reader, DOCS, DOCS_SCHEMA
+
+
+def _read_cluster(spark, path, tag):
+    from etlutil_spark.operators.dedup import read_cluster_pairs
+
+    return read_cluster_pairs(spark, path)
+
+
+def _read_minhash(spark, path, tag):
+    from etlutil_spark.operators.dedup import read_minhash_signatures
+
+    return read_minhash_signatures(spark, path)
+
+
+def _read_postings(spark, path, tag):
+    from etlutil_spark.operators.text_analysis import bm25_serve
+
+    return bm25_serve(spark, path, ["quick", "alpha"], k=5)
+
+
+def _read_quality(spark, path, tag):
+    from etlutil_spark.operators.text_analysis import read_quality_scores
+
+    return read_quality_scores(spark, path)
+
+
+def _ensure_ivf(spark, src, path, variant, tag):
+    from etlutil_spark.operators.similarity import ensure_ivf_store
+
+    return ensure_ivf_store(spark, src, path, n_planes=3 + variant)
+
+
+def _read_ivf(spark, path, tag):
+    from etlutil_spark.operators.similarity import ivf_topk
+
+    return ivf_topk(spark, path, [1.0, -1.0, 1.0, 0.0], k=3, n_planes=3)
+
+
+def _ensure_ivfadc(spark, src, path, variant, tag):
+    from etlutil_spark.operators.clustering import ensure_ivfadc_index
+
+    return ensure_ivfadc_index(
+        spark, src, "vec_id", "embedding", path,
+        k=2, iters=2, m=2, ksub=4 - variant * 2, pq_iters=1,
+    )
+
+
+def _read_ivfadc(spark, path, tag):
+    from etlutil_spark.operators.clustering import ivfadc_serve
+
+    return ivfadc_serve(spark, path, [1.0, -1.0, 1.0, 0.0], nprobe=1, topk=3)
+
+
+def _ensure_hist(spark, src, path, variant, tag):
+    from etlutil_spark.operators.sketch import ensure_hist_store
+
+    return ensure_hist_store(
+        spark, src.select(F.col("vec_id").alias("v")), path,
+        value_col="v", bounds=BOUNDS[: len(BOUNDS) - variant],
+    )
+
+
+def _read_hist(spark, path, tag):
+    from etlutil_spark.operators.sketch import read_hist_store
+
+    return read_hist_store(spark, path)
+
+
+def _ensure_bucketed(spark, src, path, variant, tag):
+    from etlutil_spark.sources.io import ensure_bucketed_table
+
+    return ensure_bucketed_table(
+        spark, src.select("vec_id"), f"default.contract_{tag}",
+        bucket_by=["vec_id"], n_buckets=4 - variant * 2, path=path,
+    )
+
+
+def _read_bucketed(spark, path, tag):
+    return spark.table(f"default.contract_{tag}")
+
+
+FAMILY_CASES = {
+    "cluster": _docs_family(dedup.ensure_cluster_store, _read_cluster, {"n": 3}, {"n": 4}),
+    "minhash": _docs_family(dedup.ensure_minhash_store, _read_minhash, {"bands": 8}, {"bands": 4}),
+    "postings": _docs_family(text_analysis.ensure_postings_store, _read_postings, {"n_buckets": 8}, {"n_buckets": 4}),
+    "ivf": (_ensure_ivf, _read_ivf, VECS, VECS_SCHEMA),
+    "ivfadc": (_ensure_ivfadc, _read_ivfadc, VECS, VECS_SCHEMA),
+    "hist": (_ensure_hist, _read_hist, VECS, VECS_SCHEMA),
+    "quality": _docs_family(
+        text_analysis.ensure_quality_store, _read_quality, {"threshold": 0.55}, {"threshold": 0.9}
+    ),
+    "bucketed": (_ensure_bucketed, _read_bucketed, VECS, VECS_SCHEMA),
+}
+# the bucketed table reports its catalog state in place of the status
+BUILT = {"built", "written"}
+REUSED = {"reused", "catalog", "reattached"}
+CASES = ("reuse", "params", "data", "corrupt", "missing", "in-memory")
+
+
+def test_registry_lists_every_family():
+    assert set(FAMILY_CASES) == set(S.FAMILIES)
+
+
+@pytest.mark.parametrize("case", CASES)
+@pytest.mark.parametrize("family", sorted(FAMILY_CASES))
+def test_store_contract(spark, tmp_path, family, case):
+    ensure, reader, rows, schema = FAMILY_CASES[family]
+    tag = f"{family}_{case}".replace("-", "_")
+    src_dir = str(tmp_path / "src")
+    path = str(tmp_path / "store")
+
+    def source(n=len(rows)):
+        if case == "in-memory":
+            return spark.createDataFrame(rows[:n], schema)
+        spark.createDataFrame(rows[:n], schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(src_dir)
+        return spark.read.parquet(src_dir)
+
+    src = source()
+    try:
+        first = ensure(spark, src, path, 0, tag)
+        assert first in BUILT and first.reason == "missing"
+        before = S.store_dir(spark, path, family)
+        sidecar = os.path.join(before, S.FAMILIES[family].sidecar)
+        assert json.load(open(sidecar))["params"]["data"]
+        if case == "reuse":
+            st = ensure(spark, src, path, 0, tag)
+            assert st in REUSED and st.reason is None
+            assert S.store_dir(spark, path, family) == before
+            return
+        if case == "params":
+            st = ensure(spark, src, path, 1, tag)
+        elif case == "data":
+            st = ensure(spark, source(len(rows) - 2), path, 0, tag)
+        elif case == "corrupt":
+            with open(sidecar, "w") as fh:
+                fh.write('{"params": {"trunc')
+            st = ensure(spark, src, path, 0, tag)
+        elif case == "missing":
+            os.remove(sidecar)
+            st = ensure(spark, src, path, 0, tag)
+        else:
+            st = ensure(spark, src, path, 0, tag)
+        assert st in BUILT and st.reason == case
+        after = S.store_dir(spark, path, family)
+        assert after != before
+        # the reader resolves the new version, and only it
+        version = os.path.basename(after)
+        files = reader(spark, path, tag).inputFiles()
+        assert files and all(version in f for f in files), files
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS default.contract_{tag}")
+
+
+def test_rebuild_keeps_one_previous_version(spark, tmp_path):
+    """A reader holding the previous version keeps its files across one
+    rebuild; the version before that is deleted."""
+    from etlutil_spark.operators.similarity import ensure_ivf_store
+
+    spark.createDataFrame(VECS, VECS_SCHEMA).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    path = str(tmp_path / "ivf")
+    for planes in (2, 3, 4):
+        ensure_ivf_store(spark, src, path, n_planes=planes)
+    versions = S.store_versions(spark, path, "ivf")
+    assert len(versions) == 2
+    assert S.store_dir(spark, path, "ivf").endswith(versions[-1])
+    assert sorted(n for n in os.listdir(path) if n.startswith("v_")) == versions
+    # no builder scratch left next to the store
+    assert [n for n in os.listdir(tmp_path) if "__build_" in n] == []
+
+
+def test_warm_minhash_read_runs_no_job(spark, sf_dir, tmp_path, monkeypatch):
+    """The sidecar records each table's schema, so a warm store read plans
+    without a schema-inference job: dedup_minhash_lsh's builder runs none."""
+    from etlutil_spark.queries import QUERIES
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(tmp_path))  # a fresh store
+    sc = spark.sparkContext
+    QUERIES["dedup_minhash_lsh"](spark, sf_dir).collect()  # warm
+    group = f"warm-minhash-builder-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "warm minhash builder")
+    try:
+        QUERIES["dedup_minhash_lsh"](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_registry_covers_every_query_store_path(spark, sf_dir, monkeypatch):
+    """Every store an ensure_* call in queries.py builds lives under
+    store_root(spark) with its family's registered prefix, and bench.py's
+    cold-run reset clears exactly the registered prefixes, so it reaches
+    every one of them."""
+    import bench
+    from etlutil_spark import queries as Q
+    from etlutil_spark.operators.util import store_root
+
+    def calls_ensure(fn: ast.FunctionDef) -> bool:
+        return any(
+            isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id.startswith("ensure_")
+            and n.func.id != "ensure_min_partitions"
+            for n in ast.walk(fn)
+        )
+
+    tree = ast.parse(inspect.getsource(Q))
+    callers = [
+        node.name
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef) and calls_ensure(node)
+    ]
+    assert len(callers) >= len(S.FAMILIES)
+    seen = []
+
+    def spy(spark, path, family, params, source_df, build_fn):
+        seen.append((family, path))
+        return real(spark, path, family, params, source_df, build_fn)
+
+    real = S.ensure_store
+    for name, mod in list(sys.modules.items()):
+        if name.startswith("etlutil_spark") and getattr(mod, "ensure_store", None) is real:
+            monkeypatch.setattr(mod, "ensure_store", spy)
+    for name in callers:
+        getattr(Q, name)(spark, sf_dir)
+    root = store_root(spark)
+    assert {f for f, _ in seen} == set(S.FAMILIES)
+    for family, path in seen:
+        top = os.path.relpath(path, root).split(os.sep)[0]
+        assert not top.startswith(".."), path
+        assert top.startswith(S.FAMILIES[family].prefix), (family, path)
+    assert bench._STORE_PREFIXES == tuple(f.prefix for f in S.FAMILIES.values())

@@ -61,6 +61,7 @@ class TestStreamingPostingsMaintenance:
         assert got == want
 
     def test_retried_batch_id_is_absorbed(self, spark, tmp_path):
+        from etlutil_spark.operators.store import store_dir
         from etlutil_spark.operators.text_analysis import (
             ensure_postings_store,
             postings_update_sink,
@@ -81,9 +82,9 @@ class TestStreamingPostingsMaintenance:
         )
         sink = postings_update_sink(idx)
         sink(batch, 7)
-        before = spark.read.parquet(idx).count()
+        before = spark.read.parquet(store_dir(spark, idx, "postings")).count()
         sink(batch, 7)  # foreachBatch retry delivers the SAME batch_id
-        assert spark.read.parquet(idx).count() == before
+        assert spark.read.parquet(store_dir(spark, idx, "postings")).count() == before
         # and the marker is the batch-scoped one
         assert (
             update_postings_store(spark, batch, idx, batch_id="stream_7")

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etlutil_spark.operators.store import store_dir
 from etlutil_spark.operators.text_analysis import (
     ensure_quality_store,
     gopher_defaults,
@@ -42,7 +43,7 @@ class TestQualityStore:
     def test_store_equals_live(self, spark, tmp_path):
         d = _docs(spark, tmp_path)
         path = str(tmp_path / "qstore")
-        assert ensure_quality_store(spark, d, path) == "written"
+        assert ensure_quality_store(spark, d, path) == "built"
         live = gopher_quality_filter(
             quality_model_score(d, "text"), "text"
         ).select(
@@ -58,23 +59,26 @@ class TestQualityStore:
     def test_reuse_and_invalidation(self, spark, tmp_path):
         d = _docs(spark, tmp_path)
         path = str(tmp_path / "qstore")
-        assert ensure_quality_store(spark, d, path) == "written"
+        assert ensure_quality_store(spark, d, path) == "built"
         # same params + unchanged files: metadata-only
         assert ensure_quality_store(spark, d, path) == "reused"
         # param change rebuilds
-        assert ensure_quality_store(spark, d, path, threshold=0.9) == "written"
+        st = ensure_quality_store(spark, d, path, threshold=0.9)
+        assert (st, st.reason) == ("built", "params")
         # regenerated data at the same path rebuilds (digest mismatch)
         d.limit(3).write.mode("overwrite").parquet(str(tmp_path / "docs"))
         d2 = spark.read.parquet(str(tmp_path / "docs"))
-        assert ensure_quality_store(spark, d2, path, threshold=0.9) == "written"
+        st = ensure_quality_store(spark, d2, path, threshold=0.9)
+        assert (st, st.reason) == ("built", "data")
 
     def test_corrupt_meta_rebuilds(self, spark, tmp_path):
         d = _docs(spark, tmp_path)
         path = str(tmp_path / "qstore")
-        assert ensure_quality_store(spark, d, path) == "written"
-        with open(str(tmp_path / "qstore" / "_quality_meta.json"), "w") as fh:
+        assert ensure_quality_store(spark, d, path) == "built"
+        with open(f"{store_dir(spark, path, 'quality')}/_quality_meta.json", "w") as fh:
             fh.write('{"params": {"trunc')  # crash-torn sidecar
-        assert ensure_quality_store(spark, d, path) == "written"
+        st = ensure_quality_store(spark, d, path)
+        assert (st, st.reason) == ("built", "corrupt")
 
     def test_in_memory_input_always_rebuilds(self, spark, tmp_path):
         # per-call sentinel digest: no silent stale serving for inputs
@@ -84,5 +88,6 @@ class TestQualityStore:
             "doc_id bigint, source string, lang string, n_chars int, text string",
         )
         path = str(tmp_path / "qstore")
-        assert ensure_quality_store(spark, d, path) == "written"
-        assert ensure_quality_store(spark, d, path) == "written"
+        assert ensure_quality_store(spark, d, path) == "built"
+        st = ensure_quality_store(spark, d, path)
+        assert (st, st.reason) == ("built", "in-memory")
