@@ -26,6 +26,17 @@ def dot(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def sq_l2(u: Column | str, v: Column | str) -> Column:
+    """Exact squared L2 distance of two bigint arrays: a left-to-right
+    integer fold, so any engine that folds the same way matches bit for
+    bit (the k-means, IVF and SemDeDup distance)."""
+    return F.aggregate(
+        F.zip_with(_c(u), _c(v), lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
 def _sql_double(v: float) -> str:
     """Round-trip double literal for Spark SQL (D suffix = DoubleType)."""
     return f"{float(v)!r}D"

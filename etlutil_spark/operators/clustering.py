@@ -47,7 +47,7 @@ from etlutil_spark.operators.store import (
 from etlutil_spark.operators.util import pin
 from pyspark.sql import functions as F
 
-from etlutil_spark.functions.vectors import bigint_array_lit
+from etlutil_spark.functions.vectors import bigint_array_lit, sq_l2
 
 DEFAULT_SCALE = 1_000_000
 
@@ -86,16 +86,54 @@ def _best_cluster(centroids: list[list[int]], qv: Column | str = "_qv") -> Colum
     cent = bigint_array_lit(centroids)
     dists = F.transform(
         cent,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(qv, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("d"),
-            i.cast("bigint").alias("c"),
-        ),
+        lambda c, i: F.struct(sq_l2(qv, c).alias("d"), i.cast("bigint").alias("c")),
     )
     return F.array_min(dists)
+
+
+def _py_sq_l2(u: list[int], v: list[int]) -> int:
+    """Driver-side twin of :func:`sq_l2` (Python ints are exact)."""
+    return sum((x - y) * (x - y) for x, y in zip(u, v))
+
+
+def _quantize_query(query_vec: list[float], scale: int) -> list[int]:
+    """Driver-side twin of :func:`_quantize` for a literal query vector."""
+    return [math.floor(float(x) * scale) for x in query_vec]
+
+
+def _probe_cells(
+    query_vec: list[float], centroids: list[list[int]], nprobe: int, scale: int
+) -> tuple[list[int], list[int]]:
+    """(quantized query, the ``nprobe`` cells nearest it), ties to the
+    smaller cell id."""
+    qv = _quantize_query(query_vec, scale)
+    by_dist = sorted((_py_sq_l2(qv, c), j) for j, c in enumerate(centroids))
+    return qv, [int(j) for _, j in by_dist[:nprobe]]
+
+
+def _adc_tables(qv: list[int], codebooks: list[list[list[int]]]) -> list[list[int]]:
+    """Per-subspace ADC lookup tables (m x ksub ints): the squared
+    distance from each query subvector to each codebook centroid."""
+    dsub = len(qv) // len(codebooks)
+    return [
+        [_py_sq_l2(qv[s * dsub : (s + 1) * dsub], c) for c in cb]
+        for s, cb in enumerate(codebooks)
+    ]
+
+
+def _pq_code(codebooks: list[list[list[int]]], s: int, dsub: int) -> Column:
+    """Subspace ``s``'s PQ code of the ``_qv`` column."""
+    return _best_cluster(codebooks[s], F.slice("_qv", s * dsub + 1, dsub))["c"]
+
+
+def _adc_sum(m: int, table, code) -> Column:
+    """The ADC distance: the sum over subspaces ``s`` of
+    ``table(s)[code(s)]``, both Column-valued, folded left to right."""
+    adc = None
+    for s in range(m):
+        term = F.element_at(table(s), (code(s) + 1).cast("int"))
+        adc = term if adc is None else adc + term
+    return adc
 
 
 def kmeans_fit(
@@ -185,9 +223,7 @@ def kmeans_assign(
     literals, so a consumer pays zero shuffles.
     """
     centroids = kmeans_fit(df, id_col, vec_col, k=k, iters=iters, scale=scale)
-    q = df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(vec_col, scale).alias("_qv")
-    )
+    q = _quantized_corpus(df, id_col, vec_col, scale)
     best = _best_cluster(centroids)
     return q.select(F.col(id_col), best["c"].alias("cluster"), best["d"].alias("dist"))
 
@@ -233,25 +269,12 @@ def ivf_kmeans_topk(
         raise ValueError(
             f"query dim {len(query_vec)} != corpus dim {len(centroids[0])}"
         )
-    qv = [math.floor(float(x) * scale) for x in query_vec]
-    by_dist = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, c)), j) for j, c in enumerate(centroids)
-    )
-    probes = [j for _, j in by_dist[:nprobe]]
-
-    q = df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(vec_col, scale).alias("_qv")
-    )
-    cell = _best_cluster(centroids)["c"]
-    qdist = F.aggregate(
-        F.zip_with("_qv", bigint_array_lit(qv), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    qv, probes = _probe_cells(query_vec, centroids, nprobe, scale)
+    q = _quantized_corpus(df, id_col, vec_col, scale)
     return (
-        q.withColumn("_cell", cell)
-        .where(F.col("_cell").isin([int(p) for p in probes]))
-        .select(F.col(id_col), qdist.alias("dist"))
+        q.withColumn("_cell", _best_cluster(centroids)["c"])
+        .where(F.col("_cell").isin(probes))
+        .select(F.col(id_col), sq_l2("_qv", bigint_array_lit(qv)).alias("dist"))
         .orderBy(F.col("dist").asc(), F.col(id_col).asc())
         .limit(topk)
     )
@@ -305,9 +328,7 @@ def semdedup(
     if max_cell_share is not None and not (0.0 < max_cell_share <= 1.0):
         raise ValueError(f"max_cell_share must be in (0, 1], got {max_cell_share}")
     centroids = kmeans_fit(df, id_col, vec_col, k=k, iters=iters, scale=scale)
-    q = df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(vec_col, scale).alias("_qv")
-    )
+    q = _quantized_corpus(df, id_col, vec_col, scale)
     assigned = q.select(
         F.col(id_col), F.col("_qv"), _best_cluster(centroids)["c"].alias("cluster")
     # both self-join sides and the final left join read this projection —
@@ -331,17 +352,12 @@ def semdedup(
                 "Raise k, re-fit, or split the hot cell before deduping."
             )
     a, b = assigned.alias("a"), assigned.alias("b")
-    dist = F.aggregate(
-        F.zip_with("a._qv", "b._qv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
     near = (
         a.join(
             b,
             (F.col("a.cluster") == F.col("b.cluster"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            & (dist <= F.lit(int(radius))),
+            & (sq_l2("a._qv", "b._qv") <= F.lit(int(radius))),
         )
         .groupBy(F.col(f"b.{id_col}").alias(id_col))
         .agg(F.count("*").alias("n_near_smaller"))
@@ -496,23 +512,13 @@ def pq_adc_topk(
         df, id_col, vec_col, m=m, ksub=ksub, iters=iters, scale=scale
     )
 
-    qv = [math.floor(float(x) * scale) for x in query_vec]
-    tables = [
-        [sum((qv[s * dsub + t] - c[t]) ** 2 for t in range(dsub)) for c in cb]
-        for s, cb in enumerate(codebooks)
-    ]
-
-    q = df.where(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()).select(
-        F.col(id_col), _quantize(vec_col, scale).alias("_qv")
+    tables = _adc_tables(_quantize_query(query_vec, scale), codebooks)
+    adc = _adc_sum(
+        m, lambda s: bigint_array_lit(tables[s]), lambda s: _pq_code(codebooks, s, dsub)
     )
-    adc = None
-    for s in range(m):
-        subq = F.slice("_qv", s * dsub + 1, dsub)
-        code = _best_cluster(codebooks[s], subq)["c"]
-        term = F.element_at(bigint_array_lit(tables[s]), (code + 1).cast("int"))
-        adc = term if adc is None else adc + term
     return (
-        q.select(F.col(id_col), adc.alias("adc_dist"))
+        _quantized_corpus(df, id_col, vec_col, scale)
+        .select(F.col(id_col), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(topk)
     )
@@ -576,12 +582,7 @@ def ivfadc_topk(
     if d % m != 0:
         raise ValueError(f"vector dim {d} not divisible by m={m} subspaces")
     dsub = d // m
-    qv = [math.floor(float(x) * scale) for x in query_vec]
-    by_dist = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, c)), j)
-        for j, c in enumerate(centroids)
-    )
-    probes = [int(j) for _, j in by_dist[:nprobe]]
+    qv, probes = _probe_cells(query_vec, centroids, nprobe, scale)
 
     cell = _best_cluster(centroids)["c"]
     cent_lit = bigint_array_lit(centroids)
@@ -609,34 +610,18 @@ def ivfadc_topk(
         # per-probed-cell query tables: the query's residual against
         # cell j scores against the shared codebooks; non-probed cells
         # keep zero rows (they are filtered before the lookup)
-        tables = _ivfadc_query_tables(
-            query_vec, centroids, codebooks, probes, scale
-        )
-        tbl_lit = bigint_array_lit(tables)
+        tables = _ivfadc_query_tables(qv, centroids, codebooks, probes)
     else:
         enc = q.select(
             F.col(id_col), cell.alias("_cell"), F.col("_qv")
         ).transform(pin)
         codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
-        flat = [
-            [
-                sum((qv[s * dsub + t] - c[t]) ** 2 for t in range(dsub))
-                for c in cb
-            ]
-            for s, cb in enumerate(codebooks)
-        ]
-        tables = [flat for _ in range(k)]  # cell-independent tables
-        tbl_lit = bigint_array_lit(tables)
+        tables = [_adc_tables(qv, codebooks)] * k  # cell-independent tables
 
-    cell_tbl = F.element_at(tbl_lit, (F.col("_cell") + 1).cast("int"))
-    adc = None
-    for s in range(m):
-        subq = F.slice("_qv", s * dsub + 1, dsub)
-        code = _best_cluster(codebooks[s], subq)["c"]
-        term = F.element_at(
-            F.element_at(cell_tbl, s + 1), (code + 1).cast("int")
-        )
-        adc = term if adc is None else adc + term
+    cell_tbl = F.element_at(bigint_array_lit(tables), (F.col("_cell") + 1).cast("int"))
+    adc = _adc_sum(
+        m, lambda s: F.element_at(cell_tbl, s + 1), lambda s: _pq_code(codebooks, s, dsub)
+    )
     return (
         enc.where(F.col("_cell").isin(probes))
         .select(F.col(id_col), adc.alias("adc_dist"))
@@ -646,28 +631,19 @@ def ivfadc_topk(
 
 
 def _ivfadc_query_tables(
-    query_vec: list[float],
+    qv: list[int],
     centroids: list[list[int]],
     codebooks: list[list[list[int]]],
     probes: list[int],
-    scale: int,
 ) -> list[list[list[int]]]:
-    """Per-probed-cell ADC lookup tables (k x m x ksub ints; non-probed
-    cells stay zero — they are filtered before any lookup). Shared by
-    ivfadc_topk and ivfadc_serve so train-time and serve-time tables
-    cannot drift."""
-    k, m, ksub = len(centroids), len(codebooks), len(codebooks[0])
-    d = len(centroids[0])
-    dsub = d // m
-    qv = [math.floor(float(x) * scale) for x in query_vec]
-    tables = [[[0] * ksub for _ in range(m)] for _ in range(k)]
+    """Per-probed-cell ADC lookup tables of the quantized query's residual
+    (k x m x ksub ints; non-probed cells stay zero — they are filtered
+    before any lookup). Shared by ivfadc_topk and the serving paths so
+    train-time and serve-time tables cannot drift."""
+    m, ksub = len(codebooks), len(codebooks[0])
+    tables = [[[0] * ksub for _ in range(m)] for _ in centroids]
     for j in probes:
-        qres = [a - b for a, b in zip(qv, centroids[j])]
-        for s, cb in enumerate(codebooks):
-            tables[j][s] = [
-                sum((qres[s * dsub + t] - c[t]) ** 2 for t in range(dsub))
-                for c in cb
-            ]
+        tables[j] = _adc_tables([a - b for a, b in zip(qv, centroids[j])], codebooks)
     return tables
 
 
@@ -690,10 +666,7 @@ def _write_codes(
     Repartitioning by cell first gives each cell dir one well-sized file
     per shuffle partition (the build_ivf_store writer-explosion guard)."""
     codes = F.array(
-        *[
-            _best_cluster(cb, F.slice("_qv", s * dsub + 1, dsub))["c"].cast("int")
-            for s, cb in enumerate(codebooks)
-        ]
+        *[_pq_code(codebooks, s, dsub).cast("int") for s in range(len(codebooks))]
     )
     (
         enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
@@ -769,39 +742,45 @@ def ivfadc_serve(
     Bit-identical to :func:`ivfadc_topk` with the same params by
     construction: codes are assigned by the same integer argmin at
     write time, and the tables come from the shared helper."""
-    store = open_store(spark, path, "ivfadc", required=True)
-    model = store.meta
-    params = model["params"]
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    k, m, scale = params["k"], params["m"], params["scale"]
-    id_col = params["id_col"]
-    if not 1 <= nprobe <= k:
-        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
-    d = len(centroids[0])
-    if len(query_vec) != d:
-        raise ValueError(f"query dim {len(query_vec)} != index dim {d}")
-    qv = [math.floor(float(x) * scale) for x in query_vec]
-    by_dist = sorted(
-        (sum((a - b) * (a - b) for a, b in zip(qv, c)), j)
-        for j, c in enumerate(centroids)
-    )
-    probes = [int(j) for _, j in by_dist[:nprobe]]
-    tables = _ivfadc_query_tables(query_vec, centroids, codebooks, probes, scale)
-    tbl_lit = bigint_array_lit(tables)
-    cell_tbl = F.element_at(tbl_lit, (F.col("cell") + 1).cast("int"))
-    adc = None
-    for s in range(m):
-        code = F.element_at("codes", s + 1)
-        term = F.element_at(
-            F.element_at(cell_tbl, s + 1), (code + 1).cast("int")
-        )
-        adc = term if adc is None else adc + term
+    store = _open_ivfadc(spark, path, nprobe)
+    id_col = store.meta["params"]["id_col"]
+    probes, tables = _serve_tables(store.meta, query_vec, nprobe, "query")
+    cell_tbl = F.element_at(bigint_array_lit(tables), (F.col("cell") + 1).cast("int"))
     return (
         read_table(spark, store)
         .where(F.col("cell").isin(probes))
-        .select(F.col(id_col), adc.alias("adc_dist"))
+        .select(F.col(id_col), _stored_adc(store.meta, cell_tbl).alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(topk)
+    )
+
+
+def _open_ivfadc(spark, path: str, nprobe: int):
+    """The serving preamble: open the store and check ``nprobe``."""
+    store = open_store(spark, path, "ivfadc", required=True)
+    k = store.meta["params"]["k"]
+    if not 1 <= nprobe <= k:
+        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
+    return store
+
+
+def _serve_tables(model: dict, query_vec: list[float], nprobe: int, what: str):
+    """(probed cells, per-cell ADC tables) of one query against a stored
+    model; ``what`` names the query in the dimension error."""
+    centroids = model["centroids"]
+    d = len(centroids[0])
+    if len(query_vec) != d:
+        raise ValueError(f"{what} dim {len(query_vec)} != index dim {d}")
+    qv, probes = _probe_cells(query_vec, centroids, nprobe, model["params"]["scale"])
+    return probes, _ivfadc_query_tables(qv, centroids, model["codebooks"], probes)
+
+
+def _stored_adc(model: dict, cell_tbl: Column) -> Column:
+    """ADC distance of a stored ``codes`` row against its cell's tables."""
+    return _adc_sum(
+        model["params"]["m"],
+        lambda s: F.element_at(cell_tbl, s + 1),
+        lambda s: F.element_at("codes", s + 1),
     )
 
 
@@ -869,54 +848,30 @@ def ivfadc_serve_many(
     bit-identical per query to :func:`ivfadc_serve`."""
     from pyspark.sql.window import Window
 
-    store = open_store(spark, path, "ivfadc", required=True)
-    model = store.meta
-    params = model["params"]
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    k, m, scale = params["k"], params["m"], params["scale"]
-    id_col = params["id_col"]
-    if not 1 <= nprobe <= k:
-        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
-    d = len(centroids[0])
+    store = _open_ivfadc(spark, path, nprobe)
+    id_col = store.meta["params"]["id_col"]
     qids = sorted(queries)
     probe_pairs = []           # (qid, cell)
     all_tables = []            # per qid: k x m x ksub
     for qid in qids:
-        qvec = queries[qid]
-        if len(qvec) != d:
-            raise ValueError(f"query {qid}: dim {len(qvec)} != index dim {d}")
-        qv = [math.floor(float(x) * scale) for x in qvec]
-        by_dist = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qv, c)), j)
-            for j, c in enumerate(centroids)
-        )
-        probes = [int(j) for _, j in by_dist[:nprobe]]
+        probes, tables = _serve_tables(store.meta, queries[qid], nprobe, f"query {qid}:")
         probe_pairs += [(qid, j) for j in probes]
-        all_tables.append(
-            _ivfadc_query_tables(qvec, centroids, codebooks, probes, scale)
-        )
+        all_tables.append(tables)
     union_cells = sorted({c for _, c in probe_pairs})
     pm = spark.createDataFrame(
         [(qid, c, qi + 1) for qi, qid in enumerate(qids)
          for (q2, c) in probe_pairs if q2 == qid],
         "query_id long, cell int, qidx int",
     )
-    tbl_lit = bigint_array_lit(all_tables)
     cell_tbl = F.element_at(
-        F.element_at(tbl_lit, F.col("qidx")), (F.col("cell") + 1).cast("int")
+        F.element_at(bigint_array_lit(all_tables), F.col("qidx")),
+        (F.col("cell") + 1).cast("int"),
     )
-    adc = None
-    for s in range(m):
-        code = F.element_at("codes", s + 1)
-        term = F.element_at(
-            F.element_at(cell_tbl, s + 1), (code + 1).cast("int")
-        )
-        adc = term if adc is None else adc + term
     scored = (
         read_table(spark, store)
         .where(F.col("cell").isin(union_cells))
         .join(F.broadcast(pm), "cell")
-        .select("query_id", F.col(id_col), adc.alias("adc_dist"))
+        .select("query_id", F.col(id_col), _stored_adc(store.meta, cell_tbl).alias("adc_dist"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col(id_col).asc()

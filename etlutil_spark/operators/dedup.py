@@ -730,47 +730,14 @@ def embedding_lsh_near_dup_pairs(
     ``id_a < id_b`` canonicalizes each unordered pair exactly once (each
     pair is seen from both sides of the self-join; the probe buckets of one
     row are pairwise-distinct so no per-side duplicates arise either)."""
-    from etlutil_spark.functions.vectors import dot, norm
-    from etlutil_spark.operators.similarity import (
-        adaptive_n_planes,
-        hyperplanes,
-        lsh_bucket,
-    )
+    from etlutil_spark.operators.similarity import lsh_candidate_pairs
 
-    # join-tight occupancy target (see similarity.knn_join): pair volume
-    # per bucket is quadratic in occupancy
-    if n_planes is None:
-        n_planes = adaptive_n_planes(docs.count(), target_rows_per_bucket=16)
-    sample = docs.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    dim = sample[0].d if sample else 0
-    planes = hyperplanes(dim, n_planes, seed)
-    docs = ensure_min_partitions(docs)
-    l_b = docs.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_lv"),
-        norm(vec_col).alias("_ln"),
-        lsh_bucket(vec_col, planes).alias("_bucket"),
-    )
-    probes = F.array(
-        F.col("_rb"), *[F.col("_rb").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
-    )
-    r_b = (
-        docs.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("_rv"),
-            norm(vec_col).alias("_rn"),
-            lsh_bucket(vec_col, planes).alias("_rb"),
-        )
-        .withColumn("_bucket", F.explode(probes))
-        .drop("_rb")
-    )
-    denom = F.col("_ln") * F.col("_rn")
-    cos_sim = F.round(
-        F.when(denom != 0, dot(F.col("_lv"), F.col("_rv")) / denom), 6
+    pairs, cos_sim = lsh_candidate_pairs(
+        docs, docs, F.col(id_col).alias("id_a"), F.col(id_col).alias("id_b"),
+        vec_col=vec_col, n_planes=n_planes, seed=seed,
     )
     return (
-        l_b.join(r_b, "_bucket")
-        .where(F.col("id_a") < F.col("id_b"))
+        pairs.where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", cos_sim.alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )

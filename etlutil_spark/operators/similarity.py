@@ -106,6 +106,35 @@ def probe_buckets(qbits: int, n_planes: int, radius: int) -> list[int]:
     return probe
 
 
+def _query_probes(
+    query_vec: list[float], n_planes: int, seed: int, radius: int
+) -> tuple[list[list[float]], list[int]]:
+    """(planes, multiprobe bucket ids) of a literal query vector: its
+    sign-bit bucket, computed driver-side, and every bucket within
+    Hamming ``radius`` of it."""
+    planes = hyperplanes(len(query_vec), n_planes, seed)
+    qbits = 0
+    for i, p in enumerate(planes):
+        if sum(a * b for a, b in zip(query_vec, p)) >= 0:
+            qbits |= 1 << i
+    return planes, probe_buckets(qbits, n_planes, radius)
+
+
+def _cosine_rank(
+    df: DataFrame, query_vec: list[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Top-k rows of ``df`` by cosine to a literal query vector, rounded
+    to 6 decimals, ties broken by id."""
+    return (
+        df.select(
+            F.col(id_col),
+            F.round(cosine_lit(vec_col, query_vec), 6).alias("cos_sim"),
+        )
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
 def cosine_topk(
     docs: DataFrame,
     query_vec: list[float],
@@ -119,15 +148,7 @@ def cosine_topk(
     orderBy+limit compiles to TakeOrderedAndProject: per-partition heap of
     size k, then a k-row merge on the driver — no full sort, no shuffle of
     the data. Ties broken by id for determinism."""
-    return (
-        ensure_min_partitions(docs)
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(vec_col, query_vec), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _cosine_rank(ensure_min_partitions(docs), query_vec, k, id_col, vec_col)
 
 
 def ann_lsh_topk(
@@ -149,25 +170,73 @@ def ann_lsh_topk(
     computed (the bucket predicate is an integer comparison on a derivable
     column; persist it as a physical column + partition key for true IVF
     pruning at scale)."""
-    dim = len(query_vec)
-    planes = hyperplanes(dim, n_planes, seed)
-    qbits = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vec, p)) >= 0:
-            qbits |= 1 << i
-    probe = probe_buckets(qbits, n_planes, multiprobe_hamming)
-
-    bucket = lsh_bucket(vec_col, planes)
-    return (
-        ensure_min_partitions(docs).withColumn("_bucket", bucket)
+    planes, probe = _query_probes(query_vec, n_planes, seed, multiprobe_hamming)
+    cands = (
+        ensure_min_partitions(docs)
+        .withColumn("_bucket", lsh_bucket(vec_col, planes))
         .where(F.col("_bucket").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(vec_col, query_vec), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
     )
+    return _cosine_rank(cands, query_vec, k, id_col, vec_col)
+
+
+def lsh_candidate_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: Column,
+    right_id: Column,
+    *,
+    vec_col: str,
+    n_planes: int | None,
+    seed: int,
+) -> tuple[DataFrame, Column]:
+    """The bucketed candidate-pair build shared by :func:`knn_join` and
+    ``dedup.embedding_lsh_near_dup_pairs``: join each left row to the
+    right rows whose LSH bucket is within Hamming distance 1 of its own.
+    Returns ``(pairs, cos_sim)``: the joined frame (``_bucket``, both ids,
+    vectors and norms) and its pair score, the cosine rounded to 6.
+
+    ``n_planes=None`` sizes the planes from the right side's row count
+    with a join-tight occupancy target (16, not the probe default 1024):
+    candidate PAIRS per bucket grow with the square of occupancy, so a
+    bucket that is fine to scan once is far too big to self-join. The
+    vector dimension is probed from the left side.
+
+    Only the right side is probe-exploded. Its probe buckets (rb,
+    rb^bit_i) are pairwise-distinct, so a (left, right) pair matches the
+    left row's single bucket at most once and needs no dedup — deduping
+    would re-shuffle the full candidate-pair set, the largest
+    intermediate of the query, for nothing."""
+    if n_planes is None:
+        n_planes = adaptive_n_planes(right.count(), target_rows_per_bucket=16)
+    sample = left.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
+    dim = sample[0].d if sample else 0
+    planes = hyperplanes(dim, n_planes, seed)
+
+    # norms are precomputed per side: per-pair cosine then needs ONE array
+    # aggregate (the dot), not three — at B buckets * n^2/B pairs that is
+    # the dominant cost of the join stage
+    l_b = ensure_min_partitions(left).select(
+        left_id,
+        F.col(vec_col).alias("_lv"),
+        norm(vec_col).alias("_ln"),
+        lsh_bucket(vec_col, planes).alias("_bucket"),
+    )
+    probes = F.array(
+        F.col("_rb"), *[F.col("_rb").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+    )
+    r_b = (
+        ensure_min_partitions(right).select(
+            right_id,
+            F.col(vec_col).alias("_rv"),
+            norm(vec_col).alias("_rn"),
+            lsh_bucket(vec_col, planes).alias("_rb"),
+        )
+        .withColumn("_bucket", F.explode(probes))
+        .drop("_rb")
+    )
+    denom = F.col("_ln") * F.col("_rn")
+    cos_sim = F.when(denom != 0, dot(F.col("_lv"), F.col("_rv")) / denom)
+    return l_b.join(r_b, "_bucket"), F.round(cos_sim, 6)
 
 
 def knn_join(
@@ -186,60 +255,19 @@ def knn_join(
     bucket differs in one bit, via explode of probe buckets).
 
     ``n_planes=None`` (default) sizes the bucket count from the RIGHT side's
-    row count via :func:`adaptive_n_planes` — per-bucket candidate volume
-    then stays bounded as the corpus grows instead of scaling O(n^2/2^k)
-    with a fixed k. JOINS use a much tighter occupancy target than probe
-    lookups (16 vs 1024): candidate PAIRS per bucket grow with the square
-    of occupancy, so a bucket that is fine to scan once is far too big to
-    self-join. The count is one metadata-cheap job; pass an explicit
-    ``n_planes`` to skip it (e.g. when an oracle twin must share literals)."""
-    if n_planes is None:
-        n_planes = adaptive_n_planes(right.count(), target_rows_per_bucket=16)
-    sample = left.select(F.size(F.col(vec_col)).alias("d")).limit(1).collect()
-    dim = sample[0].d if sample else 0
-    planes = hyperplanes(dim, n_planes, seed)
-
-    # norms are precomputed per side: per-pair cosine then needs ONE array
-    # aggregate (the dot), not three — at B buckets * n^2/B pairs that is
-    # the dominant cost of the join stage
-    left = ensure_min_partitions(left)
-    right = ensure_min_partitions(right)
-    l_b = left.select(
-        F.col(left_id),
-        F.col(vec_col).alias("_lv"),
-        norm(vec_col).alias("_ln"),
-        lsh_bucket(vec_col, planes).alias("_bucket"),
-    )
-    probes = F.array(
-        F.col("_rb"), *[F.col("_rb").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
-    )
-    r_b = (
-        right.select(
-            F.col(right_id),
-            F.col(vec_col).alias("_rv"),
-            norm(vec_col).alias("_rn"),
-            lsh_bucket(vec_col, planes).alias("_rb"),
-        )
-        .withColumn("_bucket", F.explode(probes))
-        .drop("_rb")
-    )
+    row count (see :func:`lsh_candidate_pairs`), so per-bucket candidate
+    volume stays bounded as the corpus grows instead of scaling
+    O(n^2/2^k) with a fixed k. The count is one metadata-cheap job; pass
+    an explicit ``n_planes`` to skip it (e.g. when an oracle twin must
+    share literals)."""
     from pyspark.sql.window import Window
 
-    denom = F.col("_ln") * F.col("_rn")
-    cos_sim = F.when(denom != 0, dot(F.col("_lv"), F.col("_rv")) / denom)
-    # no pair-level dedup needed: a right row's probe buckets (rb, rb^bit_i)
-    # are pairwise-distinct, so a (left, right) pair can match the left row's
-    # single bucket at most once — deduping here would re-shuffle the full
-    # candidate-pair set (the largest intermediate in the query) for nothing
-    scored = (
-        l_b.join(r_b, "_bucket")
-        .where(F.col(left_id) != F.col(right_id))
-        .select(
-            "_bucket",
-            left_id,
-            right_id,
-            F.round(cos_sim, 6).alias("cos_sim"),
-        )
+    pairs, cos_sim = lsh_candidate_pairs(
+        left, right, F.col(left_id), F.col(right_id),
+        vec_col=vec_col, n_planes=n_planes, seed=seed,
+    )
+    scored = pairs.where(F.col(left_id) != F.col(right_id)).select(
+        "_bucket", left_id, right_id, cos_sim.alias("cos_sim")
     )
     # rank within (_bucket, left_id) — identical to ranking within left_id
     # alone (the left side is NOT probe-exploded, so left_id -> _bucket is
@@ -337,22 +365,11 @@ def ivf_topk(
     """ANN top-k over a build_ivf_store layout. The bucket predicate is a
     partition filter — Spark's file index skips every non-probed directory
     before any byte is read (check PartitionFilters in .explain)."""
-    planes = hyperplanes(len(query_vec), n_planes, seed)
-    qbits = 0
-    for i, p in enumerate(planes):
-        if sum(a * b for a, b in zip(query_vec, p)) >= 0:
-            qbits |= 1 << i
-    probe = probe_buckets(qbits, n_planes, multiprobe_hamming)
-    return (
-        read_table(spark, open_store(spark, path, "ivf"))
-        .where(F.col("bucket").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(vec_col, query_vec), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    _, probe = _query_probes(query_vec, n_planes, seed, multiprobe_hamming)
+    cands = read_table(spark, open_store(spark, path, "ivf")).where(
+        F.col("bucket").isin(probe)
     )
+    return _cosine_rank(cands, query_vec, k, id_col, vec_col)
 
 
 def quantize_rerank_topk(
@@ -434,12 +451,6 @@ def quantize_rerank_topk(
         .limit(rerank_k)
         .select(id_col)
     )
-    return (
-        docs.join(F.broadcast(cands), id_col)
-        .select(
-            F.col(id_col),
-            F.round(cosine_lit(vec_col, query_vec), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _cosine_rank(
+        docs.join(F.broadcast(cands), id_col), query_vec, k, id_col, vec_col
     )

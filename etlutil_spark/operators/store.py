@@ -295,9 +295,12 @@ def ensure_store(
     cur = _current(spark, base, family)
     reason, keep = "missing", None
     if cur is not None:
-        old = _read_json(spark, f"{cur}/{fam.sidecar}")
-        old = old.get("params") if isinstance(old, dict) else None
-        if not isinstance(old, dict):
+        meta = _read_json(spark, f"{cur}/{fam.sidecar}")
+        old = meta.get("params") if isinstance(meta, dict) else None
+        # a family with recorded tables whose sidecar lacks their schemas
+        # (a version committed before schemas were recorded) would make
+        # every warm read infer them with a job
+        if not isinstance(old, dict) or (fam.tables and "schemas" not in meta):
             reason = "corrupt"
         elif {**old, "data": digest} != params:
             reason = "params"

@@ -8,7 +8,7 @@ carries a DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from etlutil_spark.operators.store import (
     StoreStatus,
     apply_delta,
@@ -182,7 +182,6 @@ def bm25_search(
         # tfidf_top_terms)
         .transform(pin)
     )
-    dfreq = postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
     stats = df.select(
         F.count("*").alias("n_docs"),
         (
@@ -190,26 +189,45 @@ def bm25_search(
             / F.count("*")
         ).alias("avgdl"),
     )
+    scored = _bm25_scores(
+        postings.join(F.broadcast(_doc_freq(postings)), "term").crossJoin(
+            F.broadcast(stats)
+        ),
+        [id_col], F.col("n_docs"), F.col("avgdl"), k1, b,
+    )
+    return scored.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
+
+
+def _doc_freq(postings: DataFrame) -> DataFrame:
+    """(term, doc_freq) of a query-term-filtered postings frame."""
+    return postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
+
+
+def _bm25_scores(
+    cands: DataFrame, keys: list[str], n_docs: Column, avgdl: Column, k1: float, b: float
+) -> DataFrame:
+    """The BM25 score, defined once for search and serving: per ``keys``
+    group, the sum of idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
+    over ``cands`` rows (term, tf, dl, doc_freq), each term's contribution
+    quantized to 9 decimals and summed exactly as DECIMAL so the score
+    does not depend on partition addition order; rounded to 6. Also
+    counts the matched terms."""
     idf = F.log(
-        1.0
-        + (F.col("n_docs") - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
+        1.0 + (n_docs - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
     )
     contrib = idf * (
         F.col("tf")
         * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
+        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl))
     )
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
-        .groupBy(id_col)
+    return (
+        cands.withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
+        .groupBy(*keys)
         .agg(
             F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
             F.count("*").alias("n_matched_terms"),
         )
     )
-    return scored.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
 
 
 def bigram_counts(
@@ -844,16 +862,45 @@ def ensure_postings_store(
     return ensure_store(spark, path, "postings", params, df, build)
 
 
-def _postings_corpus_stats(meta: dict) -> tuple[int, int]:
-    """(n_docs, sum_dl) of a postings store: the base build's counts
-    plus every applied increment's contribution (idempotent per
-    batch_id — see update_postings_store)."""
-    n_docs = int(meta["n_docs"])
-    sum_dl = int(meta["sum_dl"])
+def _term_bucket(t: str, n_buckets: int) -> int:
+    """The postings bucket of term ``t``, computed driver-side: the same
+    value as the writer's JVM ``pmod(md5_bigint(term), n_buckets)`` (the
+    60-bit md5 prefix of the UTF-8 bytes is non-negative, so ``%`` and
+    ``pmod`` agree)."""
+    import hashlib
+
+    return int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % n_buckets
+
+
+def _postings_scan(spark, path: str, terms: list[str], who: str):
+    """The serving preamble of a postings store: ``(postings, id_col,
+    n_docs, avgdl)``, where ``postings`` scans only the buckets of
+    ``terms`` and only their rows, and the corpus counts are the base
+    build's plus every applied increment's (idempotent per batch_id —
+    see update_postings_store)."""
+    store = open_store(spark, path, "postings", required=True)
+    meta = store.meta
+    n_buckets = meta["params"]["n_buckets"]
+    n_docs, sum_dl = int(meta["n_docs"]), int(meta["sum_dl"])
     for d in meta.get("deltas", {}).values():
         n_docs += int(d["n_docs"])
         sum_dl += int(d["sum_dl"])
-    return n_docs, sum_dl
+    if n_docs == 0:
+        raise ValueError(f"{who}: empty postings store")
+    probes = sorted({_term_bucket(t, n_buckets) for t in terms})
+    # NO checkpoint here (unlike bm25_search): both consumers re-scan,
+    # but each scan is partition-pruned to the probed buckets and
+    # term-filtered at the row-group level — trivially cheap, and the
+    # pruning stays VISIBLE in the executed plan (a checkpoint would
+    # hide the FileScan behind an RDD scan; plan test pins the filter)
+    postings = (
+        read_table(spark, store)
+        .where(F.col("bucket").isin(probes))
+        .where(F.col("term").isin(terms))
+    )
+    # same IEEE division bm25_search's stats row performs: double(sum
+    # of exact decimal dl) / bigint count
+    return postings, meta["params"]["id_col"], n_docs, float(sum_dl) / n_docs
 
 
 def bm25_serve(
@@ -876,52 +923,11 @@ def bm25_serve(
     (same idf/contribution expressions, 9-decimal quantized DECIMAL
     sum, 6-decimal final round, doc-id tiebreak), so the same oracle
     verifies both the search math AND the store roundtrip."""
-    import hashlib
-
-    store = open_store(spark, path, "postings", required=True)
-    meta = store.meta
-    n_buckets = meta["params"]["n_buckets"]
-    id_col = meta["params"]["id_col"]
-    n_docs, sum_dl = _postings_corpus_stats(meta)
-    if n_docs == 0:
-        raise ValueError("bm25_serve: empty postings store")
     terms = [t.lower() for t in query_terms]
-    probes = sorted(
-        {
-            int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % n_buckets
-            for t in terms
-        }
-    )
-    # same IEEE division bm25_search's stats row performs: double(sum
-    # of exact decimal dl) / bigint count
-    avgdl = float(sum_dl) / n_docs
-    # NO checkpoint here (unlike bm25_search): both consumers re-scan,
-    # but each scan is partition-pruned to the probed buckets and
-    # term-filtered at the row-group level — trivially cheap, and the
-    # pruning stays VISIBLE in the executed plan (a checkpoint would
-    # hide the FileScan behind an RDD scan; plan test pins the filter)
-    postings = (
-        read_table(spark, store)
-        .where(F.col("bucket").isin(probes))
-        .where(F.col("term").isin(terms))
-    )
-    dfreq = postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    idf = F.log(
-        1.0 + (F.lit(n_docs) - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
-        .groupBy(id_col)
-        .agg(
-            F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
-            F.count("*").alias("n_matched_terms"),
-        )
+    postings, id_col, n_docs, avgdl = _postings_scan(spark, path, terms, "bm25_serve")
+    scored = _bm25_scores(
+        postings.join(F.broadcast(_doc_freq(postings)), "term"),
+        [id_col], F.lit(n_docs), F.lit(avgdl), k1, b,
     )
     return scored.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
 
@@ -984,52 +990,21 @@ def bm25_serve_many(
     across the batch. Scoring math is bm25_serve's bit for bit; returns
     (query_id, doc_id, bm25, n_matched_terms, rank<=k), ranked ties
     broken by doc id."""
-    import hashlib
-
     from pyspark.sql.window import Window
 
-    store = open_store(spark, path, "postings", required=True)
-    meta = store.meta
-    n_buckets = meta["params"]["n_buckets"]
-    id_col = meta["params"]["id_col"]
-    n_docs, sum_dl = _postings_corpus_stats(meta)
-    if n_docs == 0:
-        raise ValueError("bm25_serve_many: empty postings store")
     pairs = sorted(
         {(qid, t.lower()) for qid, ts in queries.items() for t in ts}
     )
     terms = sorted({t for _, t in pairs})
-    probes = sorted(
-        {
-            int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % n_buckets
-            for t in terms
-        }
+    postings, id_col, n_docs, avgdl = _postings_scan(
+        spark, path, terms, "bm25_serve_many"
     )
-    avgdl = float(sum_dl) / n_docs
     qmap = spark.createDataFrame(pairs, "query_id string, term string")
-    postings = (
-        read_table(spark, store)
-        .where(F.col("bucket").isin(probes))
-        .where(F.col("term").isin(terms))
-    )
-    dfreq = postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    idf = F.log(
-        1.0 + (F.lit(n_docs) - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
-    scored = (
-        postings.join(F.broadcast(qmap), "term")
-        .join(F.broadcast(dfreq), "term")
-        .withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
-        .groupBy("query_id", id_col)
-        .agg(
-            F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
-            F.count("*").alias("n_matched_terms"),
-        )
+    scored = _bm25_scores(
+        postings.join(F.broadcast(qmap), "term").join(
+            F.broadcast(_doc_freq(postings)), "term"
+        ),
+        ["query_id", id_col], F.lit(n_docs), F.lit(avgdl), k1, b,
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("bm25").desc(), F.col(id_col).asc()

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from etlutil_spark.functions import dates as D
 from etlutil_spark.functions.daterange import DateRange, DateRanges
-from etlutil_spark.functions.vectors import bigint_array_lit, double_array_lit
+from etlutil_spark.functions.vectors import bigint_array_lit, double_array_lit, sq_l2
 from etlutil_spark.operators.store import store_path
 from etlutil_spark.operators.util import pin, store_root
 from etlutil_spark.sources.testdata import load_table
@@ -2786,20 +2786,27 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_dup_pairs(e, threshold=0.4)
 
 
+def _duck_lsh_bucket(n_planes: int, dim: int) -> str:
+    """DuckDB twin of similarity.lsh_bucket over a DOUBLE[] column ``v``:
+    the same seeded hyperplanes inlined as literal arrays, bit i set when
+    the dot product with plane i is >= 0."""
+    from etlutil_spark.operators.similarity import hyperplanes
+
+    planes = hyperplanes(dim, n_planes, seed=42)
+    return " + ".join(
+        f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in pl)}]) >= 0"
+        f" THEN {1 << i} ELSE 0 END)"
+        for i, pl in enumerate(planes)
+    )
+
+
 def _duck_embedding_lsh_sql(
     threshold: float = 0.4, n_planes: int = 6, dim: int = 64
 ) -> str:
     """DuckDB replica of embedding_lsh_near_dup_pairs: same seeded
     hyperplanes; the probe-explode candidate rule is hamming(bk_l, bk_r)<=1.
     The oracle replicates the approximation itself, so parity is exact."""
-    from etlutil_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes, seed=42)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in pl)}]) >= 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, pl in enumerate(planes)
-    )
+    bucket = _duck_lsh_bucket(n_planes, dim)
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     b AS (SELECT vec_id, v, ({bucket}) AS bk FROM e)
@@ -2854,14 +2861,7 @@ def _duck_ann_cte(n_planes: int, dim: int) -> str:
     vector with its bucket (``b``). The seeded hyperplanes are inlined as
     literal arrays, so index and recall oracles can NEVER drift apart on
     the plane table or bucket rule."""
-    from etlutil_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes, seed=42)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in pl)}]) >= 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, pl in enumerate(planes)
-    )
+    bucket = _duck_lsh_bucket(n_planes, dim)
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     q AS (SELECT v AS qv, ({bucket}) AS qb FROM e WHERE vec_id = 0),
@@ -3393,14 +3393,7 @@ def orders_week_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _duck_knn_sql(k: int = 5, n_planes: int = 6, dim: int = 64) -> str:
     """DuckDB replica of knn_join: same seeded hyperplanes; the explode-of-
     probe-buckets candidate rule is exactly hamming(bucket_l, bucket_r)<=1."""
-    from etlutil_spark.operators.similarity import hyperplanes
-
-    planes = hyperplanes(dim, n_planes, seed=42)
-    bucket = " + ".join(
-        f"(CASE WHEN list_dot_product(v, [{', '.join(repr(x) for x in pl)}]) >= 0"
-        f" THEN {1 << i} ELSE 0 END)"
-        for i, pl in enumerate(planes)
-    )
+    bucket = _duck_lsh_bucket(n_planes, dim)
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
     b AS (SELECT vec_id, v, ({bucket}) AS bk FROM e),
@@ -13143,7 +13136,7 @@ def sim_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the mechanism — a codebook or probe regression that silently
     degrades recall flips this row."""
     from etlutil_spark.operators.clustering import (
-        _best_cluster,
+        _quantize_query,
         _quantized_corpus,
         ivfadc_topk,
     )
@@ -13153,21 +13146,10 @@ def sim_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in e.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
-    import math as _math
-
-    qv = [_math.floor(float(x) * 1_000_000) for x in qvec]
     q = _quantized_corpus(e, "vec_id", "embedding", 1_000_000)
-    dist = F.aggregate(
-        F.zip_with(
-            "_qv",
-            bigint_array_lit(qv),
-            lambda a, b: (a - b) * (a - b),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    qv = bigint_array_lit(_quantize_query(qvec, 1_000_000))
     exact = (
-        q.select("vec_id", dist.alias("d"))
+        q.select("vec_id", sq_l2("_qv", qv).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id").asc())
         .limit(10)
         .select("vec_id")

@@ -91,6 +91,53 @@ def read_trending(
     return spark.read.parquet(_join(state_path, _TOPK_SUBDIR, f"batch={bid}"))
 
 
+def _check_decay(decay_num: int, decay_den: int) -> None:
+    if not 0 < decay_num < decay_den:
+        raise ValueError(
+            f"decay must satisfy 0 < num < den, got {decay_num}/{decay_den}"
+        )
+
+
+def _trend_step(
+    batch: DataFrame,
+    prev_cms: DataFrame | None,
+    prev_topk: DataFrame | None,
+    key_col: str,
+    pin_fn,
+    *,
+    k: int,
+    width: int,
+    depth: int,
+    decay_num: int,
+    decay_den: int,
+    seed: str,
+) -> tuple[DataFrame, DataFrame]:
+    """One fold step, shared by the sink and its in-memory twin: decay the
+    previous sketch (integer floor), merge the batch's sketch, estimate the
+    batch's keys plus the previous top-k's keys, and keep the top ``k``.
+    Returns ``(folded sketch, top-k)``, each pinned with ``pin_fn``, the
+    sketch first."""
+    fresh = cms_sketch(batch, key_col, width=width, depth=depth, seed=seed)
+    if prev_cms is not None:
+        decayed = prev_cms.select(
+            "j",
+            "bucket",
+            F.floor(F.col("c") * F.lit(decay_num) / F.lit(decay_den)).alias("c"),
+        ).where(F.col("c") > 0)
+        folded = cms_merge(decayed, fresh)
+    else:
+        folded = fresh
+    folded = folded.transform(pin_fn)
+    cands = batch.select(F.col(key_col).alias("key")).distinct()
+    if prev_topk is not None:
+        cands = cands.union(prev_topk.select("key")).distinct()
+    est = cms_estimate(
+        folded, cands, "key", width=width, depth=depth, seed=seed, out_col="est"
+    )
+    topk = est.orderBy(F.col("est").desc(), F.col("key")).limit(k).transform(pin_fn)
+    return folded, topk
+
+
 def trending_batch(
     state_path: str,
     key_col: str = "event_type",
@@ -111,46 +158,27 @@ def trending_batch(
     persist both under ``batch=<id>`` with overwrite. Empty batches
     still decay (a quiet period ages the board) as long as the batch
     DataFrame arrives; no call, no decay — foreachBatch semantics."""
-    if not 0 < decay_num < decay_den:
-        raise ValueError(
-            f"decay must satisfy 0 < num < den, got {decay_num}/{decay_den}"
-        )
+    _check_decay(decay_num, decay_den)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         batch = batch.where(F.col(key_col).isNotNull()).transform(pin_eager)
+        # the newest state strictly older than this batch: its sketch and
+        # the top-k written with it (topk lands before cms, see below)
         prev_id = _latest_state_batch(spark, state_path, before=batch_id)
-        fresh = cms_sketch(
-            batch, key_col, width=width, depth=depth, seed=seed
-        )
+        prev_cms = prev_topk = None
         if prev_id is not None:
-            prev = spark.read.parquet(
+            prev_cms = spark.read.parquet(
                 _join(state_path, _CMS_SUBDIR, f"batch={prev_id}")
             )
-            decayed = prev.select(
-                "j",
-                "bucket",
-                F.floor(
-                    F.col("c") * F.lit(decay_num) / F.lit(decay_den)
-                ).alias("c"),
-            ).where(F.col("c") > 0)
-            folded = cms_merge(decayed, fresh)
-        else:
-            folded = fresh
-        folded = folded.transform(pin_eager)
-
-        cands = batch.select(F.col(key_col).alias("key")).distinct()
-        prev_topk = read_trending(spark, state_path, before=batch_id)
-        if prev_topk is not None:
-            cands = cands.union(prev_topk.select("key")).distinct()
-        est = cms_estimate(
-            folded, cands, "key", width=width, depth=depth, seed=seed,
-            out_col="est",
-        )
-        topk = (
-            est.orderBy(F.col("est").desc(), F.col("key"))
-            .limit(k)
-            .transform(pin_eager)
+            prev_topk = spark.read.parquet(
+                _join(state_path, _TOPK_SUBDIR, f"batch={prev_id}")
+            )
+        # eager pins: the write-ordering invariant below reasons about
+        # explicit materialization points
+        folded, topk = _trend_step(
+            batch, prev_cms, prev_topk, key_col, pin_eager, k=k, width=width,
+            depth=depth, decay_num=decay_num, decay_den=decay_den, seed=seed,
         )
 
         # ORDERING INVARIANT: topk BEFORE cms. Batch visibility is keyed
@@ -195,48 +223,23 @@ def trending_fold_batches(
     bounded aggregates; localCheckpoint() truncates the lineage so round
     N never replays rounds 1..N-1, and the returned plan is a scan of
     the final k-row checkpoint."""
-    if not 0 < decay_num < decay_den:
-        raise ValueError(
-            f"decay must satisfy 0 < num < den, got {decay_num}/{decay_den}"
-        )
+    _check_decay(decay_num, decay_den)
     if not batches:
         raise ValueError("trending_fold_batches needs at least one batch")
-    folded = None
-    topk = None
+    folded = topk = None
     for batch in batches:
-        batch = batch.where(F.col(key_col).isNotNull())
-        fresh = cms_sketch(batch, key_col, width=width, depth=depth, seed=seed)
-        if folded is not None:
-            decayed = folded.select(
-                "j",
-                "bucket",
-                F.floor(
-                    F.col("c") * F.lit(decay_num) / F.lit(decay_den)
-                ).alias("c"),
-            ).where(F.col("c") > 0)
-            folded = cms_merge(decayed, fresh)
-        else:
-            folded = fresh
-        # LAZY checkpoints (eager=False): nothing in this fold acts on
-        # the frames until the caller's final action, so every round's
-        # sketch/board materializes inside that one job cascade (each
-        # checkpoint still caches and truncates lineage on first
-        # computation) instead of 2 scheduled jobs per round. The
-        # foreachBatch sink twin (trending_batch) deliberately KEEPS
-        # eager checkpoints: its write-ordering crash invariant (topk
-        # before cms) reasons about materialization points explicitly.
-        folded = folded.transform(pin)
-        cands = batch.select(F.col(key_col).alias("key")).distinct()
-        if topk is not None:
-            cands = cands.union(topk.select("key")).distinct()
-        est = cms_estimate(
-            folded, cands, "key", width=width, depth=depth, seed=seed,
-            out_col="est",
-        )
-        topk = (
-            est.orderBy(F.col("est").desc(), F.col("key"))
-            .limit(k)
-            .transform(pin)
+        # LAZY pins: nothing in this fold acts on the frames until the
+        # caller's final action, so every round's sketch/board
+        # materializes inside that one job cascade (each pin still
+        # caches and truncates lineage on first computation) instead of
+        # 2 scheduled jobs per round. The foreachBatch sink twin
+        # (trending_batch) deliberately KEEPS eager pins: its
+        # write-ordering crash invariant (topk before cms) reasons about
+        # materialization points explicitly.
+        folded, topk = _trend_step(
+            batch.where(F.col(key_col).isNotNull()), folded, topk, key_col, pin,
+            k=k, width=width, depth=depth, decay_num=decay_num,
+            decay_den=decay_den, seed=seed,
         )
     return topk
 

@@ -243,6 +243,45 @@ class TestEnsureServingStores:
         st = ensure_postings_store(spark, df, path, n_buckets=4)
         assert (st, st.reason) == ("built", "params")
 
+    def test_serve_probe_bucket_matches_written_bucket(self, spark, tmp_path):
+        """The bucket bm25_serve probes for a term (Python md5 of its UTF-8
+        bytes) is the bucket the writer stored it under (JVM
+        ``pmod(md5_bigint(term), n)``), for ASCII and non-ASCII terms, and
+        serving finds a document by a non-ASCII term."""
+        from etlutil_spark.operators.store import open_store, read_table
+        from etlutil_spark.operators.text_analysis import (
+            _term_bucket,
+            bm25_serve,
+            ensure_postings_store,
+        )
+
+        spark.createDataFrame(
+            [
+                (1, "the quick brown fox"),
+                (2, "die Straße ist groß und schön"),
+                (3, "le café était déjà fermé à noël"),
+                (4, "数据 处理 系统 和 数据库"),
+                (5, "Ελληνικά κείμενα και русский текст"),
+            ],
+            "doc_id bigint, text string",
+        ).write.parquet(str(tmp_path / "src"))
+        df = spark.read.parquet(str(tmp_path / "src"))
+        path = str(tmp_path / "postings")
+        ensure_postings_store(spark, df, path, n_buckets=16)
+        stored = {
+            (r["term"], r["bucket"])
+            for r in read_table(spark, open_store(spark, path, "postings"))
+            .select("term", "bucket").collect()
+        }
+        terms = {t for t, _ in stored}
+        assert {"fox", "straße", "café", "数据", "ελληνικά", "русский"} <= terms
+        assert any(not t.isascii() for t in terms)
+        assert len(terms) == len(stored)  # one bucket per term
+        assert {(t, _term_bucket(t, 16)) for t in terms} == stored
+        for term, doc in [("straße", 2), ("déjà", 3), ("数据库", 4), ("текст", 5)]:
+            got = [r["doc_id"] for r in bm25_serve(spark, path, [term], k=5).collect()]
+            assert got == [doc], term
+
     def test_ivf_store_reuse(self, spark, tmp_path):
         from etlutil_spark.operators.similarity import ensure_ivf_store, ivf_topk
 

@@ -75,7 +75,7 @@ HEADLINE_BUDGETS = {
     # pin broadcast corpus-proportional per-user frames — a small-SF
     # artifact that OOMs at scale; joins are now shuffle-based. Visible
     # exchanges exclude the 3 stage-aggregate shuffles inside the
-    # checkpoint lineage (see tools/job_counts.py for totals).
+    # checkpoint lineage (see tools/profile_queries.py for totals).
     "events_funnel": (3, 0),
     # r12: cohort period rides a per-user window-min over the distinct
     # activity table — no join back, no corpus-proportional broadcast

@@ -196,6 +196,31 @@ def test_store_contract(spark, tmp_path, family, case):
         spark.sql(f"DROP TABLE IF EXISTS default.contract_{tag}")
 
 
+@pytest.mark.parametrize(
+    "family", sorted(f for f in FAMILY_CASES if S.FAMILIES[f].tables)
+)
+def test_sidecar_without_schemas_rebuilds(spark, tmp_path, family):
+    """A version whose sidecar records no table schemas (committed before
+    schemas were recorded) is rebuilt with reason ``corrupt``: reusing it
+    would make every warm read infer the schemas with a job."""
+    ensure, reader, rows, schema = FAMILY_CASES[family]
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+    path = str(tmp_path / "store")
+    assert ensure(spark, src, path, 0, family) == "built"
+    before = S.store_dir(spark, path, family)
+    sidecar = os.path.join(before, S.FAMILIES[family].sidecar)
+    meta = json.load(open(sidecar))
+    del meta["schemas"]
+    S._write_json(spark, sidecar, meta)  # through Hadoop: keeps its checksum valid
+    st = ensure(spark, src, path, 0, family)
+    assert st == "built" and st.reason == "corrupt"
+    after = S.store_dir(spark, path, family)
+    assert after != before
+    assert "schemas" in json.load(open(os.path.join(after, S.FAMILIES[family].sidecar)))
+    assert ensure(spark, src, path, 0, family) == "reused"
+
+
 def test_rebuild_keeps_one_previous_version(spark, tmp_path):
     """A reader holding the previous version keeps its files across one
     rebuild; the version before that is deleted."""
