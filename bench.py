@@ -19,9 +19,9 @@ import time
 from etlutil_spark.operators.store import FAMILIES
 from etlutil_spark.session import get_spark
 
-# every registered store family's directory prefix under store_root():
+# every ensure_* store family's directory prefix under store_root():
 # main() clears them so the first run is cold
-_STORE_PREFIXES = tuple(f.prefix for f in FAMILIES.values())
+_STORE_PREFIXES = tuple(f.prefix for f in FAMILIES.values() if f.prefix)
 
 # headline set: the queries that exercise scan/filter/agg, joins, window,
 # date buckets — the shapes that dominate at 100 TB — plus the

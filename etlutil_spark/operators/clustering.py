@@ -584,11 +584,8 @@ def ivfadc_topk(
     dsub = d // m
     qv, probes = _probe_cells(query_vec, centroids, nprobe, scale)
 
-    cell = _best_cluster(centroids)["c"]
-    cent_lit = bigint_array_lit(centroids)
-
     # Encode ONCE into a checkpointed (id, cell, vector-to-code) frame.
-    # Referencing `_cell`/`_qv` as plain columns afterwards keeps every
+    # Referencing `cell`/`_qv` as plain columns afterwards keeps every
     # downstream expression tree small: inlining the cell argmin + the
     # residual zip_with into each of the m ADC terms (the r9 shape)
     # re-embedded the full k x d centroid literal 8+ times per plan and
@@ -598,32 +595,24 @@ def ivfadc_topk(
     if residual:
         # residuals are already exact integers — differences of
         # quantized bigints; no second quantization happens
-        rv = F.zip_with(
-            "_qv",
-            F.element_at(cent_lit, (cell + 1).cast("int")),
-            lambda a, b: a - b,
-        )
-        enc = q.select(
-            F.col(id_col), cell.alias("_cell"), rv.alias("_qv")
-        ).transform(pin)
+        enc = _residuals(q, id_col, centroids).transform(pin)
         codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
         # per-probed-cell query tables: the query's residual against
         # cell j scores against the shared codebooks; non-probed cells
         # keep zero rows (they are filtered before the lookup)
         tables = _ivfadc_query_tables(qv, centroids, codebooks, probes)
     else:
-        enc = q.select(
-            F.col(id_col), cell.alias("_cell"), F.col("_qv")
-        ).transform(pin)
+        cell = _best_cluster(centroids)["c"].cast("int")
+        enc = q.select(F.col(id_col), cell.alias("cell"), F.col("_qv")).transform(pin)
         codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
         tables = [_adc_tables(qv, codebooks)] * k  # cell-independent tables
 
-    cell_tbl = F.element_at(bigint_array_lit(tables), (F.col("_cell") + 1).cast("int"))
+    cell_tbl = F.element_at(bigint_array_lit(tables), (F.col("cell") + 1).cast("int"))
     adc = _adc_sum(
         m, lambda s: F.element_at(cell_tbl, s + 1), lambda s: _pq_code(codebooks, s, dsub)
     )
     return (
-        enc.where(F.col("_cell").isin(probes))
+        enc.where(F.col("cell").isin(probes))
         .select(F.col(id_col), adc.alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
         .limit(topk)

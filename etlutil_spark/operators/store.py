@@ -25,6 +25,12 @@ The incremental families (postings, IVFADC, histogram) fold batches into
 the CURRENT version with :func:`apply_delta`: each batch overwrites its own
 ``delta=<batch_id>`` partition and an ``_applied_<batch_id>`` marker,
 written last, absorbs replays.
+
+The streaming sink families (the SCD2 dimension, the trending sketch) hold
+state that each micro-batch replaces whole, at a caller-given path:
+:func:`replace_state` commits every batch as a new version whose sidecar
+records the batch id, so a replay is a no-op and at most two versions are
+ever on disk.
 """
 
 from __future__ import annotations
@@ -40,7 +46,7 @@ from pyspark.sql import DataFrame
 
 @dataclass(frozen=True)
 class Family:
-    prefix: str  # directory-name prefix of the family's stores under store_root()
+    prefix: str | None  # directory-name prefix under store_root(); None for sink state
     sidecar: str  # sidecar file name inside a version dir
     tables: tuple[str, ...] = ()  # sub-dirs whose schema is recorded ("" = the version dir)
     rebase: bool = False  # a data-only rebuild carries the applied batches over
@@ -57,6 +63,9 @@ FAMILIES = {
     "hist": Family("etlutil_spark_hist_", "_hist_meta.json", rebase=True),
     "quality": Family("etlutil_spark_qstore_", "_quality_meta.json", ("",)),
     "bucketed": Family("etlutil_spark_bucketed_", "_bucket_spec.json"),
+    # streaming sink state (replace_state), kept wherever its caller says
+    "scd2": Family(None, "_scd2_meta.json", ("",)),
+    "trending": Family(None, "_trending_meta.json", ("cms", "topk")),
 }
 
 _VERSION = re.compile(r"v_(\d+)_[0-9a-f]+")
@@ -97,6 +106,21 @@ def _fs(spark, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
+def join_path(base: str, *parts: str) -> str:
+    """URI-safe path join: plain "/" concatenation, never the host OS's
+    path semantics (the path may be s3a://..., hdfs://... or file:...)."""
+    return "/".join([base.rstrip("/"), *parts])
+
+
+def path_exists(spark, path: str) -> bool:
+    """Existence probe through the Hadoop FileSystem API, so state can live
+    on any Spark-reachable store. ``os.path.exists`` answers for the
+    driver's local filesystem only: on an object store it is always False,
+    and a sink that trusted it would silently start over on every batch."""
+    jvm, fs = _fs(spark, path)
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _read_text(spark, path: str) -> str | None:
@@ -153,19 +177,24 @@ def _delete(spark, path: str) -> None:
 # ---------------------------------------------------------------- versions
 
 
+def _names(spark, base: str) -> list[str]:
+    """Entry names under ``base``; [] when it does not exist."""
+    jvm, fs = _fs(spark, base)
+    try:
+        return [st.getPath().getName() for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(base))]
+    except Exception:
+        return []
+
+
 def store_versions(spark, path: str, family: str) -> list[str]:
     """Names of the complete versions under ``path``, oldest first."""
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
     P = jvm.org.apache.hadoop.fs.Path
-    try:
-        names = [st.getPath().getName() for st in fs.listStatus(P(base))]
-    except Exception:
-        return []
     sidecar = FAMILIES[family].sidecar
     found = [
         (int(m.group(1)), nm)
-        for nm in names
+        for nm in _names(spark, base)
         if (m := _VERSION.fullmatch(nm)) and fs.exists(P(f"{base}/{nm}/{sidecar}"))
     ]
     return [nm for _, nm in sorted(found)]
@@ -345,6 +374,51 @@ def apply_delta(
     if meta is not None:
         _write_json(spark, f"{store.dir}/{FAMILIES[family].sidecar}", meta)
     _write_text(spark, marker, "1")
+    return "applied"
+
+
+def replace_state(
+    spark,
+    path: str,
+    family: str,
+    batch_id: int,
+    build_fn: Callable[[str, OpenStore | None], None],
+) -> str:
+    """Snapshot twin of :func:`apply_delta`, for sink state that each
+    micro-batch replaces whole. ``build_fn(tmp, prev)`` writes the family's
+    tables for the state after batch ``batch_id`` from ``prev``, the
+    current version (None before the first batch), and
+    :func:`commit_version` makes it current with ``batch_id`` in its
+    sidecar. ``prev`` survives the commit, so ``build_fn`` may read it
+    lazily. A replay of the committed batch is a no-op; a lower batch id
+    raises, since that state belongs to another checkpoint, and so does
+    a damaged sidecar or a path holding files of another layout: sink
+    state is not rebuildable, so it never silently starts over.
+    Returns 'applied' or 'skipped'."""
+    base = path.rstrip("/")
+    cur = _current(spark, base, family)
+    prev = None
+    if cur is not None:
+        meta = _read_json(spark, f"{cur}/{FAMILIES[family].sidecar}")
+        done = meta.get("batch") if isinstance(meta, dict) else None
+        if not isinstance(done, int):
+            raise ValueError(f"{family} state at {path}: damaged sidecar in {cur}")
+        if done == batch_id:
+            return "skipped"
+        if done > batch_id:
+            raise ValueError(
+                f"{family} state at {path} already holds batch {done}; batch "
+                f"{batch_id} belongs to another checkpoint"
+            )
+        prev = OpenStore(cur, meta)
+    else:
+        stray = [n for n in _names(spark, base) if not (_VERSION.fullmatch(n) or "_current" in n)]
+        if stray:
+            raise ValueError(
+                f"{path} holds {stray[:3]} outside the versioned {family} layout; "
+                "move it aside or point the sink at an empty path"
+            )
+    commit_version(spark, base, family, {"batch": batch_id}, lambda tmp: build_fn(tmp, prev))
     return "applied"
 
 

@@ -5293,10 +5293,9 @@ def dedup_screen_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_user_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the custom stateful streaming operators
-    (streaming/events.py:running_user_totals via applyInPandasWithState,
-    streaming/state_v2.py:running_user_totals_v2 via transformWithState).
-    The stateful operators' FINAL per-key emission matches this groupBy
+    """Batch twin of the custom stateful streaming operator
+    (streaming/events.py:running_user_totals via applyInPandasWithState).
+    The stateful operator's FINAL per-key emission matches this groupBy
     up to float-accumulation tolerance — the streaming state carries an
     order-dependent double sum while the twin sums DECIMAL exactly;
     tests/test_pipeline_ops.py asserts streaming==batch at 6 decimals on

@@ -77,30 +77,12 @@ from etlutil_spark.operators.dedup import (
     shingle_sets,
     signatures_from_shingles,
 )
+from etlutil_spark.operators.store import join_path, path_exists
 from etlutil_spark.operators.util import pin, pin_eager
+from etlutil_spark.streaming import drain
 
 _DOC_SUBDIR = "docs"
 _INDEX_SUBDIR = "index"
-
-
-def _join(base: str, *parts: str) -> str:
-    """URI-safe path join: plain "/" concatenation, never the host OS's
-    path semantics (the corpus path may be s3a://... or hdfs://...)."""
-    return "/".join([base.rstrip("/"), *parts])
-
-
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API, so the corpus
-    can live on any Spark-reachable store (s3a://, gs://, hdfs://,
-    file:). ``os.path.exists`` is wrong here: it answers for the
-    DRIVER'S local filesystem only, so on an object-store corpus it is
-    always False and the cross-batch screen would silently never run —
-    every batch would screen only against itself, accepting near-dups
-    of all prior batches with no error."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
 
 
 def _with_batch(fields: list[StructField]) -> StructType:
@@ -138,9 +120,9 @@ def read_corpus(
     partition (a partition-pruned filter, no data read) restores the
     exact pre-batch corpus state, so a replay reproduces the first run
     bit for bit."""
-    docs_dir = _join(corpus_path, _DOC_SUBDIR)
-    idx_dir = _join(corpus_path, _INDEX_SUBDIR)
-    if not _fs_exists(spark, docs_dir):
+    docs_dir = join_path(corpus_path, _DOC_SUBDIR)
+    idx_dir = join_path(corpus_path, _INDEX_SUBDIR)
+    if not path_exists(spark, docs_dir):
         return None, None
     docs_reader = index_reader = spark.read
     if docs_schema is not None:
@@ -265,10 +247,10 @@ def dedup_screen_batch(
         batch_bands.join(
             F.broadcast(accepted.select(id_col)), id_col, "left_semi"
         ).write.mode("overwrite").partitionBy("band_idx").parquet(
-            _join(corpus_path, _INDEX_SUBDIR, f"batch={batch_id}")
+            join_path(corpus_path, _INDEX_SUBDIR, f"batch={batch_id}")
         )
         accepted.write.mode("overwrite").parquet(
-            _join(corpus_path, _DOC_SUBDIR, f"batch={batch_id}")
+            join_path(corpus_path, _DOC_SUBDIR, f"batch={batch_id}")
         )
 
     return apply_batch
@@ -289,25 +271,17 @@ def run_dedup_screen_stream(
 ) -> None:
     """Drive a (bounded) document stream through the dedup-screen sink
     with availableNow; production callers drop the trigger and let the
-    micro-batch loop run continuously. Raises if the backlog does not
-    drain within ``timeout_s`` — returning silently would hand the
-    caller a partially-written corpus while micro-batches keep
-    appending in the background."""
-    q = (
+    micro-batch loop run continuously. Raises TimeoutError if the backlog
+    does not drain within ``timeout_s`` (see
+    :func:`etlutil_spark.streaming.drain`)."""
+    drain(
         docs_stream.writeStream.foreachBatch(
             dedup_screen_batch(
                 corpus_path, id_col, text_col,
                 n=n, num_hashes=num_hashes, bands=bands,
                 verify_threshold=verify_threshold,
             )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        "dedup screen stream",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"dedup screen stream did not drain within {timeout_s}s; "
-            "query stopped — corpus state covers only completed batches"
-        )

@@ -22,6 +22,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etlutil_spark.streaming import drain
+
 # The events parquet has shipped with two physical ts encodings across
 # testdata generations: TIMESTAMP(NANOS) (readable only as long via the
 # legacy nanosAsLong conf) and tz-naive timestamp[us] (inferred as
@@ -262,21 +264,17 @@ def run_stream_query(
     *,
     query_name: str,
     output_mode: str = "complete",
+    timeout_s: int = 120,
 ) -> DataFrame:
     """Drive any streaming frame to completion (availableNow) into a memory
-    sink and return the materialized table."""
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+    sink and return the materialized table. Raises TimeoutError if it does
+    not finish within ``timeout_s``: reading the sink then would hand back
+    a silently partial table."""
+    drain(
+        agg.writeStream.format("memory").queryName(query_name).outputMode(output_mode),
+        timeout_s,
+        f"stream query {query_name!r}",
     )
-    if not q.awaitTermination(120):
-        # a False return means STILL RUNNING: reading the sink now would
-        # hand back a silently partial table — stop and fail loudly
-        q.stop()
-        raise TimeoutError(f"stream query {query_name!r} did not finish in 120s")
     return agg.sparkSession.table(query_name)
 
 

@@ -18,14 +18,15 @@ ad-hoc batch reads (the topk output IS the product), and the fold reuses
 the tested batch operators (cms_sketch / cms_merge / cms_estimate)
 unchanged.
 
-State layout under ``state_path``: ``cms/batch=<id>/`` — the folded
-sketch AFTER applying batch id — and ``topk/batch=<id>/`` — that batch's
-trending estimates. A batch reads the newest state STRICTLY OLDER than
-its own id, so a foreachBatch retry recomputes from the same pre-batch
-state and overwrites its own directories: replay-idempotent by
-construction (the fold analogue of the dedup screen's exclude-own-batch
-rule). Old batch directories are pure lineage; prune them with
-sources/io.py:compaction_plan like any append-heavy table.
+State and replay: the sketch and the board are sink state of the store
+contract (``operators/store.py``, family ``trending``): one versioned
+store whose every version holds the folded sketch (``cms``) and the
+top-k (``topk``) after the batch its sidecar records. A batch reads the
+current version, folds, and commits both tables as the next version with
+one atomic ``_current`` flip, so a reader never sees a sketch without its
+board, a crash mid-build leaves a scratch dir no reader sees, and a
+replay of the committed batch is a no-op. At most two versions are kept:
+the on-disk state is as bounded as the sketch.
 
 Candidate tracking: a CMS alone cannot enumerate its keys, so the top-k
 is estimated over the union of the current batch's keys and the
@@ -38,57 +39,18 @@ decay.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-from etlutil_spark.operators.util import pin, pin_eager
 from pyspark.sql import functions as F
 
 from etlutil_spark.operators.sketch import cms_estimate, cms_merge, cms_sketch
-
-_CMS_SUBDIR = "cms"
-_TOPK_SUBDIR = "topk"
-
-
-def _join(base: str, *parts: str) -> str:
-    """URI-safe '/' join (state may live on s3a://, hdfs://, file:)."""
-    return "/".join([base.rstrip("/"), *parts])
+from etlutil_spark.operators.store import open_store, read_table, replace_state
+from etlutil_spark.operators.util import pin
+from etlutil_spark.streaming import drain
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _latest_state_batch(
-    spark: SparkSession, state_path: str, *, before: int
-) -> int | None:
-    """Newest batch id < ``before`` with persisted sketch state, probed
-    through the Hadoop FileSystem API (never os.path — the dedup
-    screen's object-store lesson)."""
-    fs, jdir = _fs(spark, _join(state_path, _CMS_SUBDIR))
-    if not fs.exists(jdir):
-        return None
-    best = None
-    for st in fs.listStatus(jdir):
-        name = st.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        bid = int(name.split("=", 1)[1])
-        if bid < before and (best is None or bid > best):
-            best = bid
-    return best
-
-
-def read_trending(
-    spark: SparkSession, state_path: str, *, before: int | None = None
-) -> DataFrame | None:
-    """The newest persisted top-k (optionally restricted to state older
-    than ``before`` — the replay guard), or None before the first
-    batch."""
-    upper = before if before is not None else 2**62
-    bid = _latest_state_batch(spark, state_path, before=upper)
-    if bid is None:
-        return None
-    return spark.read.parquet(_join(state_path, _TOPK_SUBDIR, f"batch={bid}"))
+def read_trending(spark: SparkSession, state_path: str) -> DataFrame | None:
+    """The current top-k, or None before the first batch."""
+    store = open_store(spark, state_path, "trending")
+    return None if store.meta is None else read_table(spark, store, "topk")
 
 
 def _check_decay(decay_num: int, decay_den: int) -> None:
@@ -152,48 +114,31 @@ def trending_batch(
     """Build the foreachBatch function folding the decayed CMS at
     ``state_path``.
 
-    Each call: decay the newest prior sketch (integer floor
+    Each call: decay the current sketch (integer floor
     c*decay_num/decay_den — exact, engine-portable), merge this batch's
     sketch, estimate over current-batch keys + previous top-k keys, and
-    persist both under ``batch=<id>`` with overwrite. Empty batches
-    still decay (a quiet period ages the board) as long as the batch
-    DataFrame arrives; no call, no decay — foreachBatch semantics."""
+    commit both as the next version of the state. Empty batches still
+    decay (a quiet period ages the board) as long as the batch DataFrame
+    arrives; no call, no decay — foreachBatch semantics."""
     _check_decay(decay_num, decay_den)
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.where(F.col(key_col).isNotNull()).transform(pin_eager)
-        # the newest state strictly older than this batch: its sketch and
-        # the top-k written with it (topk lands before cms, see below)
-        prev_id = _latest_state_batch(spark, state_path, before=batch_id)
-        prev_cms = prev_topk = None
-        if prev_id is not None:
-            prev_cms = spark.read.parquet(
-                _join(state_path, _CMS_SUBDIR, f"batch={prev_id}")
-            )
-            prev_topk = spark.read.parquet(
-                _join(state_path, _TOPK_SUBDIR, f"batch={prev_id}")
-            )
-        # eager pins: the write-ordering invariant below reasons about
-        # explicit materialization points
-        folded, topk = _trend_step(
-            batch, prev_cms, prev_topk, key_col, pin_eager, k=k, width=width,
-            depth=depth, decay_num=decay_num, decay_den=decay_den, seed=seed,
-        )
+        batch = batch.where(F.col(key_col).isNotNull()).transform(pin)
 
-        # ORDERING INVARIANT: topk BEFORE cms. Batch visibility is keyed
-        # on cms/batch=<id> (_latest_state_batch scans only cms/), so a
-        # crash between the two writes leaves an orphaned topk directory
-        # that NO reader can reach — every lookup still resolves to the
-        # pre-batch state — and the batch's own replay overwrites both.
-        # cms-first would instead expose a state batch whose topk read
-        # fails until the replay lands.
-        topk.write.mode("overwrite").parquet(
-            _join(state_path, _TOPK_SUBDIR, f"batch={batch_id}")
-        )
-        folded.write.mode("overwrite").parquet(
-            _join(state_path, _CMS_SUBDIR, f"batch={batch_id}")
-        )
+        def build(tmp, prev):
+            prev_cms = prev_topk = None
+            if prev is not None:
+                prev_cms = read_table(spark, prev, "cms")
+                prev_topk = read_table(spark, prev, "topk")
+            folded, topk = _trend_step(
+                batch, prev_cms, prev_topk, key_col, pin, k=k, width=width,
+                depth=depth, decay_num=decay_num, decay_den=decay_den, seed=seed,
+            )
+            folded.write.parquet(f"{tmp}/cms")
+            topk.write.parquet(f"{tmp}/topk")
+
+        replace_state(spark, state_path, "trending", batch_id, build)
 
     return apply_batch
 
@@ -228,14 +173,9 @@ def trending_fold_batches(
         raise ValueError("trending_fold_batches needs at least one batch")
     folded = topk = None
     for batch in batches:
-        # LAZY pins: nothing in this fold acts on the frames until the
-        # caller's final action, so every round's sketch/board
-        # materializes inside that one job cascade (each pin still
-        # caches and truncates lineage on first computation) instead of
-        # 2 scheduled jobs per round. The foreachBatch sink twin
-        # (trending_batch) deliberately KEEPS eager pins: its
-        # write-ordering crash invariant (topk before cms) reasons about
-        # materialization points explicitly.
+        # lazy pins: every round's sketch and board materialize inside the
+        # caller's one final action, each pin caching and truncating
+        # lineage on first computation
         folded, topk = _trend_step(
             batch.where(F.col(key_col).isNotNull()), folded, topk, key_col, pin,
             k=k, width=width, depth=depth, decay_num=decay_num,
@@ -251,16 +191,17 @@ def run_trending_stream(
     checkpoint_dir: str,
     key_col: str = "event_type",
     k: int = 10,
+    timeout_s: int = 120,
     **kwargs,
 ) -> None:
     """Drive ``trending_batch`` over a streaming DataFrame until the
-    available data is exhausted (availableNow semantics)."""
-    q = (
+    available data is exhausted (availableNow semantics). Raises
+    TimeoutError if it does not drain within ``timeout_s`` (see
+    :func:`etlutil_spark.streaming.drain`)."""
+    drain(
         stream.writeStream.foreachBatch(
             trending_batch(state_path, key_col, k=k, **kwargs)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        "trending stream",
     )
-    q.awaitTermination()

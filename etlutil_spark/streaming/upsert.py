@@ -3,7 +3,7 @@
 The streaming complement of ``operators/scd2.py``: each micro-batch of
 state observations is merged into a persisted SCD2 dimension with
 ``scd2_apply`` — the standard "CDC stream keeps a slowly-changing
-dimension current" pipeline, without Delta/Hudi (plain parquet swap).
+dimension current" pipeline, without Delta/Hudi.
 
 Why foreachBatch and not a stateful aggregation: the dimension is a
 TABLE (many rows per key, queried independently of the stream), not
@@ -14,140 +14,55 @@ batches must arrive in event-time order per key (true for in-order
 sources; enforceable with strict=True which fails the query rather than
 corrupt the dimension).
 
-At scale, swap the read-modify-overwrite for a transactional table
+Layout and replay: the dimension is sink state of the store contract
+(``operators/store.py``, family ``scd2``). Each batch reads the current
+version, merges, and commits the result as a new ``v_*`` version whose
+sidecar records the batch id; ``_current`` flips atomically, so a crash
+mid-build leaves a scratch dir no reader sees, and the batch's replay
+builds it again. A replay of a committed batch is a no-op: re-applying
+it against the post-batch dimension would trip strict=True's order
+guard on every retry and wedge the stream on its own replay. The
+version being read survives the commit, and at most two versions are
+kept. Read the dimension with :func:`read_dim`.
+
+At scale, swap the versioned parquet snapshot for a transactional table
 format's MERGE; the scd2_apply plan (broadcast touched-key split +
 rebuild sized by the batch) is unchanged — only the sink's atomicity
-mechanism differs. The parquet swap here writes to a side directory and
-renames, so a crash mid-write never leaves a half-dimension behind.
+mechanism differs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etlutil_spark.operators.util import pin_eager
-
 from etlutil_spark.operators.scd2 import scd2_apply, scd2_intervals
-
-
-def _fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) through the Hadoop API — the dimension may
-    live on any Spark-reachable store (s3a://, gs://, hdfs://, file:).
-    os.path/shutil answer only for the driver's local filesystem; with
-    them an object-store dimension silently reads as "absent" and every
-    batch restarts the dimension from scratch (the dedup-screen bug
-    class, r7 advice)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+from etlutil_spark.operators.store import open_store, read_table, replace_state
+from etlutil_spark.streaming import drain
 
 
 def read_dim(spark: SparkSession, dim_path: str) -> DataFrame | None:
     """Current dimension, or None before the first batch."""
-    fs, jp = _fs(spark, dim_path)
-    if not fs.exists(jp):
-        return None
-    return spark.read.parquet(dim_path)
+    store = open_store(spark, dim_path, "scd2")
+    return None if store.meta is None else read_table(spark, store)
 
 
-# Batch-id sidecar INSIDE the dimension directory (underscore-prefixed,
-# so parquet reads ignore it). Written into the tmp dir BEFORE the swap,
-# it commits atomically with the data it describes; apply_batch
-# short-circuits when it equals the incoming batch_id. Without it, a
-# foreachBatch REPLAY of a batch whose swap already committed (crash in
-# the window between the rename and Spark's checkpoint write) re-applies
-# against the POST-batch dimension: with strict=False the run-collapse
-# happens to make that idempotent, but with strict=True (this sink's
-# default) any multi-row-per-key batch now has rows BEFORE the key's
-# latest valid_from and the order guard raises — on every retry, wedging
-# the stream permanently on its own replay.
-_BATCH_MARKER = "_scd2_batch"
+def _scd2_sink(dim_path: str, first, merge):
+    """The foreachBatch function both SCD2 sinks share: the first batch
+    builds the dimension with ``first(batch)``, every later one with
+    ``merge(dim, batch)``. Empty batches are a no-op."""
 
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.head(1):
+            return
+        spark = batch.sparkSession
 
-def _last_applied(spark: SparkSession, dim_path: str) -> int | None:
-    fs, jp = _fs(spark, f"{dim_path}/{_BATCH_MARKER}")
-    if not fs.exists(jp):
-        return None
-    try:
-        stream = fs.open(jp)
-        try:
-            txt = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
-        return int(txt.strip())
-    except Exception:
-        # a damaged marker must not brick the sink: fall through to the
-        # normal apply path (worst case is the pre-marker behavior)
-        return None
+        def build(tmp, prev):
+            dim = None if prev is None else read_table(spark, prev)
+            (first(batch) if dim is None else merge(dim, batch)).write.parquet(tmp)
 
+        replace_state(spark, dim_path, "scd2", batch_id, build)
 
-def _write_marker(spark: SparkSession, tmp_dir: str, batch_id: int) -> None:
-    fs, jp = _fs(spark, f"{tmp_dir}/{_BATCH_MARKER}")
-    out = fs.create(jp, True)
-    try:
-        out.write(bytearray(str(int(batch_id)).encode()))
-    finally:
-        out.close()
-
-
-def _recover_interrupted_swap(spark: SparkSession, dim_path: str) -> None:
-    """Complete a swap that crashed between delete(dim) and rename(tmp).
-
-    In that window the committed post-batch dimension lives ONLY at
-    ``<dim>.tmp`` (data plus batch marker, both written before the swap
-    began) and ``dim_path`` does not exist. Without this step the
-    batch's replay reads an ABSENT dimension and silently restarts SCD2
-    history from the replayed batch alone — every prior key's history
-    lost with no error. Renaming the complete tmp into place restores
-    the committed state; the marker then short-circuits the replay like
-    any clean replay.
-
-    The write order makes the recovery unambiguous: tmp data and marker
-    are fully written BEFORE the live dir is deleted, so dim-missing ∧
-    tmp-present implies tmp is the complete post-batch state. A tmp dir
-    alongside a LIVE dimension is scratch from a run that died before
-    its swap began — the live dim is authoritative and the next write's
-    overwrite mode replaces the scratch, so it is left alone here."""
-    fs, jdim = _fs(spark, dim_path)
-    _, jtmp = _fs(spark, dim_path + ".tmp")
-    if not fs.exists(jdim) and fs.exists(jtmp):
-        if not fs.rename(jtmp, jdim):
-            raise IOError(
-                f"recovery rename {dim_path}.tmp -> {dim_path} failed"
-            )
-
-
-def _commit_swap(
-    spark: SparkSession, updated: DataFrame, dim_path: str, batch_id: int
-) -> None:
-    """Materialize ``updated`` and swap it in at ``dim_path``: checkpoint
-    (severs the plan from the files about to be replaced) -> write to
-    ``<path>.tmp`` -> marker -> delete live -> rename. Shared by the
-    upsert and CDC sinks so the swap/recovery invariants cannot drift
-    between them."""
-    materialized = updated.transform(pin_eager)
-    tmp = dim_path + ".tmp"
-    materialized.write.mode("overwrite").parquet(tmp)
-    _write_marker(spark, tmp, batch_id)
-    # swap through the Hadoop FS so the sink works on object stores
-    # (rename is atomic on HDFS/local; on S3 it is copy+delete —
-    # same "atomic-ish" caveat the module docstring already states:
-    # real deployments swap this sink for a transactional format).
-    # A crash between the delete and the rename is repaired by
-    # _recover_interrupted_swap at the next batch's entry.
-    fs, jdim = _fs(spark, dim_path)
-    if fs.exists(jdim):
-        fs.delete(jdim, True)
-    _, jtmp = _fs(spark, tmp)
-    # Hadoop FileSystem.rename reports most failures by RETURNING
-    # false, not raising (unlike os.rename) — and the live dim dir
-    # is already deleted above, so a silently failed swap would
-    # leave NO dimension at dim_path and the next batch's read_dim
-    # would restart SCD2 history from scratch. Fail the batch loudly
-    # instead; the checkpoint replays it against the pre-batch state.
-    if not fs.rename(jtmp, jdim):
-        raise IOError(f"rename {tmp} -> {dim_path} failed")
+    return apply_batch
 
 
 def scd2_upsert_batch(
@@ -159,31 +74,13 @@ def scd2_upsert_batch(
     strict: bool = True,
 ):
     """Build the foreachBatch function maintaining the dimension at
-    ``dim_path``.
-
-    Each call: read current dim -> scd2_apply (or scd2_intervals on the
-    first batch) -> materialize (localCheckpoint severs the plan from the
-    files about to be replaced) -> write to ``<path>.tmp`` -> atomic-ish
-    directory swap. Empty batches are a no-op.
-    """
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        spark = batch.sparkSession
-        _recover_interrupted_swap(spark, dim_path)
-        if _last_applied(spark, dim_path) == batch_id:
-            return  # clean replay of an already-committed batch
-        dim = read_dim(spark, dim_path)
-        if dim is None:
-            updated = scd2_intervals(batch, key_cols, ts_col, state_cols)
-        else:
-            updated = scd2_apply(
-                dim, batch, key_cols, ts_col, state_cols, strict=strict
-            )
-        _commit_swap(spark, updated, dim_path, batch_id)
-
-    return apply_batch
+    ``dim_path``: scd2_intervals on the first batch, scd2_apply on every
+    later one, each committed as a new version of the dimension."""
+    return _scd2_sink(
+        dim_path,
+        lambda b: scd2_intervals(b, key_cols, ts_col, state_cols),
+        lambda dim, b: scd2_apply(dim, b, key_cols, ts_col, state_cols, strict=strict),
+    )
 
 
 def run_scd2_upsert_stream(
@@ -199,26 +96,15 @@ def run_scd2_upsert_stream(
 ) -> None:
     """Drive a (bounded) change stream through the SCD2 sink with
     availableNow; production callers drop the trigger and let it run.
-    Raises if the backlog does not drain within ``timeout_s`` —
-    returning silently would hand the caller a dimension still being
-    mutated by in-flight micro-batches (the dedup-screen drain
-    contract)."""
-    q = (
+    Raises TimeoutError if the backlog does not drain within
+    ``timeout_s`` (see :func:`etlutil_spark.streaming.drain`)."""
+    drain(
         changes.writeStream.foreachBatch(
-            scd2_upsert_batch(
-                dim_path, key_cols, ts_col, state_cols, strict=strict
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+            scd2_upsert_batch(dim_path, key_cols, ts_col, state_cols, strict=strict)
+        ).option("checkpointLocation", checkpoint_dir),
+        timeout_s,
+        "SCD2 upsert stream",
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"SCD2 upsert stream did not drain within {timeout_s}s; "
-            "query stopped — dimension reflects only completed batches"
-        )
 
 
 def scd2_cdc_batch(
@@ -236,30 +122,16 @@ def scd2_cdc_batch(
     operators/scd2.py:scd2_apply_cdc (scd2_cdc_intervals on the first
     batch) runs per batch, so the streamed dimension can represent
     "the key left" with every interval closed and no current row. Same
-    sink mechanics (read -> merge -> checkpoint -> tmp write -> swap
-    with a raising rename); same per-key event-time-order contract,
-    which for deletes also means a tombstone arrives after the run it
-    closes (strict=True enforces both)."""
+    sink mechanics; same per-key event-time-order contract, which for
+    deletes also means a tombstone arrives after the run it closes
+    (strict=True enforces both)."""
     from etlutil_spark.operators.scd2 import scd2_apply_cdc, scd2_cdc_intervals
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.head(1):
-            return
-        spark = batch.sparkSession
-        _recover_interrupted_swap(spark, dim_path)
-        if _last_applied(spark, dim_path) == batch_id:
-            return  # clean replay of an already-committed batch
-        dim = read_dim(spark, dim_path)
-        if dim is None:
-            updated = scd2_cdc_intervals(
-                batch, key_cols, ts_col, state_cols,
-                op_col=op_col, delete_op=delete_op,
-            )
-        else:
-            updated = scd2_apply_cdc(
-                dim, batch, key_cols, ts_col, state_cols,
-                op_col=op_col, delete_op=delete_op, strict=strict,
-            )
-        _commit_swap(spark, updated, dim_path, batch_id)
-
-    return apply_batch
+    ops = dict(op_col=op_col, delete_op=delete_op)
+    return _scd2_sink(
+        dim_path,
+        lambda b: scd2_cdc_intervals(b, key_cols, ts_col, state_cols, **ops),
+        lambda dim, b: scd2_apply_cdc(
+            dim, b, key_cols, ts_col, state_cols, strict=strict, **ops
+        ),
+    )

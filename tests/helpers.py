@@ -10,6 +10,8 @@ driver ever sees it.
 from __future__ import annotations
 
 import math
+import os
+import shutil
 from datetime import date, datetime
 from decimal import Decimal
 
@@ -102,3 +104,16 @@ def compare_query(spark_df, oracle_sql_text: str, sf_dir: str) -> None:
             if len(mismatches) >= 5:
                 break
     assert not mismatches, f"value mismatches (spark vs oracle): {mismatches}"
+
+
+def crash_mid_build(path: str) -> None:
+    """Leave at ``path`` what a sink batch that dies mid-commit leaves: a
+    half-written builder dir next to the state, and a version dir inside
+    it whose sidecar never landed (an object store's non-atomic rename
+    copies file by file). Both copy the current version's data files."""
+    newest = sorted(n for n in os.listdir(path) if n.startswith("v_"))[-1]
+    for scratch in (path + "__build_0badc0ffee00", os.path.join(path, "v_9999999999_0badc0de")):
+        shutil.copytree(os.path.join(path, newest), scratch)
+        for n in os.listdir(scratch):
+            if n.startswith(("_", "._")) and not os.path.isdir(os.path.join(scratch, n)):
+                os.remove(os.path.join(scratch, n))

@@ -140,8 +140,12 @@ REUSED = {"reused", "catalog", "reattached"}
 CASES = ("reuse", "params", "data", "corrupt", "missing", "in-memory")
 
 
+# the ensure_store families; the sink families (no prefix) are below
+ENSURE_FAMILIES = {f for f, fam in S.FAMILIES.items() if fam.prefix}
+
+
 def test_registry_lists_every_family():
-    assert set(FAMILY_CASES) == set(S.FAMILIES)
+    assert set(FAMILY_CASES) == ENSURE_FAMILIES
 
 
 @pytest.mark.parametrize("case", CASES)
@@ -281,7 +285,7 @@ def test_registry_covers_every_query_store_path(spark, sf_dir, monkeypatch):
         for node in tree.body
         if isinstance(node, ast.FunctionDef) and calls_ensure(node)
     ]
-    assert len(callers) >= len(S.FAMILIES)
+    assert len(callers) >= len(ENSURE_FAMILIES)
     seen = []
 
     def spy(spark, path, family, params, source_df, build_fn):
@@ -295,9 +299,149 @@ def test_registry_covers_every_query_store_path(spark, sf_dir, monkeypatch):
     for name in callers:
         getattr(Q, name)(spark, sf_dir)
     root = store_root(spark)
-    assert {f for f, _ in seen} == set(S.FAMILIES)
+    assert {f for f, _ in seen} == ENSURE_FAMILIES
     for family, path in seen:
         top = os.path.relpath(path, root).split(os.sep)[0]
         assert not top.startswith(".."), path
         assert top.startswith(S.FAMILIES[family].prefix), (family, path)
-    assert bench._STORE_PREFIXES == tuple(f.prefix for f in S.FAMILIES.values())
+    assert bench._STORE_PREFIXES == tuple(S.FAMILIES[f].prefix for f in S.FAMILIES if f in ENSURE_FAMILIES)
+
+
+# ------------------------------------------------------ streaming sink state
+
+
+def _scd2_sink(path):
+    from etlutil_spark.streaming.upsert import scd2_upsert_batch
+
+    return scd2_upsert_batch(path, "k", "ts", "s")
+
+
+def _scd2_batch(spark, i, keys=4):
+    return spark.createDataFrame(
+        [(k, 10 * i + 1, f"s{(i + k) % 3}") for k in range(keys)], "k int, ts int, s string"
+    )
+
+
+def _read_scd2(spark, path):
+    from etlutil_spark.streaming.upsert import read_dim
+
+    return {tuple(r) for r in read_dim(spark, path).collect()}
+
+
+def _trending_sink(path):
+    from etlutil_spark.streaming.trending import trending_batch
+
+    return trending_batch(path, k=3, width=64, depth=4)
+
+
+def _trending_batch(spark, i, keys=4):
+    rows = [(f"e{(i + k) % 7}",) for k in range(keys) for _ in range(k + 1)]
+    return spark.createDataFrame(rows, "event_type string")
+
+
+def _read_trending(spark, path):
+    from etlutil_spark.streaming.trending import read_trending
+
+    return {tuple(r) for r in read_trending(spark, path).collect()}
+
+
+# family -> (sink factory, the i-th batch, the state as a set of rows)
+SINK_CASES = {
+    "scd2": (_scd2_sink, _scd2_batch, _read_scd2),
+    "trending": (_trending_sink, _trending_batch, _read_trending),
+}
+
+
+def test_sink_cases_list_every_sink_family():
+    assert set(SINK_CASES) == set(S.FAMILIES) - ENSURE_FAMILIES
+
+
+@pytest.mark.parametrize("family", sorted(SINK_CASES))
+def test_sink_replay_is_noop_and_lower_batch_raises(spark, tmp_path, family):
+    make, batch, read = SINK_CASES[family]
+    path = str(tmp_path / "state")
+    sink = make(path)
+    sink(batch(spark, 0), 0)
+    sink(batch(spark, 1), 1)
+    want, version = read(spark, path), S.store_dir(spark, path, family)
+    sink(batch(spark, 1), 1)  # a foreachBatch retry of the committed batch
+    assert read(spark, path) == want
+    assert S.store_dir(spark, path, family) == version
+    # batch 0 belongs to another checkpoint's history
+    with pytest.raises(ValueError, match="another checkpoint"):
+        sink(batch(spark, 0), 0)
+    assert read(spark, path) == want
+
+
+@pytest.mark.parametrize("family", sorted(SINK_CASES))
+def test_sink_crash_mid_build_is_invisible_then_replayed(spark, tmp_path, family):
+    from tests.helpers import crash_mid_build
+
+    make, batch, read = SINK_CASES[family]
+    ref, path = str(tmp_path / "ref"), str(tmp_path / "state")
+    for p in (ref, path):
+        sink = make(p)
+        sink(batch(spark, 0), 0)
+        sink(batch(spark, 1), 1)
+    want = read(spark, path)
+    crash_mid_build(path)  # batch 2 died mid-commit
+    assert read(spark, path) == want
+    make(path)(batch(spark, 2), 2)  # its replay
+    make(ref)(batch(spark, 2), 2)
+    assert read(spark, path) == read(spark, ref) != want
+
+
+@pytest.mark.parametrize("family", sorted(SINK_CASES))
+def test_sink_state_is_bounded(spark, tmp_path, family):
+    make, batch, read = SINK_CASES[family]
+    path = str(tmp_path / "state")
+    sink = make(path)
+    for i in range(5):
+        sink(batch(spark, i), i)
+    versions = S.store_versions(spark, path, family)
+    assert len(versions) == 2
+    assert sorted(n for n in os.listdir(path) if n.startswith("v_")) == versions
+    assert [n for n in os.listdir(tmp_path) if "__build_" in n] == []
+    meta = json.load(open(os.path.join(path, versions[-1], S.FAMILIES[family].sidecar)))
+    assert meta["batch"] == 4
+
+
+@pytest.mark.parametrize("family", sorted(SINK_CASES))
+def test_sink_refuses_state_it_cannot_read(spark, tmp_path, family):
+    """Sink state cannot be rebuilt from a source, so a damaged sidecar or
+    files of another layout at the path raise instead of starting over."""
+    make, batch, read = SINK_CASES[family]
+    path = str(tmp_path / "state")
+    sink = make(path)
+    sink(batch(spark, 0), 0)
+    sidecar = os.path.join(S.store_dir(spark, path, family), S.FAMILIES[family].sidecar)
+    S._write_text(spark, sidecar, '{"batch": "trunc')
+    with pytest.raises(ValueError, match="damaged sidecar"):
+        sink(batch(spark, 1), 1)
+    flat = str(tmp_path / "flat")
+    batch(spark, 0).write.parquet(flat)
+    with pytest.raises(ValueError, match="outside the versioned"):
+        make(flat)(batch(spark, 0), 0)
+
+
+@pytest.mark.parametrize("family", sorted(SINK_CASES))
+def test_sink_warm_batch_job_budget(spark, tmp_path, family):
+    """A warm batch against a 200-key state runs at most 12 Spark jobs
+    (local[4]: 11 for the SCD2 upsert, 9 for trending), a replay 1."""
+    make, batch, read = SINK_CASES[family]
+    sink = make(str(tmp_path / "state"))
+    sink(batch(spark, 0, keys=200), 0)
+    sc = spark.sparkContext
+
+    def jobs(i):
+        group = f"sink-budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "sink job budget")
+        try:
+            sink(batch(spark, 1, keys=200), i)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(1) <= 12
+    assert jobs(1) <= 1

@@ -1,7 +1,7 @@
 """Streaming decayed heavy-hitters (streaming/trending.py): the
 foreachBatch CMS fold must decay exactly (integer floor), rank
-deterministically, replay idempotently, and recover from a crash
-between its two state writes.
+deterministically, replay idempotently, and recover from a crash in the
+middle of a batch's commit.
 
 Fixture design: few distinct keys + width 4096 make CMS collisions
 (probability ~ keys^2/width per row) effectively impossible, so the
@@ -18,6 +18,7 @@ from etlutil_spark.streaming.trending import (
     run_trending_stream,
     trending_batch,
 )
+from tests.helpers import crash_mid_build
 
 W = dict(width=4096, depth=4)
 
@@ -27,8 +28,8 @@ def _batch(spark, counts: dict[str, int]):
     return spark.createDataFrame(rows, "event_type string")
 
 
-def _board(spark, path, **kw):
-    df = read_trending(spark, path, **kw)
+def _board(spark, path):
+    df = read_trending(spark, path)
     return {r["key"]: r["est"] for r in df.collect()}
 
 
@@ -77,19 +78,14 @@ class TestTrending:
         fb(_batch(spark, {"a": 8, "b": 3}), 1)  # foreachBatch retry
         assert _board(spark, path) == first
 
-    def test_crash_between_writes_is_invisible_then_recovers(
-        self, spark, tmp_path
-    ):
-        """Simulated crash: batch 1's topk landed but its cms did not.
-        Visibility is keyed on cms/, so readers still see batch 0;
-        the replay overwrites both and completes the fold."""
+    def test_crash_mid_build_recovers(self, spark, tmp_path):
+        """Batch 1 dies mid-commit: its scratch (a builder dir, a version
+        dir without its sidecar) is invisible, readers keep batch 0's
+        board, and the replay of batch 1 completes the fold."""
         path = str(tmp_path / "state")
         fb = trending_batch(path, decay_num=7, decay_den=8, **W)
         fb(_batch(spark, {"a": 100}), 0)
-        # orphaned topk for batch 1 (the crash-visible partial state)
-        spark.createDataFrame([("zzz", 999)], "key string, est long").write.mode(
-            "overwrite"
-        ).parquet(str(tmp_path / "state" / "topk" / "batch=1"))
+        crash_mid_build(path)
         assert _board(spark, path) == {"a": 100}
         fb(_batch(spark, {"b": 8}), 1)
         assert _board(spark, path) == {"a": 87, "b": 8}

@@ -15,7 +15,8 @@ from pyspark.sql import functions as F
 from etlutil_spark.operators.scd2 import scd2_intervals
 from etlutil_spark.sources.testdata import load_table
 from etlutil_spark.streaming.events import enrich_stream, hopping_counts
-from etlutil_spark.streaming.upsert import run_scd2_upsert_stream
+from etlutil_spark.streaming.upsert import read_dim, run_scd2_upsert_stream
+from tests.helpers import crash_mid_build
 
 
 @pytest.fixture(scope="module")
@@ -59,7 +60,7 @@ class TestScd2UpsertStream:
             checkpoint_dir=str(tmp_path / "ckpt"),
         )
 
-        got = spark.read.parquet(dim_path)
+        got = read_dim(spark, dim_path)
         want = scd2_intervals(user_states, "user_id", "ts", "event_type")
         key = lambda t: (t[0], t[2])
         assert sorted(map(tuple, got.collect()), key=key) == sorted(
@@ -99,7 +100,7 @@ class TestScd2UpsertStream:
         late.coalesce(1).write.mode("append").parquet(src_dir)
         run_once()  # restart from checkpoint: must see ONLY the late file
 
-        got = spark.read.parquet(dim_path)
+        got = read_dim(spark, dim_path)
         want = scd2_intervals(user_states, "user_id", "ts", "event_type")
         key = lambda t: (t[0], t[2])
         assert sorted(map(tuple, got.collect()), key=key) == sorted(
@@ -119,7 +120,7 @@ class TestScd2UpsertStream:
             stream, dim_path, "user_id", "ts", "event_type",
             checkpoint_dir=str(tmp_path / "ckpt1"),
         )
-        dim = spark.read.parquet(dim_path)
+        dim = read_dim(spark, dim_path)
         per_user_current = (
             dim.where(F.col("is_current") == 1).groupBy("user_id").count()
         )
@@ -211,8 +212,8 @@ class TestObjectStorePaths:
     def test_dim_on_non_local_fs_uri(self, spark, tmp_path):
         """The dimension path may be an object-store URI: a file: URI is
         invisible to os.path (the dedup-screen bug class), so this pins
-        that read_dim/the swap go through the Hadoop FS API."""
-        from etlutil_spark.streaming.upsert import read_dim, scd2_upsert_batch
+        that read_dim and the version commit go through the Hadoop FS API."""
+        from etlutil_spark.streaming.upsert import scd2_upsert_batch
 
         dim = "file:" + str(tmp_path / "dim")
         fb = scd2_upsert_batch(dim, "k", "ts", "v")
@@ -259,7 +260,7 @@ class TestScd2CdcStream:
             sink(
                 log.where((F.col("ts") > lo) & (F.col("ts") <= hi)), lo
             )
-        got = {tuple(r) for r in spark.read.parquet(dim_path).collect()}
+        got = {tuple(r) for r in read_dim(spark, dim_path).collect()}
         want = {
             tuple(r)
             for r in scd2_cdc_intervals(log, "k", "ts", "st").collect()
@@ -268,19 +269,19 @@ class TestScd2CdcStream:
         # the churned key must have NO current row
         cur = [
             r
-            for r in spark.read.parquet(dim_path).collect()
+            for r in read_dim(spark, dim_path).collect()
             if r["k"] == 2 and r["is_current"] == 1
         ]
         assert cur == []
 
 
 class TestScd2ReplayGuard:
-    """foreachBatch is at-least-once: a batch whose dim swap committed
-    can REPLAY (crash between the rename and Spark's checkpoint write).
-    Before the batch-id sidecar, that replay re-applied against the
-    POST-batch dimension and strict=True raised the out-of-order guard
-    on every retry — the sink wedged itself permanently on its own
-    replay (r12 bug hunt)."""
+    """foreachBatch is at-least-once: a batch whose commit landed can
+    REPLAY (crash between the commit and Spark's checkpoint write).
+    Re-applying it against the POST-batch dimension would make
+    strict=True raise the out-of-order guard on every retry, wedging the
+    sink on its own replay (r12 bug hunt); the batch id recorded in the
+    version's sidecar makes the replay a no-op."""
 
     def test_upsert_replay_is_noop(self, spark, tmp_path):
         from etlutil_spark.streaming.upsert import scd2_upsert_batch
@@ -291,70 +292,43 @@ class TestScd2ReplayGuard:
             [(1, 5, "a"), (1, 9, "b"), (2, 3, "x")], "k int, ts int, s string"
         )
         sink(b0, 0)
-        want = {tuple(r) for r in spark.read.parquet(dim_path).collect()}
+        want = {tuple(r) for r in read_dim(spark, dim_path).collect()}
         # replay of the committed batch: must be a no-op, not a ValueError
         sink(b0, 0)
-        assert {tuple(r) for r in spark.read.parquet(dim_path).collect()} == want
+        assert {tuple(r) for r in read_dim(spark, dim_path).collect()} == want
         # and the NEXT batch still applies normally after the replay
         sink(
             spark.createDataFrame([(1, 12, "c")], "k int, ts int, s string"), 1
         )
         rows = {
             (r.k, r.valid_from, r.valid_to, r.s)
-            for r in spark.read.parquet(dim_path).collect()
+            for r in read_dim(spark, dim_path).collect()
         }
         assert (1, 9, 12, "b") in rows and (1, 12, None, "c") in rows
 
-    def test_crash_between_delete_and_rename_recovers(self, spark, tmp_path):
-        """Crash-mid-swap: the sink deletes the live dim, then crashes
-        before renaming tmp into place. The committed post-batch state
-        now lives ONLY at <dim>.tmp; pre-fix, the replay read an absent
-        dimension and silently RESTARTED SCD2 history from the replayed
-        batch alone (batch 0's keys vanished). _recover_interrupted_swap
-        must complete the rename first, making the replay a no-op."""
-        import os
-
+    def test_crash_mid_build_recovers(self, spark, tmp_path):
+        """Batch 2 dies mid-commit: its scratch is invisible, readers keep
+        batch 1's dimension, and the replay of batch 2 completes it."""
         from etlutil_spark.streaming.upsert import scd2_upsert_batch
 
         dim_path = str(tmp_path / "dim_crash")
         sink = scd2_upsert_batch(dim_path, "k", "ts", "s", strict=True)
-        b0 = spark.createDataFrame(
-            [(1, 5, "a"), (2, 3, "x")], "k int, ts int, s string"
-        )
-        b1 = spark.createDataFrame([(1, 9, "b")], "k int, ts int, s string")
-        sink(b0, 0)
-        sink(b1, 1)
-        want = {
-            (r.k, r.valid_from, r.valid_to, r.s)
-            for r in spark.read.parquet(dim_path).collect()
-        }
-        # reconstruct the exact crash-window state: batch 1's swap wrote
-        # tmp (data + marker) and deleted the live dir, but never renamed
-        os.rename(dim_path, dim_path + ".tmp")
-        assert not os.path.exists(dim_path)
-        # replay of batch 1 must recover the committed state, then no-op
-        sink(b1, 1)
-        got = {
-            (r.k, r.valid_from, r.valid_to, r.s)
-            for r in spark.read.parquet(dim_path).collect()
-        }
-        assert got == want  # key 2's history survived the crash
-        assert not os.path.exists(dim_path + ".tmp")
-        # and the NEXT batch applies normally on the recovered dimension
-        sink(
-            spark.createDataFrame([(2, 7, "y")], "k int, ts int, s string"), 2
-        )
-        rows = {
-            (r.k, r.valid_from, r.valid_to, r.s)
-            for r in spark.read.parquet(dim_path).collect()
-        }
-        assert (2, 3, 7, "x") in rows and (2, 7, None, "y") in rows
+        sink(spark.createDataFrame([(1, 5, "a"), (2, 3, "x")], "k int, ts int, s string"), 0)
+        sink(spark.createDataFrame([(1, 9, "b")], "k int, ts int, s string"), 1)
 
-    def test_cdc_crash_between_delete_and_rename_recovers(
-        self, spark, tmp_path
-    ):
-        import os
+        def rows():
+            return {
+                (r.k, r.valid_from, r.valid_to, r.s)
+                for r in read_dim(spark, dim_path).collect()
+            }
 
+        want = rows()
+        crash_mid_build(dim_path)
+        assert rows() == want  # key 2's history is intact
+        sink(spark.createDataFrame([(2, 7, "y")], "k int, ts int, s string"), 2)
+        assert rows() == want - {(2, 3, None, "x")} | {(2, 3, 7, "x"), (2, 7, None, "y")}
+
+    def test_cdc_crash_mid_build_recovers(self, spark, tmp_path):
         from etlutil_spark.streaming.upsert import scd2_cdc_batch
 
         dim_path = str(tmp_path / "dim_cdc_crash")
@@ -366,16 +340,20 @@ class TestScd2ReplayGuard:
             ),
             0,
         )
-        b1 = spark.createDataFrame(
-            [(1, 9, None, "D")], "k int, ts int, st string, op string"
+        want = {tuple(r) for r in read_dim(spark, dim_path).collect()}
+        crash_mid_build(dim_path)
+        assert {tuple(r) for r in read_dim(spark, dim_path).collect()} == want
+        sink(
+            spark.createDataFrame(
+                [(1, 9, None, "D")], "k int, ts int, st string, op string"
+            ),
+            1,
         )
-        sink(b1, 1)
-        want = {tuple(r) for r in spark.read.parquet(dim_path).collect()}
-        os.rename(dim_path, dim_path + ".tmp")
-        sink(b1, 1)
-        assert {
-            tuple(r) for r in spark.read.parquet(dim_path).collect()
-        } == want
+        rows = {
+            (r.k, r.valid_from, r.valid_to, r.st, r.is_current)
+            for r in read_dim(spark, dim_path).collect()
+        }
+        assert (1, 5, 9, "a", False) in rows and (2, 3, None, "x", True) in rows
 
     def test_cdc_replay_is_noop(self, spark, tmp_path):
         from etlutil_spark.streaming.upsert import scd2_cdc_batch
@@ -387,6 +365,6 @@ class TestScd2ReplayGuard:
             "k int, ts int, st string, op string",
         )
         sink(b0, 0)
-        want = {tuple(r) for r in spark.read.parquet(dim_path).collect()}
+        want = {tuple(r) for r in read_dim(spark, dim_path).collect()}
         sink(b0, 0)
-        assert {tuple(r) for r in spark.read.parquet(dim_path).collect()} == want
+        assert {tuple(r) for r in read_dim(spark, dim_path).collect()} == want
