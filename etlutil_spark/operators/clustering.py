@@ -798,13 +798,15 @@ def update_ivfadc_index(
     window duplicated a replayed batch's code rows — duplicate ids in
     the serving top-k): the batch's codes OVERWRITE their own
     ``delta=<batch_id>`` partition (idempotent per batch_id), and the
-    ``_applied_<batch_id>`` marker (written LAST) merely short-circuits
-    clean replays. Model drift is the caveat frozen-model adds grow
+    ``_applied_<batch_id>`` marker (written LAST) commits them: serving
+    reads only marked deltas, and a replay of a marked one is a no-op.
+    Model drift is the caveat frozen-model adds grow
     into — re-train (rebuild) when the batch distribution departs from
     the training corpus; the recall eval harness
     (dedup_minhash_recall's pattern) is the gate for that decision."""
 
-    def write(delta_dir: str, model: dict) -> None:
+    def write(delta_dir: str, store) -> None:
+        model = store.meta
         params = model["params"]
         centroids, codebooks = model["centroids"], model["codebooks"]
         id_col = params["id_col"]

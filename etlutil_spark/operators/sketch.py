@@ -589,8 +589,8 @@ def update_hist_store(
     at-least-once delivery cannot double-count. Returns 'applied' or
     'skipped'."""
 
-    def write(delta_dir: str, meta: dict) -> None:
-        p = meta["params"]
+    def write(delta_dir: str, store) -> None:
+        p = store.meta["params"]
         _hist_delta(new_rows, p["value_col"], p["bounds"], p.get("key_col")).repartition(
             1
         ).write.mode("overwrite").parquet(delta_dir)

@@ -1,4 +1,4 @@
-"""One lifecycle for every persisted ``ensure_*`` store.
+"""One lifecycle for every persisted store and every piece of sink state.
 
 A store at ``path`` is a set of version directories plus a pointer::
 
@@ -17,20 +17,35 @@ extras (BM25 corpus counts, the IVFADC model).
 otherwise builds a new version in a builder-unique temp dir, renames it to
 the next ``v_*`` slot and flips ``_current`` with one atomic rename, so a
 rebuild never exposes a missing or half-written store to readers. The
-previous version is kept for in-flight readers; older ones are deleted.
-Concurrent builders are safe but wasteful (the last flip wins). On object
-stores without atomic rename, front this with a rename-capable filesystem.
+previous version is kept for in-flight readers; older ones are deleted,
+and so is any ``v_*`` dir without a sidecar (a dead builder's: versions
+appear only by renaming a complete build). Concurrent builders are safe
+but wasteful (the last flip wins). On object stores without atomic
+rename, front this with a rename-capable filesystem.
 
-The incremental families (postings, IVFADC, histogram) fold batches into
-the CURRENT version with :func:`apply_delta`: each batch overwrites its own
-``delta=<batch_id>`` partition and an ``_applied_<batch_id>`` marker,
-written last, absorbs replays.
+The delta families (postings, IVFADC, histogram, and the dedup-screen
+corpus) fold batches into the CURRENT version with :func:`apply_delta`:
+each batch overwrites its own ``delta=<batch_id>`` dir, then creates an
+empty ``_applied_<batch_id>`` marker. The marker is the commit point, and
+it is the one visibility rule: :func:`open_store` lists the version once,
+and :func:`read_table` reads ``delta=base`` and only the deltas whose
+marker exists, so a crashed batch is invisible until its replay commits
+it. Families without deltas read their version dir as it is.
 
-The streaming sink families (the SCD2 dimension, the trending sketch) hold
-state that each micro-batch replaces whole, at a caller-given path:
-:func:`replace_state` commits every batch as a new version whose sidecar
-records the batch id, so a replay is a no-op and at most two versions are
-ever on disk.
+The streaming sink families hold state at a caller-given path and keep
+one batch order: a replay of the last committed batch is a no-op, and a
+lower batch id raises, since that batch belongs to another checkpoint.
+The SCD2 dimension and the trending sketch are replaced whole each
+micro-batch: :func:`replace_state` commits every batch as a new version
+whose sidecar records the batch id, so at most two versions are ever on
+disk. The dedup-screen corpus is an append log: its first batch commits
+an empty version and every batch then lands as one delta of it, each
+with its accepted docs under ``docs/`` and their band rows under
+``index/``; the highest marker is the last committed batch. A sink
+family has one writer, so a commit also deletes the ``<path>__build_*``
+scratch a dead builder left beside the path. Sink state is not
+rebuildable: a damaged sidecar, or a path holding files of another
+layout, raises instead of starting over.
 """
 
 from __future__ import annotations
@@ -50,26 +65,30 @@ class Family:
     sidecar: str  # sidecar file name inside a version dir
     tables: tuple[str, ...] = ()  # sub-dirs whose schema is recorded ("" = the version dir)
     rebase: bool = False  # a data-only rebuild carries the applied batches over
+    deltas: bool = False  # batches land as delta=<batch_id> dirs (apply_delta)
 
 
 FAMILIES = {
     "cluster": Family("etlutil_spark_clstore_", "_cluster_meta.json", ("pairs", "clusters")),
     "minhash": Family("etlutil_spark_mhstore_", "_minhash_meta.json", ("signatures", "cands")),
-    "postings": Family("etlutil_spark_postings_", "_postings_meta.json", ("",)),
+    "postings": Family("etlutil_spark_postings_", "_postings_meta.json", ("",), deltas=True),
     "ivf": Family("etlutil_spark_ivfserve_", "_ivf_meta.json", ("",)),
-    "ivfadc": Family("etlutil_spark_ivfadc_", "_ivfadc_model.json", ("",)),
+    "ivfadc": Family("etlutil_spark_ivfadc_", "_ivfadc_model.json", ("",), deltas=True),
     # no recorded schema: read_hist_store infers on purpose, to catch a
     # delta whose columns disagree with the sidecar
-    "hist": Family("etlutil_spark_hist_", "_hist_meta.json", rebase=True),
+    "hist": Family("etlutil_spark_hist_", "_hist_meta.json", rebase=True, deltas=True),
     "quality": Family("etlutil_spark_qstore_", "_quality_meta.json", ("",)),
     "bucketed": Family("etlutil_spark_bucketed_", "_bucket_spec.json"),
     # streaming sink state (replace_state), kept wherever its caller says
     "scd2": Family(None, "_scd2_meta.json", ("",)),
     "trending": Family(None, "_trending_meta.json", ("cms", "topk")),
+    # no recorded schema: the sink reads with its batch's schema
+    "corpus": Family(None, "_corpus_meta.json", deltas=True),
 }
 
 _VERSION = re.compile(r"v_(\d+)_[0-9a-f]+")
 _BATCH_ID = re.compile(r"[A-Za-z0-9_.-]+")
+_MARKER = "_applied_"
 _DEGENERATE = "degenerate-"
 
 
@@ -90,6 +109,8 @@ class StoreStatus(str):
 class OpenStore(NamedTuple):
     dir: str  # the current version, or the path itself for a flat layout
     meta: dict | None  # its sidecar; None for a flat layout
+    applied: frozenset[str] = frozenset()  # batch ids whose marker exists
+    deltas: tuple[str, ...] | None = None  # the delta dirs readers see; None: no deltas
 
 
 def store_path(spark, family: str, key: str) -> str:
@@ -106,21 +127,6 @@ def _fs(spark, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def join_path(base: str, *parts: str) -> str:
-    """URI-safe path join: plain "/" concatenation, never the host OS's
-    path semantics (the path may be s3a://..., hdfs://... or file:...)."""
-    return "/".join([base.rstrip("/"), *parts])
-
-
-def path_exists(spark, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API, so state can live
-    on any Spark-reachable store. ``os.path.exists`` answers for the
-    driver's local filesystem only: on an object store it is always False,
-    and a sink that trusted it would silently start over on every batch."""
-    jvm, fs = _fs(spark, path)
-    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _read_text(spark, path: str) -> str | None:
@@ -178,26 +184,39 @@ def _delete(spark, path: str) -> None:
 
 
 def _names(spark, base: str) -> list[str]:
-    """Entry names under ``base``; [] when it does not exist."""
+    """Entry names under ``base``; [] when it does not exist. Any other
+    listing failure raises: taken for an empty dir, it would hide every
+    committed delta from a reader."""
+    from py4j.protocol import Py4JJavaError
+
     jvm, fs = _fs(spark, base)
     try:
         return [st.getPath().getName() for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(base))]
-    except Exception:
-        return []
+    except Py4JJavaError as e:
+        if jvm.java.lang.Class.forName("java.io.FileNotFoundException").isInstance(e.java_exception):
+            return []
+        raise
+
+
+def _versions(spark, base: str, family: str) -> tuple[list[str], list[str]]:
+    """(names of the complete versions under ``base``, oldest first;
+    names of the ``v_*`` dirs without a sidecar)."""
+    jvm, fs = _fs(spark, base)
+    P = jvm.org.apache.hadoop.fs.Path
+    sidecar = FAMILIES[family].sidecar
+    done, dead = [], []
+    for nm in _names(spark, base):
+        if m := _VERSION.fullmatch(nm):
+            if fs.exists(P(f"{base}/{nm}/{sidecar}")):
+                done.append((int(m.group(1)), nm))
+            else:
+                dead.append(nm)
+    return [nm for _, nm in sorted(done)], dead
 
 
 def store_versions(spark, path: str, family: str) -> list[str]:
     """Names of the complete versions under ``path``, oldest first."""
-    base = path.rstrip("/")
-    jvm, fs = _fs(spark, base)
-    P = jvm.org.apache.hadoop.fs.Path
-    sidecar = FAMILIES[family].sidecar
-    found = [
-        (int(m.group(1)), nm)
-        for nm in _names(spark, base)
-        if (m := _VERSION.fullmatch(nm)) and fs.exists(P(f"{base}/{nm}/{sidecar}"))
-    ]
-    return [nm for _, nm in sorted(found)]
+    return _versions(spark, path.rstrip("/"), family)[0]
 
 
 def _current(spark, base: str, family: str) -> str | None:
@@ -227,17 +246,45 @@ def open_store(spark, path: str, family: str, *, required: bool = False) -> Open
     meta = _read_json(spark, f"{d}/{FAMILIES[family].sidecar}")
     if required and not isinstance(meta, dict):
         raise ValueError(f"no {family} store at {path}; build one first")
-    return OpenStore(d, meta if isinstance(meta, dict) else None)
+    return _opened(spark, d, family, meta if isinstance(meta, dict) else None)
 
 
-def read_table(spark, store: OpenStore, table: str = "") -> DataFrame:
-    """One table of an opened store, read with the schema its sidecar
-    recorded (no inference job); a flat layout falls back to inference."""
+def _opened(spark, d: str, family: str, meta: dict | None) -> OpenStore:
+    """Version ``d`` with its sidecar ``meta``. A delta family lists ``d``
+    once, for its applied batches and for the delta dirs a reader may see:
+    ``delta=base`` and every ``delta=<batch_id>`` whose marker exists."""
+    if meta is None or not FAMILIES[family].deltas:
+        return OpenStore(d, meta)
+    names = _names(spark, d)
+    applied = frozenset(n[len(_MARKER):] for n in names if n.startswith(_MARKER))
+    deltas = tuple(
+        sorted(
+            n for n in names
+            if n.startswith("delta=") and (n == "delta=base" or n[len("delta="):] in applied)
+        )
+    )
+    return OpenStore(d, meta, applied, deltas)
+
+
+def read_table(spark, store: OpenStore, table: str = "", schema=None) -> DataFrame:
+    """One table of an opened store, read with ``schema``, else with the
+    schema its sidecar recorded (no inference job); a flat layout or an
+    unrecorded table falls back to inference. A delta family's table is
+    read from the visible deltas only; the version dir's own table keeps
+    ``delta`` as a partition column."""
     from pyspark.sql.types import StructType
 
-    schema = ((store.meta or {}).get("schemas") or {}).get(table)
-    reader = spark.read if schema is None else spark.read.schema(StructType.fromJson(schema))
-    return reader.parquet(f"{store.dir}/{table}" if table else store.dir)
+    if schema is None:
+        recorded = ((store.meta or {}).get("schemas") or {}).get(table)
+        schema = None if recorded is None else StructType.fromJson(recorded)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    if store.deltas is None:
+        return reader.parquet(f"{store.dir}/{table}" if table else store.dir)
+    if table:
+        return reader.parquet(*(f"{store.dir}/{d}/{table}" for d in store.deltas))
+    return reader.option("basePath", store.dir).parquet(
+        *(f"{store.dir}/{d}" for d in store.deltas)
+    )
 
 
 def commit_version(
@@ -259,6 +306,13 @@ def commit_version(
     base = path.rstrip("/")
     jvm, fs = _fs(spark, base)
     P = jvm.org.apache.hadoop.fs.Path
+    parent = P(base).getParent()
+    if fam.prefix is None and parent is not None:
+        # sink state has one writer: a __build_* sibling is a dead builder's
+        scratch = f"{P(base).getName()}__build_"
+        for nm in _names(spark, parent.toString()):
+            if nm.startswith(scratch):
+                _delete(spark, f"{parent.toString()}/{nm}")
     tmp = f"{base}__build_{uuid.uuid4().hex[:12]}"
     try:
         meta = {**meta, **(build_fn(tmp) or {})}
@@ -289,13 +343,14 @@ def commit_version(
     if not fs.rename(P(tmp), P(f"{base}/{vname}")):
         raise IOError(f"store version commit rename failed; build kept at {tmp}")
     _write_text(spark, base + "/_current", vname)
-    for old in store_versions(spark, base, family)[:-2]:
+    done, dead = _versions(spark, base, family)
+    for old in dead + done[:-2]:
         _delete(spark, f"{base}/{old}")  # keep the new and the previous
     return f"{base}/{vname}"
 
 
 def _applied_batch(name: str) -> bool:
-    return name.startswith("_applied_") or (
+    return name.startswith(_MARKER) or (
         name.startswith("delta=") and name != "delta=base"
     )
 
@@ -347,16 +402,20 @@ def apply_delta(
     spark,
     path: str,
     family: str,
-    batch_id: str,
-    write_fn: Callable[[str, dict], dict | None],
+    batch_id: str | int,
+    write_fn: Callable[[str, OpenStore], dict | None],
 ) -> str:
-    """Fold one batch into an incremental store's current version.
-    ``write_fn(delta_dir, meta)`` writes the batch to its own
-    ``delta=<batch_id>`` dir in overwrite mode (a retry replaces a partial
-    or committed earlier attempt) and returns the sidecar to write back,
-    or None. The ``_applied_<batch_id>`` marker is written last and makes
-    a replay a no-op, so at-least-once delivery never double-counts.
-    Returns 'applied' or 'skipped'."""
+    """Fold one batch into the current version of a delta family.
+    ``write_fn(delta_dir, store)`` gets the opened current version and
+    writes the batch to its own ``delta=<batch_id>`` dir in overwrite mode
+    (a retry replaces a partial earlier attempt); it returns the sidecar
+    to write back, or None. The empty ``_applied_<batch_id>`` marker is
+    created last: it commits the delta, which readers see only from then
+    on, and makes a replay a no-op, so at-least-once delivery never
+    double-counts. Sink state (the dedup-screen corpus) takes integer
+    batch ids in the sink batch order (see :func:`replace_state`), its
+    first batch commits an empty version, and its last committed batch is
+    its highest marker. Returns 'applied' or 'skipped'."""
     bid = str(batch_id)
     # batch_id names a directory: it must be one safe path segment, and
     # never 'base', which would overwrite the store's own base partition
@@ -365,16 +424,60 @@ def apply_delta(
             f"invalid batch_id {batch_id!r} — must match [A-Za-z0-9_.-]+ "
             "and must not be the reserved value 'base'"
         )
-    store = open_store(spark, path, family, required=True)
-    jvm, fs = _fs(spark, store.dir)
-    marker = f"{store.dir}/_applied_{bid}"
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(marker)):
-        return "skipped"
-    meta = write_fn(f"{store.dir}/delta={bid}", store.meta)
+    if FAMILIES[family].prefix is None:
+        store = _open_sink(spark, path, family)
+        if store is None:
+            commit_version(spark, path, family, {}, lambda tmp: None)
+            store = _open_sink(spark, path, family)
+        done = max(map(int, store.applied), default=None)
+        if _replayed(family, path, done, int(batch_id)):
+            return "skipped"
+    else:
+        store = open_store(spark, path, family, required=True)
+        if bid in store.applied:
+            return "skipped"
+    meta = write_fn(f"{store.dir}/delta={bid}", store)
     if meta is not None:
         _write_json(spark, f"{store.dir}/{FAMILIES[family].sidecar}", meta)
-    _write_text(spark, marker, "1")
+    jvm, fs = _fs(spark, store.dir)
+    fs.create(jvm.org.apache.hadoop.fs.Path(f"{store.dir}/{_MARKER}{bid}"), True).close()
     return "applied"
+
+
+def _open_sink(spark, path: str, family: str) -> OpenStore | None:
+    """The current version of sink state at ``path``; None before its
+    first batch. Sink state is not rebuildable, so it never silently
+    starts over: a damaged sidecar, or a path holding files of another
+    layout, raises."""
+    base = path.rstrip("/")
+    cur = _current(spark, base, family)
+    if cur is None:
+        stray = [n for n in _names(spark, base) if not (_VERSION.fullmatch(n) or "_current" in n)]
+        if stray:
+            raise ValueError(
+                f"{path} holds {stray[:3]} outside the versioned {family} layout; "
+                "move it aside or point the sink at an empty path"
+            )
+        return None
+    fam = FAMILIES[family]
+    meta = _read_json(spark, f"{cur}/{fam.sidecar}")
+    # a snapshot's sidecar records its batch; a delta family's markers do
+    if not isinstance(meta, dict) or not (fam.deltas or isinstance(meta.get("batch"), int)):
+        raise ValueError(f"{family} state at {path}: damaged sidecar in {cur}")
+    return _opened(spark, cur, family, meta)
+
+
+def _replayed(family: str, path: str, done: int | None, batch_id: int) -> bool:
+    """The batch order of sink state, whose last committed batch is
+    ``done`` (None before the first): a replay of ``done`` is a no-op
+    (True); a lower batch id raises, since that batch belongs to another
+    checkpoint."""
+    if done is not None and done > batch_id:
+        raise ValueError(
+            f"{family} state at {path} already holds batch {done}; batch "
+            f"{batch_id} belongs to another checkpoint"
+        )
+    return done == batch_id
 
 
 def replace_state(
@@ -391,34 +494,12 @@ def replace_state(
     :func:`commit_version` makes it current with ``batch_id`` in its
     sidecar. ``prev`` survives the commit, so ``build_fn`` may read it
     lazily. A replay of the committed batch is a no-op; a lower batch id
-    raises, since that state belongs to another checkpoint, and so does
-    a damaged sidecar or a path holding files of another layout: sink
-    state is not rebuildable, so it never silently starts over.
-    Returns 'applied' or 'skipped'."""
-    base = path.rstrip("/")
-    cur = _current(spark, base, family)
-    prev = None
-    if cur is not None:
-        meta = _read_json(spark, f"{cur}/{FAMILIES[family].sidecar}")
-        done = meta.get("batch") if isinstance(meta, dict) else None
-        if not isinstance(done, int):
-            raise ValueError(f"{family} state at {path}: damaged sidecar in {cur}")
-        if done == batch_id:
-            return "skipped"
-        if done > batch_id:
-            raise ValueError(
-                f"{family} state at {path} already holds batch {done}; batch "
-                f"{batch_id} belongs to another checkpoint"
-            )
-        prev = OpenStore(cur, meta)
-    else:
-        stray = [n for n in _names(spark, base) if not (_VERSION.fullmatch(n) or "_current" in n)]
-        if stray:
-            raise ValueError(
-                f"{path} holds {stray[:3]} outside the versioned {family} layout; "
-                "move it aside or point the sink at an empty path"
-            )
-    commit_version(spark, base, family, {"batch": batch_id}, lambda tmp: build_fn(tmp, prev))
+    raises, and so does a damaged sidecar or a path holding files of
+    another layout. Returns 'applied' or 'skipped'."""
+    prev = _open_sink(spark, path, family)
+    if prev is not None and _replayed(family, path, prev.meta["batch"], batch_id):
+        return "skipped"
+    commit_version(spark, path, family, {"batch": batch_id}, lambda tmp: build_fn(tmp, prev))
     return "applied"
 
 

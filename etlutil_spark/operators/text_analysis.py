@@ -876,15 +876,17 @@ def _postings_scan(spark, path: str, terms: list[str], who: str):
     """The serving preamble of a postings store: ``(postings, id_col,
     n_docs, avgdl)``, where ``postings`` scans only the buckets of
     ``terms`` and only their rows, and the corpus counts are the base
-    build's plus every applied increment's (idempotent per batch_id —
+    build's plus every committed increment's (idempotent per batch_id —
     see update_postings_store)."""
     store = open_store(spark, path, "postings", required=True)
     meta = store.meta
     n_buckets = meta["params"]["n_buckets"]
     n_docs, sum_dl = int(meta["n_docs"]), int(meta["sum_dl"])
-    for d in meta.get("deltas", {}).values():
-        n_docs += int(d["n_docs"])
-        sum_dl += int(d["sum_dl"])
+    # only committed increments count, as only their postings are read
+    for bid, d in meta.get("deltas", {}).items():
+        if bid in store.applied:
+            n_docs += int(d["n_docs"])
+            sum_dl += int(d["sum_dl"])
     if n_docs == 0:
         raise ValueError(f"{who}: empty postings store")
     probes = sorted({_term_bucket(t, n_buckets) for t in terms})
@@ -956,11 +958,13 @@ def update_postings_store(
     a replayed batch): every step is IDEMPOTENT per batch_id — the
     delta write OVERWRITES its own partition directory, the sidecar
     entry is keyed by batch_id (rewritten, never added twice), and the
-    ``_applied_<batch_id>`` marker (written LAST) merely short-circuits
-    clean replays. A crash at any point leaves a retry that converges
-    to exactly one application."""
+    ``_applied_<batch_id>`` marker (written LAST) commits both: serving
+    reads neither the postings nor the counts of an unmarked batch, and
+    a replay of a marked one is a no-op. A crash at any point leaves a
+    retry that converges to exactly one application."""
 
-    def write(delta_dir: str, meta: dict) -> dict:
+    def write(delta_dir: str, store) -> dict:
+        meta = store.meta
         p = meta["params"]
         meta["deltas"][str(batch_id)] = _write_postings(
             new_docs, delta_dir, p["id_col"], p["text_col"], p["n_buckets"]

@@ -87,8 +87,8 @@ def pin(df: DataFrame) -> DataFrame:
 def pin_eager(df: DataFrame) -> DataFrame:
     """:func:`pin` with eager materialization — the frame is computed NOW,
     before this call returns. For call sites whose correctness reasoning
-    depends on an explicit materialization point (streaming sink
-    write-ordering crash invariants), not just on reuse."""
+    depends on an explicit materialization point (a streaming sink
+    severing from its source), not just on reuse."""
     return _pin_impl(df, eager=True)
 
 

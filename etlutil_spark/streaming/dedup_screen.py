@@ -11,7 +11,7 @@ O(corpus) re-sketching.
 
 Why foreachBatch and not a stateful operator: the dedup state is the
 band index — a TABLE keyed by (band_idx, band_hash) that must also
-serve ad-hoc batch screens and compaction, not per-key running state
+serve ad-hoc batch screens, not per-key running state
 in a state store (and it is unbounded over an infinite stream, which
 state stores must not be). foreachBatch hands each micro-batch to the
 band-level helpers of the batch operators (``band_pairs``,
@@ -36,7 +36,7 @@ every step reads them:
   so stored band rows are exactly what ``minhash_band_index`` computes
   over the accepted docs, with no re-sketch.
 
-The corpus trees are read with explicit schemas (the batch schema for
+The corpus tables are read with explicit schemas (the batch schema for
 the docs, a fixed one for the index), so no read runs a schema-inference
 job, and no step probes an unmaterialized plan's partition count. A
 warm 24-document batch with no near-dups, against a stored corpus, runs
@@ -53,13 +53,20 @@ over the union may drop it. The invariant that DOES hold, and that
 ``tests/test_streaming_dedup_screen.py`` pins: the accepted corpus
 never contains a verified near-dup PAIR at the configured threshold.
 
-Layout under ``corpus_path``: ``docs/batch=<id>/`` and
-``index/batch=<id>/`` (band rows, partitioned by band_idx inside each
-batch dir). Per-batch-id subdirectories written with overwrite make
-foreachBatch retries idempotent — a replayed batch rewrites its own
-directory instead of double-appending. Periodic small-file compaction
-of both trees is ``sources/io.py:compaction_plan``'s job, exactly as
-for any append-heavy table.
+The corpus is the ``corpus`` family of the store contract
+(``operators/store.py``). Its first batch commits an empty version of
+``corpus_path``, and every non-empty batch then lands as one delta of
+it through ``apply_delta``::
+
+    <corpus_path>/v_*/delta=<batch_id>/docs/    the accepted docs
+    <corpus_path>/v_*/delta=<batch_id>/index/   their band rows
+    <corpus_path>/v_*/_applied_<batch_id>       the commit point, written last
+
+A reader sees a batch only once its marker exists, so a batch that
+crashed mid-write is invisible, and its replay rewrites it. A replay of
+the last committed batch is a no-op (the batch is not screened again);
+a lower batch id raises, since it belongs to another checkpoint, and so
+does a path holding files of another layout.
 """
 
 from __future__ import annotations
@@ -77,71 +84,55 @@ from etlutil_spark.operators.dedup import (
     shingle_sets,
     signatures_from_shingles,
 )
-from etlutil_spark.operators.store import join_path, path_exists
+from etlutil_spark.operators.store import OpenStore, apply_delta, open_store, read_table
 from etlutil_spark.operators.util import pin, pin_eager
 from etlutil_spark.streaming import drain
 
-_DOC_SUBDIR = "docs"
-_INDEX_SUBDIR = "index"
+
+def _nullable(fields: list[StructField]) -> StructType:
+    """``fields`` as parquet stores them: all nullable."""
+    return StructType([StructField(f.name, f.dataType, True) for f in fields])
 
 
-def _with_batch(fields: list[StructField]) -> StructType:
-    """A corpus tree's read schema: ``fields`` (all nullable, as parquet
-    stores them) plus the ``batch`` partition column."""
-    return StructType(
-        [StructField(f.name, f.dataType, True) for f in fields]
-        + [StructField("batch", LongType(), True)]
+def _corpus(
+    spark: SparkSession,
+    store: OpenStore,
+    docs_schema: StructType | None = None,
+    id_col: str = "doc_id",
+) -> tuple[DataFrame | None, DataFrame | None]:
+    """(accepted docs, band index) of an opened corpus's committed
+    batches, or (None, None) before the first commit.
+
+    ``docs_schema`` (the stream's batch schema) skips parquet schema
+    inference, a Spark job per table per read: the docs then read with
+    it and the index with the fixed (``id_col``, band_idx int, band_hash
+    bigint) schema, the id typed as in ``docs_schema``. Without it both
+    schemas are inferred from the files."""
+    if not store.deltas:
+        return None, None
+    index_schema = None
+    if docs_schema is not None:
+        index_schema = _nullable(
+            [
+                docs_schema[id_col],
+                StructField("band_idx", IntegerType()),
+                StructField("band_hash", LongType()),
+            ]
+        )
+        docs_schema = _nullable(docs_schema.fields)
+    return (
+        read_table(spark, store, "docs", docs_schema),
+        read_table(spark, store, "index", index_schema),
     )
 
 
 def read_corpus(
-    spark: SparkSession,
-    corpus_path: str,
-    *,
-    exclude_batch: int | None = None,
-    docs_schema: StructType | None = None,
-    id_col: str = "doc_id",
+    spark: SparkSession, corpus_path: str
 ) -> tuple[DataFrame | None, DataFrame | None]:
-    """(accepted docs, band index), or (None, None) before the first
-    batch. Reads the batch=N partition trees; the synthetic ``batch``
-    partition column is dropped so the frames match the batch schema.
-
-    ``docs_schema`` (the stream's batch schema) skips parquet schema
-    inference, a Spark job per tree per read: the docs tree then reads
-    with it and the index tree with the fixed (``id_col``, band_idx int,
-    band_hash bigint) schema, the id typed as in ``docs_schema``.
-    Without it both schemas are inferred from the files.
-
-    ``exclude_batch`` is the replay guard: when foreachBatch retries a
-    batch id, the corpus already holds that batch's OWN previous output
-    — screening against it would mark every doc a dup of itself and the
-    idempotent overwrite would then erase the batch (found by
-    test_batch_replay_is_idempotent). Excluding the batch's own
-    partition (a partition-pruned filter, no data read) restores the
-    exact pre-batch corpus state, so a replay reproduces the first run
-    bit for bit."""
-    docs_dir = join_path(corpus_path, _DOC_SUBDIR)
-    idx_dir = join_path(corpus_path, _INDEX_SUBDIR)
-    if not path_exists(spark, docs_dir):
-        return None, None
-    docs_reader = index_reader = spark.read
-    if docs_schema is not None:
-        docs_reader = spark.read.schema(_with_batch(docs_schema.fields))
-        index_reader = spark.read.schema(
-            _with_batch(
-                [
-                    docs_schema[id_col],
-                    StructField("band_idx", IntegerType()),
-                    StructField("band_hash", LongType()),
-                ]
-            )
-        )
-    docs = docs_reader.parquet(docs_dir)
-    index = index_reader.parquet(idx_dir)
-    if exclude_batch is not None:
-        docs = docs.where(F.col("batch") != exclude_batch)
-        index = index.where(F.col("batch") != exclude_batch)
-    return docs.drop("batch"), index.drop("batch")
+    """(accepted docs, band index) of every committed batch at
+    ``corpus_path``, or (None, None) before the first; the docs have the
+    batch schema."""
+    return _corpus(spark, open_store(spark, corpus_path, "corpus"))
 
 
 def dedup_screen_batch(
@@ -160,19 +151,21 @@ def dedup_screen_batch(
     Each call: drop exact-id repeats -> sketch the batch once -> drop
     intra-batch near-dups (keep-first by id), ids already in the corpus
     and near-dups of the stored index (candidate-only verify) -> append
-    accepted docs + their band rows under this batch's id. Empty batches
-    are a no-op."""
+    accepted docs + their band rows as this batch's delta of the corpus.
+    Empty batches and replays of the last committed batch are a no-op."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        if "batch" in batch.columns:
-            raise ValueError(
-                "'batch' is the reserved partition-discovery column of the "
-                "corpus layout; rename the incoming column"
-            )
         if not batch.head(1):
             return
+        spark = batch.sparkSession
+        apply_delta(
+            spark, corpus_path, "corpus", batch_id,
+            lambda delta_dir, store: screen(batch, store, delta_dir),
+        )
+
+    def screen(batch: DataFrame, store: OpenStore, delta_dir: str) -> None:
         spark = batch.sparkSession
         # sever from the streaming source: every operator below is a
         # plain batch transform over a materialized micro-batch
@@ -200,15 +193,11 @@ def dedup_screen_batch(
             F.col("id_b").alias(id_col)
         )
 
-        # (2) cross-corpus screen against the stored band index,
-        # excluding this batch id's own partition (replay guard). Every
+        # (2) cross-corpus screen against the committed band index. Every
         # batch doc is probed, not only the intra-batch survivors: a
         # rejected doc's hits change nothing, and the probe then does
         # not wait for step (1).
-        corpus_docs, corpus_index = read_corpus(
-            spark, corpus_path, exclude_batch=batch_id,
-            docs_schema=batch.schema, id_col=id_col,
-        )
+        corpus_docs, corpus_index = _corpus(spark, store, batch.schema, id_col)
         if corpus_docs is not None:
             # exact-id screen: dropDuplicates above is intra-batch only,
             # so a doc_id accepted in a PRIOR batch must be rejected here
@@ -235,23 +224,12 @@ def dedup_screen_batch(
             F.broadcast(rejected), id_col, "left_anti"
         ).transform(pin_eager)
 
-        # (3) idempotent append: this batch owns its subdirectory, and a
-        # replayed batch_id overwrites rather than double-appends. The
-        # index rows are the pinned band rows of the accepted docs.
-        # ORDERING INVARIANT: index BEFORE docs. read_corpus keys corpus
-        # existence on docs/; with index-first, a crash between the two
-        # writes leaves index-only state that the batch's own replay
-        # overwrites, whereas docs-first would leave a docs tree whose
-        # index dir does not exist and every replay's corpus read would
-        # fail on the missing path.
+        # (3) this batch's delta: the accepted docs and their pinned band
+        # rows, each in overwrite mode, so a retry replaces a partial write
         batch_bands.join(
             F.broadcast(accepted.select(id_col)), id_col, "left_semi"
-        ).write.mode("overwrite").partitionBy("band_idx").parquet(
-            join_path(corpus_path, _INDEX_SUBDIR, f"batch={batch_id}")
-        )
-        accepted.write.mode("overwrite").parquet(
-            join_path(corpus_path, _DOC_SUBDIR, f"batch={batch_id}")
-        )
+        ).write.mode("overwrite").parquet(f"{delta_dir}/index")
+        accepted.write.mode("overwrite").parquet(f"{delta_dir}/docs")
 
     return apply_batch
 

@@ -117,3 +117,15 @@ def crash_mid_build(path: str) -> None:
         for n in os.listdir(scratch):
             if n.startswith(("_", "._")) and not os.path.isdir(os.path.join(scratch, n)):
                 os.remove(os.path.join(scratch, n))
+
+
+def crash_mid_delta(path: str, batch_id, like) -> None:
+    """Leave in the current version at ``path`` what a batch that dies
+    before its ``_applied_`` marker leaves: a complete
+    ``delta=<batch_id>`` dir without a marker. It copies the committed
+    delta of batch ``like``, so a reader that sees it shows it."""
+    newest = sorted(n for n in os.listdir(path) if n.startswith("v_"))[-1]
+    shutil.copytree(
+        os.path.join(path, newest, f"delta={like}"),
+        os.path.join(path, newest, f"delta={batch_id}"),
+    )

@@ -365,8 +365,14 @@ class TestEnsureServingStores:
             tuple(r)
             for r in bm25_serve(spark, inc_path, ["alpha", "beta"], k=10).collect()
         ]
-        # crash window: delta partition + sidecar entry committed, marker lost
+        # crash window: delta partition + sidecar entry written, marker lost
         os.remove(os.path.join(store_dir(spark, inc_path, "postings"), "_applied_b1"))
+        # uncommitted: serving reads neither its postings nor its counts
+        base_path = str(tmp_path / "inc_base")
+        ensure_postings_store(spark, base, base_path, n_buckets=8)
+        assert [
+            tuple(r) for r in bm25_serve(spark, inc_path, ["alpha", "beta"], k=10).collect()
+        ] == [tuple(r) for r in bm25_serve(spark, base_path, ["alpha", "beta"], k=10).collect()]
         assert update_postings_store(spark, batch, inc_path, batch_id="b1") == "applied"
         got = [
             tuple(r)

@@ -569,9 +569,11 @@ class TestHistStore:
         base = spark.createDataFrame([(v,) for v in range(0, 30)], "v long")
         path = str(tmp_path / "hist_strict")
         ensure_hist_store(spark, base, path, value_col="v", bounds=self.BOUNDS)
+        cur = store_dir(spark, path, "hist")
         spark.createDataFrame(
             [(1, 1, 3, "x")], "bucket long, lo long, c long, stray string"
-        ).write.mode("overwrite").parquet(store_dir(spark, path, "hist") + "/delta=bad")
+        ).write.mode("overwrite").parquet(cur + "/delta=bad")
+        open(cur + "/_applied_bad", "w").close()  # committed: readers see it
         with pytest.raises(Exception, match="does not match its metadata"):
             read_hist_store(spark, path).collect()
 

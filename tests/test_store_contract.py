@@ -15,12 +15,14 @@ import json
 import os
 import sys
 import uuid
+from typing import Callable, NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
 
 from etlutil_spark.operators import dedup, text_analysis
 from etlutil_spark.operators import store as S
+from tests.helpers import crash_mid_build, crash_mid_delta
 
 DOCS = [
     (1, "s1", "en", 40, "the quick brown fox jumps over the lazy dog tonight"),
@@ -345,11 +347,51 @@ def _read_trending(spark, path):
     return {tuple(r) for r in read_trending(spark, path).collect()}
 
 
-# family -> (sink factory, the i-th batch, the state as a set of rows)
+def _corpus_sink(path):
+    from etlutil_spark.streaming.dedup_screen import dedup_screen_batch
+
+    return dedup_screen_batch(path)
+
+
+def _corpus_batch(spark, i, keys=4):
+    # docs that share no word: the screen accepts every one
+    rows = [
+        (i * keys + k, " ".join(f"w{i}x{k}x{j}" for j in range(8))) for k in range(keys)
+    ]
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def _read_corpus(spark, path):
+    """The stored docs and band rows as a sorted list, so a doc or a band
+    row read twice shows."""
+    from etlutil_spark.streaming.dedup_screen import read_corpus
+
+    docs, index = read_corpus(spark, path)
+    if docs is None:
+        return []
+    return sorted(
+        [("doc", *r) for r in docs.collect()]
+        + [("band", *r) for r in index.select("doc_id", "band_idx", "band_hash").collect()]
+    )
+
+
+class Sink(NamedTuple):
+    make: Callable  # path -> the foreachBatch function
+    batch: Callable  # (spark, i, keys=4) -> the i-th batch
+    read: Callable  # (spark, path) -> the state as a set or a sorted list of rows
+    crash: Callable  # path -> leaves what batch 2 leaves when it dies mid-commit
+    warm_jobs: int  # Spark jobs a warm 200-key batch may run
+
+
 SINK_CASES = {
-    "scd2": (_scd2_sink, _scd2_batch, _read_scd2),
-    "trending": (_trending_sink, _trending_batch, _read_trending),
+    "scd2": Sink(_scd2_sink, _scd2_batch, _read_scd2, crash_mid_build, 12),
+    "trending": Sink(_trending_sink, _trending_batch, _read_trending, crash_mid_build, 12),
+    "corpus": Sink(
+        _corpus_sink, _corpus_batch, _read_corpus, lambda p: crash_mid_delta(p, 2, like=0), 20
+    ),
 }
+# the sinks whose every batch commits a new version (replace_state)
+SNAPSHOT_SINKS = ["scd2", "trending"]
 
 
 def test_sink_cases_list_every_sink_family():
@@ -358,7 +400,7 @@ def test_sink_cases_list_every_sink_family():
 
 @pytest.mark.parametrize("family", sorted(SINK_CASES))
 def test_sink_replay_is_noop_and_lower_batch_raises(spark, tmp_path, family):
-    make, batch, read = SINK_CASES[family]
+    make, batch, read, *_ = SINK_CASES[family]
     path = str(tmp_path / "state")
     sink = make(path)
     sink(batch(spark, 0), 0)
@@ -375,25 +417,27 @@ def test_sink_replay_is_noop_and_lower_batch_raises(spark, tmp_path, family):
 
 @pytest.mark.parametrize("family", sorted(SINK_CASES))
 def test_sink_crash_mid_build_is_invisible_then_replayed(spark, tmp_path, family):
-    from tests.helpers import crash_mid_build
-
-    make, batch, read = SINK_CASES[family]
+    """A batch that dies mid-commit leaves nothing a reader sees, and its
+    replay commits it and removes what a dead builder left."""
+    make, batch, read, crash, _ = SINK_CASES[family]
     ref, path = str(tmp_path / "ref"), str(tmp_path / "state")
     for p in (ref, path):
         sink = make(p)
         sink(batch(spark, 0), 0)
         sink(batch(spark, 1), 1)
     want = read(spark, path)
-    crash_mid_build(path)  # batch 2 died mid-commit
+    crash(path)  # batch 2 died mid-commit
     assert read(spark, path) == want
     make(path)(batch(spark, 2), 2)  # its replay
     make(ref)(batch(spark, 2), 2)
     assert read(spark, path) == read(spark, ref) != want
+    assert [n for n in os.listdir(tmp_path) if "__build_" in n] == []
+    assert S._versions(spark, path, family)[1] == []  # no version without a sidecar
 
 
-@pytest.mark.parametrize("family", sorted(SINK_CASES))
+@pytest.mark.parametrize("family", SNAPSHOT_SINKS)
 def test_sink_state_is_bounded(spark, tmp_path, family):
-    make, batch, read = SINK_CASES[family]
+    make, batch, read, *_ = SINK_CASES[family]
     path = str(tmp_path / "state")
     sink = make(path)
     for i in range(5):
@@ -410,7 +454,7 @@ def test_sink_state_is_bounded(spark, tmp_path, family):
 def test_sink_refuses_state_it_cannot_read(spark, tmp_path, family):
     """Sink state cannot be rebuilt from a source, so a damaged sidecar or
     files of another layout at the path raise instead of starting over."""
-    make, batch, read = SINK_CASES[family]
+    make, batch, read, *_ = SINK_CASES[family]
     path = str(tmp_path / "state")
     sink = make(path)
     sink(batch(spark, 0), 0)
@@ -426,9 +470,10 @@ def test_sink_refuses_state_it_cannot_read(spark, tmp_path, family):
 
 @pytest.mark.parametrize("family", sorted(SINK_CASES))
 def test_sink_warm_batch_job_budget(spark, tmp_path, family):
-    """A warm batch against a 200-key state runs at most 12 Spark jobs
-    (local[4]: 11 for the SCD2 upsert, 9 for trending), a replay 1."""
-    make, batch, read = SINK_CASES[family]
+    """A warm batch against a 200-key state runs at most the family's
+    budget of Spark jobs (local[4]: 11 for the SCD2 upsert, 9 for
+    trending, 17 for the dedup screen), a replay 1."""
+    make, batch, read, _, warm_jobs = SINK_CASES[family]
     sink = make(str(tmp_path / "state"))
     sink(batch(spark, 0, keys=200), 0)
     sc = spark.sparkContext
@@ -443,5 +488,52 @@ def test_sink_warm_batch_job_budget(spark, tmp_path, family):
             sc.setLocalProperty("spark.job.description", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    assert jobs(1) <= 12
+    assert jobs(1) <= warm_jobs
     assert jobs(1) <= 1
+
+
+# ------------------------------------------------------------ delta visibility
+
+
+def _postings_with_delta(spark, path):
+    docs = spark.createDataFrame(DOCS, DOCS_SCHEMA)
+    text_analysis.ensure_postings_store(spark, docs.where("doc_id <= 3"), path, n_buckets=8)
+    text_analysis.update_postings_store(spark, docs.where("doc_id > 3"), path, batch_id="b1")
+    return "b1"
+
+
+def _hist_with_delta(spark, path):
+    from etlutil_spark.operators.sketch import ensure_hist_store, update_hist_store
+
+    rows = spark.createDataFrame([(v,) for v in range(40)], "v long")
+    ensure_hist_store(spark, rows.where("v < 20"), path, value_col="v", bounds=BOUNDS)
+    update_hist_store(spark, rows.where("v >= 20"), path, batch_id="b1")
+    return "b1"
+
+
+def _corpus_with_delta(spark, path):
+    sink = _corpus_sink(path)
+    sink(_corpus_batch(spark, 0), 0)
+    sink(_corpus_batch(spark, 1), 1)
+    return 1
+
+
+# family -> (builds a store with one committed delta and returns its batch
+# id, the store's reader as a sorted list of rows)
+DELTA_CASES = {
+    "postings": (_postings_with_delta, lambda spark, p: sorted(_read_postings(spark, p, "").collect())),
+    "hist": (_hist_with_delta, lambda spark, p: sorted(_read_hist(spark, p, "").collect())),
+    "corpus": (_corpus_with_delta, _read_corpus),
+}
+
+
+@pytest.mark.parametrize("family", sorted(DELTA_CASES))
+def test_unmarked_delta_is_invisible(spark, tmp_path, family):
+    """A delta dir without its ``_applied_`` marker (a batch that died
+    before committing) is invisible to the family's reader."""
+    build, read = DELTA_CASES[family]
+    path = str(tmp_path / "store")
+    committed = build(spark, path)
+    want = read(spark, path)
+    crash_mid_delta(path, "x", like=committed)
+    assert read(spark, path) == want

@@ -144,15 +144,34 @@ class TestDedupScreenStream:
         assert sorted(r["doc_id"] for r in docs2.collect()) == ids1
         assert index2.count() == len(ids1) * 8
 
-    def test_reserved_batch_column_raises(self, spark, tmp_path):
-        from etlutil_spark.streaming.dedup_screen import dedup_screen_batch
+    def test_batch_column_is_stored_as_is(self, spark, tmp_path):
+        """The corpus layout reserves no column name: ``batch`` and
+        ``delta`` columns are stored and read back as they came."""
+        corpus = str(tmp_path / "corpus")
+        fb = dedup_screen_batch(corpus)
+        schema = "doc_id bigint, text string, batch int, delta string"
+        fb(spark.createDataFrame([(1, FAM["A"], 7, "a"), (2, FAM["B"], 8, "b")], schema), 0)
+        fb(spark.createDataFrame([(3, FAM["C"], 9, "c")], schema), 1)
+        docs, _ = read_corpus(spark, corpus)
+        assert docs.columns == ["doc_id", "text", "batch", "delta"]
+        got = sorted(tuple(r) for r in docs.select("doc_id", "batch", "delta").collect())
+        assert got == [(1, 7, "a"), (2, 8, "b"), (3, 9, "c")]
 
-        fb = dedup_screen_batch(str(tmp_path / "corpus"))
-        df = spark.createDataFrame(
-            [(1, "x", 0)], "doc_id bigint, text string, batch int"
+    def test_old_layout_raises(self, spark, tmp_path):
+        """A corpus in the earlier per-batch layout (``docs/batch=<id>``,
+        ``index/batch=<id>``) is not read: the next batch raises and names
+        the stray entries, instead of starting the corpus over."""
+        import os
+
+        corpus = str(tmp_path / "corpus")
+        b0 = _batch_df(spark, BATCHES[0])
+        b0.write.parquet(os.path.join(corpus, "docs", "batch=0"))
+        minhash_band_index(b0, "doc_id", "text").write.partitionBy("band_idx").parquet(
+            os.path.join(corpus, "index", "batch=0")
         )
-        with pytest.raises(ValueError, match="reserved"):
-            fb(df, 0)
+        with pytest.raises(ValueError, match="outside the versioned") as err:
+            dedup_screen_batch(corpus)(_batch_df(spark, BATCHES[1]), 1)
+        assert "'docs'" in str(err.value) and "'index'" in str(err.value)
 
     def test_empty_batch_is_noop(self, spark, tmp_path):
         corpus = str(tmp_path / "corpus")
@@ -219,26 +238,28 @@ class TestDedupScreenStream:
         got = {r["doc_id"] for r in docs.select("doc_id").collect()}
         assert got == EXPECTED_ACCEPTED
 
-    def test_crash_between_writes_recovers_on_replay(self, spark, tmp_path):
-        """Crash-recovery invariant: the index is written BEFORE the
-        docs, so the only possible partial state is index-without-docs —
-        which read_corpus treats as 'no corpus yet' and the batch's own
-        replay overwrites. (Docs-without-index would instead fail every
-        replay's corpus read on the missing index path.)"""
+    def test_crash_mid_delta_recovers_on_replay(self, spark, tmp_path):
+        """A batch is committed by its ``_applied_`` marker, created after
+        its docs and band rows: a crash before the marker leaves a delta
+        that read_corpus does not see, and the batch's replay screens it
+        again and commits it."""
         import os
+
+        from etlutil_spark.operators.store import store_dir
 
         corpus = str(tmp_path / "corpus")
         b0 = _batch_df(spark, BATCHES[0])
-        # simulate the crash: only the index write of batch 0 landed
-        minhash_band_index(b0, "doc_id", "text").write.partitionBy(
-            "band_idx"
-        ).parquet(os.path.join(corpus, "index", "batch=0"))
+        fb = dedup_screen_batch(corpus)
+        fb(b0, 0)
+        # simulate the crash: the delta of batch 0 landed, its marker did not
+        os.remove(os.path.join(store_dir(spark, corpus, "corpus"), "_applied_0"))
         docs, index = read_corpus(spark, corpus)
         assert docs is None and index is None
         # the replay of batch 0 completes normally
-        dedup_screen_batch(corpus)(b0, 0)
-        docs, _ = read_corpus(spark, corpus)
+        fb(b0, 0)
+        docs, index = read_corpus(spark, corpus)
         assert {r["doc_id"] for r in docs.collect()} == {1, 3}
+        assert index.count() == 2 * 8
 
 
 class TestNearDupScreen:
@@ -295,7 +316,7 @@ class TestNearDupScreen:
     def test_warm_batch_job_budget(self, spark, tmp_path):
         """Each batch is sketched once and no step runs an unmaterialized
         plan eagerly at build time: a second batch screened against a
-        stored corpus runs at most 20 Spark jobs (19 on local[4]; the
+        stored corpus runs at most 20 Spark jobs (19-20 on local[4]; the
         three-sketch sink ran 41)."""
         corpus = str(tmp_path / "corpus")
         fb = dedup_screen_batch(corpus)
