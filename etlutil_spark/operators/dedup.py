@@ -310,21 +310,29 @@ def bands_from_signatures(
     band_hash) rows — the banding half of :func:`minhash_band_index`,
     split out so a PERSISTED signature table (the MinHash family store)
     can be banded without re-sketching the corpus."""
-    if num_hashes % bands:
-        raise ValueError("bands must divide num_hashes")
-    rows = num_hashes // bands
     band_structs = F.expr(
         "array(" + ", ".join(
-            "named_struct('band_idx', {i}, 'band_hash', xxhash64({cols}))".format(
-                i=i,
-                cols=", ".join(f"signature[{i * rows + j}]" for j in range(rows)),
-            )
-            for i in range(bands)
+            f"named_struct('band_idx', {i}, 'band_hash', {h})"
+            for i, h in enumerate(_band_hash_sql(num_hashes, bands))
         ) + ")"
     )
     return sig.select(id_col, F.explode(band_structs).alias("band")).select(
         id_col, "band.band_idx", "band.band_hash"
     )
+
+
+def band_hashes(*, num_hashes: int = 32, bands: int = 8) -> Column:
+    """A ``signature`` column's band hashes, one array<bigint> indexed by
+    band_idx: the per-doc form of :func:`bands_from_signatures`."""
+    return F.expr(f"array({', '.join(_band_hash_sql(num_hashes, bands))})")
+
+
+def _band_hash_sql(num_hashes: int, bands: int) -> list[str]:
+    """Each band's hash: xxhash64 over its consecutive signature entries."""
+    if num_hashes % bands:
+        raise ValueError("bands must divide num_hashes")
+    rows = num_hashes // bands
+    return [f"xxhash64({', '.join(f'signature[{i * rows + j}]' for j in range(rows))})" for i in range(bands)]
 
 
 def minhash_band_index(
@@ -424,21 +432,23 @@ def jaccard_verify(
     id_col: str,
     a: str = "id_a",
     b: str = "id_b",
+    keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """Exact Jaccard (rounded to 6 places) of each candidate pair (a, b),
     from the two sides' (id, s) shingle sets — the one verify step of the
     MinHash family: per-pair array_intersect, so only |cands| pairs pay
-    for it, never every overlapping pair of the corpus. NO threshold
-    filter; callers filter ``jaccard >= t``."""
+    for it, never every overlapping pair of the corpus. ``keys``: more
+    columns of ``cands`` and ``sets_b`` that key a b-side set with ``b``.
+    NO threshold filter; callers filter ``jaccard >= t``."""
     sa = sets_a.select(F.col(id_col).alias(a), F.col("s").alias(f"s_{a}"))
-    sb = sets_b.select(F.col(id_col).alias(b), F.col("s").alias(f"s_{b}"))
+    sb = sets_b.select(F.col(id_col).alias(b), *keys, F.col("s").alias(f"s_{b}"))
     inter = F.size(F.array_intersect(F.col(f"s_{a}"), F.col(f"s_{b}")))
     jac = F.round(inter / (F.size(f"s_{a}") + F.size(f"s_{b}") - inter), 6)
     return (
         cands.join(sa, a)
-        .join(sb, b)
+        .join(sb, [b, *keys])
         .withColumn("jaccard", jac)
-        .select(a, b, "jaccard")
+        .select(a, b, *keys, "jaccard")
     )
 
 

@@ -39,9 +39,9 @@ The SCD2 dimension and the trending sketch are replaced whole each
 micro-batch: :func:`replace_state` commits every batch as a new version
 whose sidecar records the batch id, so at most two versions are ever on
 disk. The dedup-screen corpus is an append log: its first batch commits
-an empty version and every batch then lands as one delta of it, each
-with its accepted docs under ``docs/`` and their band rows under
-``index/``; the highest marker is the last committed batch. A sink
+an empty version and every batch then lands as one delta of it, holding
+one table, ``docs/``: the accepted docs with their band hashes. The
+highest marker is the last committed batch. A sink
 family has one writer, so a commit also deletes the ``<path>__build_*``
 scratch a dead builder left beside the path. Sink state is not
 rebuildable: a damaged sidecar, or a path holding files of another
@@ -66,6 +66,7 @@ class Family:
     tables: tuple[str, ...] = ()  # sub-dirs whose schema is recorded ("" = the version dir)
     rebase: bool = False  # a data-only rebuild carries the applied batches over
     deltas: bool = False  # batches land as delta=<batch_id> dirs (apply_delta)
+    retired: tuple[str, ...] = ()  # delta tables of an earlier layout; finding one raises
 
 
 FAMILIES = {
@@ -83,7 +84,7 @@ FAMILIES = {
     "scd2": Family(None, "_scd2_meta.json", ("",)),
     "trending": Family(None, "_trending_meta.json", ("cms", "topk")),
     # no recorded schema: the sink reads with its batch's schema
-    "corpus": Family(None, "_corpus_meta.json", deltas=True),
+    "corpus": Family(None, "_corpus_meta.json", deltas=True, retired=("index",)),
 }
 
 _VERSION = re.compile(r"v_(\d+)_[0-9a-f]+")
@@ -252,8 +253,10 @@ def open_store(spark, path: str, family: str, *, required: bool = False) -> Open
 def _opened(spark, d: str, family: str, meta: dict | None) -> OpenStore:
     """Version ``d`` with its sidecar ``meta``. A delta family lists ``d``
     once, for its applied batches and for the delta dirs a reader may see:
-    ``delta=base`` and every ``delta=<batch_id>`` whose marker exists."""
-    if meta is None or not FAMILIES[family].deltas:
+    ``delta=base`` and every ``delta=<batch_id>`` whose marker exists. A
+    retired table in one of them (a store has one layout) raises."""
+    fam = FAMILIES[family]
+    if meta is None or not fam.deltas:
         return OpenStore(d, meta)
     names = _names(spark, d)
     applied = frozenset(n[len(_MARKER):] for n in names if n.startswith(_MARKER))
@@ -263,6 +266,9 @@ def _opened(spark, d: str, family: str, meta: dict | None) -> OpenStore:
             if n.startswith("delta=") and (n == "delta=base" or n[len("delta="):] in applied)
         )
     )
+    old = [t for t in fam.retired if deltas and t in _names(spark, f"{d}/{deltas[0]}")]
+    if old:
+        raise ValueError(f"{family} store {d} holds {deltas[0]}/{old[0]}/ of an earlier layout; move it aside")
     return OpenStore(d, meta, applied, deltas)
 
 

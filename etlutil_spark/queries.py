@@ -4156,7 +4156,8 @@ def pricing_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _roll(keys: list[str], gone: list[str], gid: int) -> DataFrame:
         gb = detail.groupBy(*keys) if keys else detail.groupBy()
         out = gb.agg(
-            F.sum("n").cast("bigint").alias("n"),
+            # CUBE's grand total over empty input is a row with COUNT(*) 0
+            F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n"),
             F.sum("_sq").alias("_sq"),
         )
         for c in gone:

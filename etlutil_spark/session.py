@@ -18,9 +18,11 @@ from pyspark.sql import SparkSession
 #    dynamic broadcast conversion).
 #  - nested schema pruning keeps struct-heavy scans from reading unused
 #    subfields (critical for the flatten/prune operator family).
-#  - UTC session timezone pins epoch<->string conversions.
+#  - UTC session timezone pins epoch<->string conversions, and nanosAsLong
+#    reads the events' TIMESTAMP(NANOS) encoding (as long; truncated to micros).
 _BASE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -31,6 +33,18 @@ _BASE_CONF: dict[str, str] = {
     # local harness writes nothing durable; keep event logs off
     "spark.ui.enabled": "false",
 }
+
+
+# the confs the table loaders read under; they check them, never set them
+READ_CONF = {k: _BASE_CONF[k] for k in ("spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong")}
+
+
+def check_read_conf(spark: SparkSession) -> None:
+    """Raise, naming the conf, when ``spark`` holds another value of a
+    read conf than :func:`get_spark` sets."""
+    for key, want in READ_CONF.items():
+        if (got := spark.conf.get(key, None)) != want:
+            raise ValueError(f"{key} is {got!r}, not {want!r}: build the session with get_spark")
 
 
 def default_parallelism() -> int:

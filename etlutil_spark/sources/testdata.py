@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etlutil_spark.session import check_read_conf
+
 TABLES = (
     "region",
     "nation",
@@ -78,9 +80,9 @@ def _read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # pin TZ so epoch<->string formatting is reproducible no matter what
-    # session the caller hands us (the reference's TZ pitfall, SURVEY §7.4)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # epoch<->string formatting is reproducible only under the engine's
+    # session TZ (the reference's TZ pitfall, SURVEY §7.4)
+    check_read_conf(spark)
     path = f"{sf_dir or DEFAULT_SF_DIR}/{name}.parquet"
     if name == "events":
         return _normalize_timestamps(_read_events(spark, path))
@@ -94,7 +96,7 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
     ``TIMESTAMP_NTZ`` by Spark 4.x, which (a) rejects ``cast("long")``
     (AnalysisException) and (b) shifts window/epoch semantics relative to
     the LTZ+UTC behavior every operator and oracle was verified against.
-    Since the session TZ is pinned to UTC one line above the read, an
+    Since load_table checks that the session TZ is UTC before the read, an
     NTZ→LTZ cast preserves every wall-clock value exactly; doing it once
     here means no downstream operator ever sees a mixed timestamp zoo."""
     from pyspark.sql import functions as F
@@ -116,7 +118,6 @@ def _read_events(spark: SparkSession, path: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _read_parquet_cached_schema(spark, path)
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # integer DIV, not `/`: long/int promotes to double, whose 53-bit

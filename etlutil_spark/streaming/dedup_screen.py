@@ -1,86 +1,68 @@
 """Streaming incremental near-dup screening: foreachBatch MinHash-LSH
-dedup of a document stream against a PERSISTED band index.
+dedup of a document stream against a PERSISTED corpus of band hashes.
 
 The streaming complement of ``operators/dedup.py:screen_against_corpus``
-— the production shape of continuous corpus curation: documents arrive
-in micro-batches, each batch is (1) deduped within itself (keep-first by
-id), (2) screened against everything accepted so far, and (3) the
-survivors are appended to the corpus together with their band-index
-rows, so the NEXT batch's screen pays O(batch x index-probe), never
-O(corpus) re-sketching.
+— the production shape of continuous corpus curation: each micro-batch
+is (1) deduped within itself (keep-first by id), (2) screened against
+everything accepted so far, and (3) its survivors are appended with
+their band hashes, so the NEXT batch pays O(batch x band probe), never
+O(corpus) re-sketching. foreachBatch, not a stateful operator: the state
+is a TABLE that must also serve ad-hoc batch screens, and it grows
+without bound, which state-store state must not. Every step is a kernel
+of the batch operators, so the stream inherits their tests and their
+candidate-only verification.
 
-Why foreachBatch and not a stateful operator: the dedup state is the
-band index — a TABLE keyed by (band_idx, band_hash) that must also
-serve ad-hoc batch screens, not per-key running state
-in a state store (and it is unbounded over an infinite stream, which
-state stores must not be). foreachBatch hands each micro-batch to the
-band-level helpers of the batch operators (``band_pairs``,
-``probe_band_index``, ``candidate_sets``, ``jaccard_verify``), so the
-stream inherits their tests, their candidate-only verification
-discipline, and their 100 TB posture.
+Each non-empty batch runs three steps:
 
-One sketch per batch. The batch is pinned once (``pin_eager``, the
-point where the sink severs from the streaming source); its shingle
-sets and its (id, band_idx, band_hash) rows are then pinned once and
-every step reads them:
+- sketch once: the deduped docs with their shingle sets, pinned eagerly
+  (where the sink severs from the streaming source), then each doc's
+  band hashes (``signatures_from_shingles``, ``band_hashes``), pinned;
+- one band join, one verify: the batch's band rows, broadcast, probe
+  the batch's own band rows (a candidate only against a lower id:
+  keep-first) and the stored ones (map-side, no corpus shuffle); one
+  ``jaccard_verify`` checks both kinds, re-shingling only the matched
+  stored docs. The exact-id screen rejects an id accepted earlier,
+  whatever its text;
+- one write: the accepted docs with their band hashes.
 
-- intra-batch candidates: the batch bands joined with themselves
-  (broadcast — band rows are three longs per band per doc), verified by
-  exact Jaccard over the pinned sets;
-- the corpus probe: the same bands broadcast against the stored index
-  scan (map-side, no corpus shuffle); only the matched corpus docs are
-  re-shingled for verification;
-- the exact-id screen: corpus ids semi-joined with the broadcast batch
-  ids;
-- the index append: the pinned bands semi-joined onto the accepted ids,
-  so stored band rows are exactly what ``minhash_band_index`` computes
-  over the accepted docs, with no re-sketch.
-
-The corpus tables are read with explicit schemas (the batch schema for
-the docs, a fixed one for the index), so no read runs a schema-inference
-job, and no step probes an unmaterialized plan's partition count. A
-warm 24-document batch with no near-dups, against a stored corpus, runs
-16-17 Spark jobs on local[4] where the three-sketch version ran 30-34:
-the emptiness probe, the batch pin (2), the signature shuffle, the
-corpus probe (2), the accept plan and its pin (8), and the two writes
-(3). Verified near-dups add up to 3 more;
-``tests/test_streaming_dedup_screen.py`` bounds a warm batch at 20.
+A warm batch against a stored corpus runs 13 Spark jobs on local[4]:
+the emptiness probe, the sketch pin (2) and the write (10), where the
+two-path sink (a self-join and a corpus probe, two verifies, two
+writes) ran 17-20. ``tests/test_streaming_dedup_screen.py`` caps it at 15.
 
 Semantics note (inherent to ANY incremental screen, not a defect):
 greedy sequential keep-first can accept a doc whose nearest neighbor
-was itself dropped in an earlier batch — global one-shot keep-first
-over the union may drop it. The invariant that DOES hold, and that
-``tests/test_streaming_dedup_screen.py`` pins: the accepted corpus
-never contains a verified near-dup PAIR at the configured threshold.
+was itself dropped in an earlier batch. The invariant that holds, and
+that the tests pin: the corpus never holds a verified near-dup PAIR.
 
 The corpus is the ``corpus`` family of the store contract
-(``operators/store.py``). Its first batch commits an empty version of
-``corpus_path``, and every non-empty batch then lands as one delta of
-it through ``apply_delta``::
+(``operators/store.py``): the first batch commits an empty version of
+``corpus_path``, and every non-empty batch lands as one delta of it
+through ``apply_delta``, holding one table::
 
-    <corpus_path>/v_*/delta=<batch_id>/docs/    the accepted docs
-    <corpus_path>/v_*/delta=<batch_id>/index/   their band rows
-    <corpus_path>/v_*/_applied_<batch_id>       the commit point, written last
+    <corpus_path>/v_*/delta=<batch_id>/docs/   (doc, bands): the batch row
+                                               as a struct, its band hashes
+    <corpus_path>/v_*/_applied_<batch_id>      the commit point, written last
 
-A reader sees a batch only once its marker exists, so a batch that
-crashed mid-write is invisible, and its replay rewrites it. A replay of
-the last committed batch is a no-op (the batch is not screened again);
-a lower batch id raises, since it belongs to another checkpoint, and so
-does a path holding files of another layout.
+Nesting the row reserves no batch column name. The band index is the
+``posexplode`` of ``bands``, a view that ``read_corpus`` and the probe
+share. A batch is visible once its marker exists, so a crashed batch is
+invisible until its replay rewrites it. A replay of the last committed
+batch is a no-op; a lower batch id raises (another checkpoint's), and so
+does a path of another layout, or a delta that still holds the band
+rows in a second ``index/`` table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from etlutil_spark.operators.dedup import (
-    band_pairs,
-    bands_from_signatures,
+    band_hashes,
     candidate_sets,
     jaccard_verify,
-    probe_band_index,
     shingle_sets,
     signatures_from_shingles,
 )
@@ -88,42 +70,13 @@ from etlutil_spark.operators.store import OpenStore, apply_delta, open_store, re
 from etlutil_spark.operators.util import pin, pin_eager
 from etlutil_spark.streaming import drain
 
-
-def _nullable(fields: list[StructField]) -> StructType:
-    """``fields`` as parquet stores them: all nullable."""
-    return StructType([StructField(f.name, f.dataType, True) for f in fields])
+_DOC, _BANDS = "doc", "bands"  # the stored columns
 
 
-def _corpus(
-    spark: SparkSession,
-    store: OpenStore,
-    docs_schema: StructType | None = None,
-    id_col: str = "doc_id",
-) -> tuple[DataFrame | None, DataFrame | None]:
-    """(accepted docs, band index) of an opened corpus's committed
-    batches, or (None, None) before the first commit.
-
-    ``docs_schema`` (the stream's batch schema) skips parquet schema
-    inference, a Spark job per table per read: the docs then read with
-    it and the index with the fixed (``id_col``, band_idx int, band_hash
-    bigint) schema, the id typed as in ``docs_schema``. Without it both
-    schemas are inferred from the files."""
-    if not store.deltas:
-        return None, None
-    index_schema = None
-    if docs_schema is not None:
-        index_schema = _nullable(
-            [
-                docs_schema[id_col],
-                StructField("band_idx", IntegerType()),
-                StructField("band_hash", LongType()),
-            ]
-        )
-        docs_schema = _nullable(docs_schema.fields)
-    return (
-        read_table(spark, store, "docs", docs_schema),
-        read_table(spark, store, "index", index_schema),
-    )
+def _band_rows(table: DataFrame, doc_id: Column) -> DataFrame:
+    """(doc_id, band_idx int, band_hash bigint) rows of a frame with a
+    ``bands`` column. A doc too short to shingle has none."""
+    return table.select(doc_id, F.posexplode(_BANDS).alias("band_idx", "band_hash"))
 
 
 def read_corpus(
@@ -131,8 +84,13 @@ def read_corpus(
 ) -> tuple[DataFrame | None, DataFrame | None]:
     """(accepted docs, band index) of every committed batch at
     ``corpus_path``, or (None, None) before the first; the docs have the
-    batch schema."""
-    return _corpus(spark, open_store(spark, corpus_path, "corpus"))
+    batch schema, the band index is (id, band_idx int, band_hash bigint)."""
+    store = open_store(spark, corpus_path, "corpus")
+    if not store.deltas:
+        return None, None
+    table = read_table(spark, store, "docs")  # inferred: a Spark job
+    id_col = table.schema[_BANDS].metadata["id"]  # recorded by the sink
+    return table.select(f"{_DOC}.*"), _band_rows(table, F.col(_DOC)[id_col].alias(id_col))
 
 
 def dedup_screen_batch(
@@ -146,13 +104,11 @@ def dedup_screen_batch(
     verify_threshold: float = 0.7,
 ):
     """Build the foreachBatch function maintaining the screened corpus
-    at ``corpus_path``.
-
-    Each call: drop exact-id repeats -> sketch the batch once -> drop
-    intra-batch near-dups (keep-first by id), ids already in the corpus
-    and near-dups of the stored index (candidate-only verify) -> append
-    accepted docs + their band rows as this batch's delta of the corpus.
-    Empty batches and replays of the last committed batch are a no-op."""
+    at ``corpus_path``: drop exact-id repeats -> sketch the batch once ->
+    drop intra-batch near-dups (keep-first by id), ids already stored and
+    near-dups of stored docs -> append the accepted docs with their band
+    hashes as this batch's delta. Empty batches and replays of the last
+    committed batch are a no-op."""
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
 
@@ -167,69 +123,78 @@ def dedup_screen_batch(
 
     def screen(batch: DataFrame, store: OpenStore, delta_dir: str) -> None:
         spark = batch.sparkSession
-        # sever from the streaming source: every operator below is a
-        # plain batch transform over a materialized micro-batch
-        docs = batch.dropDuplicates([id_col]).transform(pin_eager)
-
-        # the batch's ONE sketch: shingle sets and band rows, pinned and
-        # shared by every step below. No ensure_min_partitions spread:
-        # docs is already partitioned by the dedup shuffle, and probing
-        # the partition count of a plan that is not a leaf would run its
-        # stages eagerly
-        sets = shingle_sets(docs, id_col, text_col, n).transform(pin)
-        shingles = sets.select(id_col, F.explode("s").alias("shingle"))
-        batch_bands = bands_from_signatures(
-            signatures_from_shingles(shingles, id_col, num_hashes=num_hashes),
-            id_col, num_hashes=num_hashes, bands=bands,
-        ).transform(pin)
-
-        # (1) intra-batch near-dups: keep-first by id. The band rows are
-        # three longs per band per doc, so the self-join broadcasts them
-        # (as the corpus probe below does) instead of shuffling both sides
-        intra = jaccard_verify(
-            band_pairs(F.broadcast(batch_bands), id_col), sets, sets, id_col
+        # (1) sketch once. The batch columns sit inside ``doc``, so every
+        # other name here is the sink's own. No ensure_min_partitions:
+        # probing a non-leaf plan's partition count runs its stages
+        docs = batch.dropDuplicates([id_col])
+        sketch = (
+            shingle_sets(
+                docs.select(F.struct(*docs.columns).alias(_DOC), F.col(text_col).alias("text")),
+                _DOC, "text", n,
+            )
+            .withColumn("id", F.col(_DOC)[id_col])
+            .transform(pin_eager)
         )
-        rejected = intra.where(F.col("jaccard") >= verify_threshold).select(
-            F.col("id_b").alias(id_col)
+        sets = sketch.select("id", "s")
+        hashes = (  # pinned: the band join reads them twice, the write once
+            signatures_from_shingles(
+                sets.select("id", F.explode("s").alias("shingle")), "id", num_hashes=num_hashes
+            )
+            .select("id", band_hashes(num_hashes=num_hashes, bands=bands).alias(_BANDS))
+            .transform(pin)
         )
 
-        # (2) cross-corpus screen against the committed band index. Every
-        # batch doc is probed, not only the intra-batch survivors: a
-        # rejected doc's hits change nothing, and the probe then does
-        # not wait for step (1).
-        corpus_docs, corpus_index = _corpus(spark, store, batch.schema, id_col)
-        if corpus_docs is not None:
-            # exact-id screen: dropDuplicates above is intra-batch only,
-            # so a doc_id accepted in a PRIOR batch must be rejected here
-            # even when its text changed (near-dup screen alone would
-            # re-accept it and corrupt id uniqueness)
-            repeated = corpus_docs.select(id_col).join(
-                F.broadcast(docs.select(id_col)), id_col, "left_semi"
-            )
-            # pinned: both verify sides read the candidates
-            cands = probe_band_index(batch_bands, corpus_index, id_col).transform(pin)
-            corpus_sets = candidate_sets(
-                corpus_docs, cands.select(F.col("corpus_id").alias(id_col)),
-                id_col, text_col, n, spread=False,
-            )
-            hits = jaccard_verify(
-                cands, sets, corpus_sets, id_col, "new_id", "corpus_id"
-            ).where(F.col("jaccard") >= verify_threshold)
-            rejected = rejected.union(repeated).union(
-                hits.select(F.col("new_id").alias(id_col))
-            )
-        # rejected ids may repeat; the anti-join needs no distinct (and
-        # so no shuffle) first
-        accepted = docs.join(
-            F.broadcast(rejected), id_col, "left_anti"
-        ).transform(pin_eager)
+        # (2) one band join, one verify. A batch doc whose id is already
+        # stored still rejects a later near-dup of its batch before the
+        # exact-id screen drops it, so one id can stand on both sides:
+        # candidates and b-side sets carry ``in_corpus``. Before the first
+        # commit the corpus is empty: limit(0) makes it an empty local
+        # relation the optimizer folds away, not an RDD scan that runs
+        schema = StructType([
+            StructField(_DOC, StructType([StructField(f.name, f.dataType) for f in batch.schema])),
+            StructField(_BANDS, ArrayType(LongType())),
+        ])
+        corpus = (
+            read_table(spark, store, "docs", schema) if store.deltas
+            else spark.createDataFrame([], schema).limit(0)
+        ).select(F.col(_DOC)[id_col].alias("id"), F.col(_DOC)[text_col].alias("text"), _BANDS)
 
-        # (3) this batch's delta: the accepted docs and their pinned band
-        # rows, each in overwrite mode, so a retry replaces a partial write
-        batch_bands.join(
-            F.broadcast(accepted.select(id_col)), id_col, "left_semi"
-        ).write.mode("overwrite").parquet(f"{delta_dir}/index")
-        accepted.write.mode("overwrite").parquet(f"{delta_dir}/docs")
+        def tag(rows: DataFrame, in_corpus: bool) -> DataFrame:
+            return rows.withColumn("in_corpus", F.lit(in_corpus))
+
+        new_bands = _band_rows(hashes, F.col("id"))
+        cands = (  # pinned: the verify and the stored-set filter read it
+            tag(new_bands, False).union(tag(_band_rows(corpus, F.col("id")), True))
+            .withColumnRenamed("id", "other_id")
+            .join(F.broadcast(new_bands.withColumnRenamed("id", "new_id")), ["band_idx", "band_hash"])
+            .where(F.col("in_corpus") | (F.col("other_id") < F.col("new_id")))
+            .select("new_id", "other_id", "in_corpus")
+            .distinct()
+            .transform(pin)
+        )
+        others = tag(sets, False).union(tag(candidate_sets(
+            corpus, cands.where("in_corpus").select(F.col("other_id").alias("id")),
+            "id", "text", n, spread=False,
+        ), True))
+        hits = jaccard_verify(
+            cands, F.broadcast(sets), F.broadcast(others), "id", "new_id", "other_id",
+            keys=("in_corpus",),
+        ).where(F.col("jaccard") >= verify_threshold)
+        # the exact-id screen: dropDuplicates is intra-batch only, and the
+        # near-dup screen alone would re-accept a stored id with new text
+        rejected = hits.select(F.col("new_id").alias("id")).union(
+            corpus.select("id").join(F.broadcast(sets.select("id")), "id", "left_semi")
+        )
+
+        # (3) one write, in overwrite mode: a retry replaces a partial one.
+        # The id column's name rides in the metadata of ``bands``
+        (
+            sketch.join(F.broadcast(rejected), "id", "left_anti")
+            .join(F.broadcast(hashes), "id", "left")
+            .select(_DOC, F.col(_BANDS).alias(_BANDS, metadata={"id": id_col}))
+            .write.mode("overwrite")
+            .parquet(f"{delta_dir}/docs")
+        )
 
     return apply_batch
 

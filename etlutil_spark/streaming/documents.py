@@ -12,8 +12,8 @@ backfill and the live stream share one code path.
 Stateful corpus work splits by where the state lives: exact-hash
 ``dropDuplicates`` (streaming/events.py) keeps bounded state in the
 state store; cross-document NEAR-dup screening runs through
-streaming/dedup_screen.py, whose state is the persisted MinHash band
-index on disk (a table, not state-store state — unbounded over an
+streaming/dedup_screen.py, whose state is the persisted corpus with its
+MinHash band hashes on disk (a table, not state-store state — unbounded over an
 infinite stream by design); global clustering stays a periodic batch
 job over the accumulated corpus.
 """

@@ -22,6 +22,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from etlutil_spark.session import check_read_conf
 from etlutil_spark.streaming import drain
 
 # The events parquet has shipped with two physical ts encodings across
@@ -89,8 +90,7 @@ def stream_events_from_dir(
     An empty / not-yet-populated directory (the normal case when a stream
     is deployed before its producer) falls back to the declared
     ``EVENTS_SCHEMA`` contract; pass ``schema=`` to pin one explicitly."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    check_read_conf(spark)
     if schema is not None:
         physical = schema
     else:

@@ -131,6 +131,48 @@ class TestNTZCanary:
         assert starts == ["01-10", "01-13", "01-23", "02-00", "02-09"]
 
 
+class TestReadConf:
+    """The loaders read under the engine's read confs and check them: a
+    session holding another value raises, naming the conf, and is left as
+    it was instead of being flipped for every later query."""
+
+    @pytest.mark.parametrize(
+        "key, value",
+        [
+            ("spark.sql.session.timeZone", "America/New_York"),
+            ("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        ],
+    )
+    def test_other_value_raises_and_is_kept(self, spark, sf_dir, key, value):
+        from etlutil_spark.sources.testdata import load_table
+        from etlutil_spark.streaming.events import stream_events_from_dir
+
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            for name in ("orders", "events"):
+                with pytest.raises(ValueError, match=key):
+                    load_table(spark, name, sf_dir)
+            with pytest.raises(ValueError, match=key):
+                stream_events_from_dir(spark, f"{sf_dir}/events.parquet")
+            assert spark.conf.get(key) == value
+        finally:
+            spark.conf.set(key, old)
+
+    def test_entry_adopts_a_plain_session(self, spark, sf_dir):
+        """The entry contract's callers may hand a session the engine did
+        not build: its queries set the read confs before loading."""
+        import __spark_entry__ as entry_mod
+
+        key = "spark.sql.session.timeZone"
+        spark.conf.set(key, "Etc/UTC")
+        try:
+            assert entry_mod.queries()["pricing_cube"](spark, sf_dir).count() > 0
+            assert spark.conf.get(key) == "UTC"
+        finally:
+            spark.conf.set(key, "UTC")
+
+
 class TestOracleGuards:
     def test_no_hugeint_oracle_columns(self):
         """Bind (don't run) every oracle in DuckDB and reject HUGEINT/int128

@@ -387,7 +387,7 @@ SINK_CASES = {
     "scd2": Sink(_scd2_sink, _scd2_batch, _read_scd2, crash_mid_build, 12),
     "trending": Sink(_trending_sink, _trending_batch, _read_trending, crash_mid_build, 12),
     "corpus": Sink(
-        _corpus_sink, _corpus_batch, _read_corpus, lambda p: crash_mid_delta(p, 2, like=0), 20
+        _corpus_sink, _corpus_batch, _read_corpus, lambda p: crash_mid_delta(p, 2, like=0), 15
     ),
 }
 # the sinks whose every batch commits a new version (replace_state)
@@ -472,7 +472,7 @@ def test_sink_refuses_state_it_cannot_read(spark, tmp_path, family):
 def test_sink_warm_batch_job_budget(spark, tmp_path, family):
     """A warm batch against a 200-key state runs at most the family's
     budget of Spark jobs (local[4]: 11 for the SCD2 upsert, 9 for
-    trending, 17 for the dedup screen), a replay 1."""
+    trending, 13 for the dedup screen), a replay 1."""
     make, batch, read, _, warm_jobs = SINK_CASES[family]
     sink = make(str(tmp_path / "state"))
     sink(batch(spark, 0, keys=200), 0)
